@@ -1,9 +1,9 @@
-"""Executable mapper/reducer jobs via ``RDD.pipe`` — the Spark-native
-realization of the reference's Hadoop-streaming contract (reference:
-mapreduce/worker/__main__.py:137-183 pipes input files through a
-mapper executable, sorts lines, and pipes merged groups through a
-reducer executable; mapreduce/manager/__main__.py:436-461 assigns
-keys to reducers round-robin in globally-sorted distinct-key order).
+"""Executable mapper/reducer jobs as one Spark SQL plan — the reference's
+Hadoop-streaming contract (reference: mapreduce/worker/__main__.py:137-183
+pipes input files through a mapper executable, sorts lines, and pipes
+merged groups through a reducer executable; mapreduce/manager/
+__main__.py:436-461 assigns keys to reducers round-robin in
+globally-sorted distinct-key order).
 
 Semantics preserved:
 
@@ -14,52 +14,79 @@ Semantics preserved:
 - a key's lines all reach one reducer; keys are spread round-robin
   over reducers in sorted-key order (num_reducers output groups).
 
-Mapper invocation granularity: by default Spark pipes once per SPLIT
-(identical output for any stream-stateless mapper — the streaming
-contract both wc_map.sh and grep_map.py satisfy, and the faster
-path: splits parallelize inside big files). ``per_file=True`` selects
-the reference's STRICT granularity — the mapper runs exactly once
-per input file with that file's full content on stdin (reference
-worker/__main__.py:137-183) — so stateful mappers emitting
-per-invocation headers/footers match byte-for-byte.
+The plan runs in the JVM, with Spark SQL's Hadoop-streaming operator
+``SELECT TRANSFORM(...) USING '<cmd>'`` on both sides:
 
-Scale shape: the map pipe is embarrassingly parallel; the rank table
-is distinct-key-sized and built with a shuffle of keys only, then
-applied map-side from a broadcast dict (key sets up to
-BROADCAST_KEY_LIMIT — the usual case) or joined back for huge key
-sets where a driver dict would not fit.
-``repartitionAndSortWithinPartitions`` gives each reducer its sorted
-stream via Spark's external sort — no driver merge like the
-reference's single-process heapq.merge bottleneck.
+1. map: ``spark.read.text`` feeds a mapper ``TRANSFORM``, persisted
+   ``MEMORY_AND_DISK`` so the mapper runs once for both consumers;
+2. rank: the distinct keys (``substring_index(line, '\\t', 1)``) get
+   ``rid = rank % R`` — ranked on the driver and broadcast-joined, or
+   for key sets over BROADCAST_KEY_LIMIT ranked distributed;
+3. shuffle: ``repartitionById(R, rid)`` puts reducer *i* in partition
+   *i* exactly (no hash collisions; AQE leaves it alone) and
+   ``sortWithinPartitions("line")`` orders each reducer's stdin;
+4. reduce: a reducer ``TRANSFORM`` tagged with ``spark_partition_id()``
+   as ``part``, checkpointed eagerly.
+
+By default the mapper runs once per input SPLIT (identical output for
+any stream-stateless mapper, and splits parallelize inside big files).
+``per_file=True`` selects the reference's STRICT granularity — one
+mapper process per input file over its full content (``wholeTextFiles``
++ ``_pipe_record``) — so stateful mappers emitting per-invocation
+headers/footers match byte-for-byte; it feeds the same SQL reduce half.
+A split or reducer group with no lines launches no process
+(``TRANSFORM`` skips empty partitions); its ``outputfileNN`` is empty.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import shlex
 
-# reducer-id assignment strategy switch: key sets up to this size
-# broadcast as a driver dict (vocabulary-sized); larger ones use the
-# RDD join (module-level so tests can force the fallback).
+import pyarrow as pa
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from distributed_mapreduce_server_spark.session import scoped_conf
+
+# reducer-id assignment strategy switch: key sets up to this size are
+# ranked on the driver and broadcast (vocabulary-sized); larger ones
+# are ranked distributed (module-level so tests can force the fallback).
 BROADCAST_KEY_LIMIT = 1_000_000
+
+# One line <-> one field on both sides of both transforms: a line can
+# never contain '\n', so neither the field split nor the NULL marker
+# ever matches (the defaults cut at '\u0001' and turn '\N' into NULL).
+_LINE_FORMAT = "ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\n' NULL DEFINED AS '\\n'"
+
+
+def _transform(spark: SparkSession, src: DataFrame, col: str, cmd: str) -> DataFrame:
+    """Pipe column ``col`` of ``src`` through ``cmd``: one ``line`` per
+    stdout line. ``TRANSFORM`` runs the command under ``/bin/bash -c``;
+    the ``shlex`` round trip quotes each word so the executable gets the
+    argv of a shell-free ``shlex.split`` (as ``_pipe_record``), and
+    ``spark.sql`` renders a ``str`` argument as an escaped SQL literal."""
+    return spark.sql(
+        f"SELECT TRANSFORM({col}) {_LINE_FORMAT} USING {{cmd}} "
+        f"AS (line string) {_LINE_FORMAT} FROM {{src}}",
+        cmd=shlex.join(shlex.split(cmd)),
+        src=src,
+    )
 
 
 def _pipe_record(cmd: str):
     """One subprocess invocation per (filename, content) record — the
     reference worker's per-file mapper contract. Runs executor-side;
-    raises like RDD.pipe's checkCode on a nonzero exit."""
-    import shlex
+    raises on a nonzero exit."""
     import subprocess
 
     argv = shlex.split(cmd)
 
     def run(record):
         fname, content = record
-        # UTF-8 explicitly (matching the RDD.pipe path), never the
-        # executor's locale — text=True alone means LANG=C containers
-        # crash on non-ASCII input; and split records on '\n' only,
-        # like pipe does (splitlines() also breaks on \x0b, \x0c,
-        # U+2028 etc., which a mapper may legitimately emit inside
-        # a value).
+        # UTF-8 explicitly, never the executor's locale (LANG=C crashes
+        # on non-ASCII); split on '\n' only, like TRANSFORM (splitlines()
+        # also breaks on \x0b, \x0c, U+2028, which may sit in a value).
         proc = subprocess.run(
             argv, input=content, capture_output=True, encoding="utf-8"
         )
@@ -68,12 +95,44 @@ def _pipe_record(cmd: str):
                 f"mapper {cmd!r} exited {proc.returncode} on {fname}: "
                 f"{proc.stderr[-500:]}"
             )
-        out = proc.stdout
-        if out.endswith("\n"):
-            out = out[:-1]
+        out = proc.stdout.removesuffix("\n")
         return out.split("\n") if out else []
 
     return run
+
+
+def _rank_table(
+    spark: SparkSession, keys: DataFrame, num_reducers: int, cached: list[DataFrame]
+) -> DataFrame:
+    """``(key, rid)`` with ``rid`` = the key's rank in sorted order mod R.
+    Small key sets are ranked on the driver (the reference manager's
+    move) and broadcast; fetching ``BROADCAST_KEY_LIMIT + 1`` keys is both
+    the size check and the data. Larger ones: range-sort the keys
+    (persisted and appended to ``cached``, so both jobs see one
+    partitioning), count each partition once for its offset, and
+    rank = offset + position inside the partition."""
+    head = [r.key for r in keys.limit(BROADCAST_KEY_LIMIT + 1).collect()]
+    if len(head) <= BROADCAST_KEY_LIMIT:
+        # Arrow batches go to the JVM as they are; a list of rows would
+        # be unpickled by Python workers
+        rids = [i % num_reducers for i in range(len(head))]
+        table = pa.table(
+            {"key": pa.array(sorted(head), pa.string()), "rid": pa.array(rids, pa.int32())}
+        )
+        return F.broadcast(spark.createDataFrame(table))
+    pid = F.spark_partition_id()
+    ranked = keys.orderBy("key").persist(StorageLevel.MEMORY_AND_DISK)
+    cached.append(ranked)
+    sizes = dict(ranked.groupBy(pid).count().collect())
+    offsets, acc = [], 0
+    for p in range(max(sizes, default=-1) + 1):
+        offsets.append(acc)
+        acc += sizes.get(p, 0)
+    # monotonically_increasing_id = partition id << 33 | row position
+    position = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    offset = F.element_at(F.array(*map(F.lit, offsets)), pid + 1)
+    rid = ((offset + position) % num_reducers).cast("int")
+    return ranked.select("key", rid.alias("rid"))
 
 
 def run_executable_job(
@@ -89,107 +148,41 @@ def run_executable_job(
     ``(part, line)`` — ``part`` is the reducer index (the reference's
     outputfileNN), ``line`` the reducer's raw stdout line.
 
+    ``num_mappers`` is the suggested minimum number of input splits.
     ``per_file=True``: strict reference granularity — the mapper runs
-    once per input FILE over its whole content (wholeTextFiles, so a
-    file is never split; use for stateful mappers; per-split piping
-    is faster for large files and identical for stateless ones)."""
-    sc = spark.sparkContext
-    if isinstance(input_paths, list):
-        input_paths = ",".join(input_paths)
-
-    if per_file:
-        files = sc.wholeTextFiles(input_paths, minPartitions=num_mappers)
-        mapped = files.flatMap(_pipe_record(mapper_cmd))
-    else:
-        lines = sc.textFile(input_paths, minPartitions=num_mappers)
-        mapped = lines.pipe(mapper_cmd, checkCode=True)
-
-    # Persist the mapper output: the broadcast-branch key sample
-    # below executes the mapper pipe through the distinct's map
-    # stage, and the real reducer pass would otherwise run the SAME
-    # pipe a second time over the whole input (the fallback branch's
-    # shuffle reuse covers only itself — by_rid there consumes the
-    # distinct shuffle, the broadcast branch's by_rid does not). The
-    # cache holds one string per mapped line, the same bytes the
-    # shuffle would spill; released after the result materializes.
-    # MEMORY_AND_DISK (ADVICE r13): MEMORY_ONLY never spills — under
-    # memory pressure evicted partitions silently RE-RUN the mapper
-    # pipe (the exact double execution this persist removes, and a
-    # non-deterministic mapper could then emit inconsistent lines
-    # between the key-sample and reducer passes); disk overflow keeps
-    # the pipe single-run.
-    from pyspark import StorageLevel
-
-    keyed = mapped.map(lambda ln: (ln.split("\t", 1)[0], ln)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # Assign reducer ids map-side when the key set is small: a full
-    # RDD join re-shuffles EVERY mapped line against a table that is
-    # usually tiny (wordcount: a vocabulary), and measured 2x slower
-    # than the single-process baseline at 48 MB; with the broadcast
-    # the only line shuffle left is the reducer partitioning itself.
-    # Large key sets (grep emitting near-unique keys) fall back to
-    # the distributed rank join — a driver-side dict of hundreds of
-    # millions of keys is the thing that does NOT scale. take(limit+1)
-    # is both the size check and the data: it early-exits on huge key
-    # sets and equals collect() on small ones — one job, not
-    # count+collect.
-    distinct_keys = keyed.keys().distinct()
-    head = distinct_keys.take(BROADCAST_KEY_LIMIT + 1)
-    if len(head) <= BROADCAST_KEY_LIMIT:
-        # sorted-rank assignment happens ON THE DRIVER for the
-        # bounded key set (exactly the reference manager's move —
-        # it, too, ranks the distinct keys in one process): skips the
-        # sortBy sample job + sort shuffle + zipWithIndex count job
-        # the distributed ranking needs, measured ~0.6 s off
-        # mr_exec_join at sf0.1.
-        rank_map = sc.broadcast(
-            {k: i % num_reducers for i, k in enumerate(sorted(head))}
-        )
-        # .get + drop matches the join's inner semantics for a key
-        # that appears in the line stream but not the rank table
-        # (possible only with a non-deterministic mapper or an input
-        # mutated between the two passes) — the join path dropped
-        # such lines; a raw dict lookup would kill the job instead.
-        by_rid = (
-            keyed.map(lambda kv: (rank_map.value.get(kv[0]), kv[1]))
-            .filter(lambda kv: kv[0] is not None)
-            .map(lambda kv: ((kv[0], kv[1]), None))
-        )
-    else:
-        # rank of each key in global sorted order -> reducer id
-        # (mod R); key-cardinality sized, never the line count. The
-        # distinct shuffle above is REUSED (Spark skips recomputing
-        # materialized shuffle map stages), so the mapper pipe does
-        # not run an extra time for this branch.
-        ranks = (
-            distinct_keys.sortBy(lambda k: k)
-            .zipWithIndex()
-            .mapValues(lambda i: int(i) % num_reducers)
-        )
-        by_rid = keyed.join(ranks).map(lambda kv: ((kv[1][1], kv[1][0]), None))
-    part_sorted = by_rid.repartitionAndSortWithinPartitions(
-        numPartitions=num_reducers, partitionFunc=lambda key: key[0]
-    )
-    reduced = part_sorted.map(lambda kv: kv[0][1]).pipe(reducer_cmd, checkCode=True)
-    # keep every reducer stdout line, empty ones included — a
-    # reference reducer's output is reproduced byte-for-line
-    tagged = reduced.mapPartitionsWithIndex(
-        lambda idx, it: ((idx, ln) for ln in it)
-    )
-    # materialize the (reducer-output-sized) result THROUGH the cache
-    # before releasing it — returning the lazy frame and unpersisting
-    # would re-run both pipes at the caller's action.
-    # Deliberate fault-tolerance trade (ADVICE r13): localCheckpoint
-    # severs lineage, so losing an executor holding checkpoint
-    # partitions AFTER return fails the caller's action instead of
-    # recomputing — accepted because the alternative (keeping lineage
-    # alive) would re-run the mapper/reducer subprocess pipes on
-    # recompute, and a non-deterministic mapper could then silently
-    # return different bytes than the job already reported; in
-    # local[N] (this harness) executor loss is process death anyway.
-    out = spark.createDataFrame(tagged, "part int, line string").localCheckpoint(
-        eager=True
-    )
-    keyed.unpersist()
-    return out
+    once per input FILE over its whole content (use for stateful
+    mappers; per-split piping is identical for stateless ones)."""
+    paths = [input_paths] if isinstance(input_paths, str) else list(input_paths)
+    with scoped_conf(spark, {"spark.sql.files.minPartitionNum": num_mappers}):
+        if per_file:
+            files = spark.sparkContext.wholeTextFiles(
+                ",".join(paths), minPartitions=num_mappers
+            )
+            records = files.flatMap(_pipe_record(mapper_cmd))
+            mapped = spark.createDataFrame(records, "string").toDF("line")
+        else:
+            mapped = _transform(spark, spark.read.text(paths), "value", mapper_cmd)
+        # MEMORY_AND_DISK: an evicted MEMORY_ONLY partition would silently
+        # RE-RUN the mapper, and a non-deterministic one could then feed
+        # different lines to the key ranking and the reducers.
+        cached = [mapped.persist(StorageLevel.MEMORY_AND_DISK)]
+        try:
+            key = F.substring_index("line", "\t", 1)
+            keys = mapped.select(key.alias("key")).distinct()
+            ranks = _rank_table(spark, keys, num_reducers, cached)
+            # inner join: a line whose key is missing from the ranks (only
+            # possible with a non-deterministic mapper) is dropped
+            by_rid = mapped.join(ranks, key == ranks["key"]).select("line", "rid")
+            shuffled = by_rid.repartitionById(num_reducers, "rid")
+            reduced = _transform(
+                spark, shuffled.sortWithinPartitions("line"), "line", reducer_cmd
+            )
+            # Materialize before the cache is released. localCheckpoint
+            # severs lineage on purpose: a lost checkpoint block fails the
+            # caller's action instead of re-running both pipes, whose
+            # output could then differ from what the job reported.
+            tagged = reduced.select(F.spark_partition_id().alias("part"), "line")
+            return tagged.localCheckpoint(eager=True)
+        finally:
+            for df in cached:
+                df.unpersist()

@@ -178,7 +178,7 @@ def _exec_input_dir(spark: SparkSession, sf_dir: str) -> str:
 
 def mr_exec_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word count run through REAL mapper/reducer executables via
-    RDD.pipe (exec_job.run_executable_job) — the executable-faithful
+    SQL TRANSFORM (exec_job.run_executable_job) — the executable-faithful
     twin of mr_wordcount: a reference user's wc_map.sh/wc_reduce.sh
     pair drops in unchanged. Token definition matches functions.tokens
     so the same SQL oracle verifies both paths end-to-end (map pipe,

@@ -13,7 +13,7 @@ stage on one machine). This script measures, on the SAME corpus:
      adds scheduling on top, never speed);
   b) spark-declarative: the repo's mr_wordcount DataFrame job on
      local[32];
-  c) spark-exec-pipe: the executable-faithful RDD.pipe path running
+  c) spark-exec-pipe: the executable-faithful SQL TRANSFORM path running
      the IDENTICAL tok_map.py/sum_reduce.py executables.
 
 Corpus: sf0.1 documents.text replicated REPLICAS times into line

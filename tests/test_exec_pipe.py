@@ -1,12 +1,14 @@
 """Executable-pipe jobs (mapreduce/exec_job.py): the reference's
-Hadoop-streaming contract driven end-to-end through RDD.pipe —
-real subprocesses, sorted reducer stdin, round-robin key->reducer
-assignment (reference: mapreduce/manager/__main__.py:436-461,
+Hadoop-streaming contract driven end-to-end through Spark SQL's
+TRANSFORM — real subprocesses, sorted reducer stdin, round-robin
+key->reducer assignment (reference: mapreduce/manager/__main__.py:436-461,
 mapreduce/worker/__main__.py:137-183)."""
 
 from __future__ import annotations
 
 import os
+import re
+import shlex
 import sys
 
 import pytest
@@ -18,6 +20,7 @@ from distributed_mapreduce_server_spark.mapreduce.jobs import (
     mr_exec_wordcount,
     mr_wordcount,
 )
+from distributed_mapreduce_server_spark.session import scoped_conf
 
 EXEC_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -91,10 +94,10 @@ def test_exec_reducer_assignment_is_sorted_round_robin(spark, corpus_dir):
 
 
 def test_exec_mapper_failure_raises(spark, corpus_dir):
-    """A non-zero mapper exit must fail the job (checkCode), not
-    silently truncate output — the analog of the reference's task
+    """A non-zero mapper exit must fail the job with its exit status,
+    not silently truncate output — the analog of the reference's task
     status: failed path."""
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="Subprocess exited with status 3"):
         run_executable_job(
             spark,
             corpus_dir,
@@ -238,7 +241,7 @@ def test_per_file_mapper_strict_reference_granularity(spark, tmp_path_factory):
 def test_per_file_mapper_non_ascii_utf8(spark, tmp_path_factory):
     """The per-file subprocess must speak UTF-8 regardless of the
     executor's locale (text=True under LANG=C crashed on non-ASCII;
-    the RDD.pipe path is hardwired UTF-8, so per_file must match)."""
+    the TRANSFORM path passes UTF-8 bytes, so per_file must match)."""
     d = tmp_path_factory.mktemp("per_file_utf8")
     (d / "f0.txt").write_text("café café déjà\n", encoding="utf-8")
     mapper = d / "id_map.py"
@@ -263,21 +266,182 @@ def test_per_file_mapper_non_ascii_utf8(spark, tmp_path_factory):
 
 
 def test_rank_join_fallback_matches_broadcast(spark, tmp_path_factory, monkeypatch):
-    """The large-key-set fallback (RDD rank join) must produce exactly
-    the broadcast path's output — forced by dropping the threshold."""
+    """The large-key-set fallback (distributed SQL rank) must produce
+    exactly the broadcast path's output — forced by dropping the
+    threshold. Coalescing is off so the range-sorted keys span several
+    partitions and the per-partition offsets are exercised."""
     from distributed_mapreduce_server_spark.mapreduce import exec_job
 
     d = tmp_path_factory.mktemp("fallback_in")
-    (d / "f0.txt").write_text("alpha beta beta\ngamma alpha\n")
+    words = [f"w{i:03d}" for i in range(60)]
+    (d / "f0.txt").write_text(
+        "alpha beta beta\ngamma alpha\n" + " ".join(words[::-1]) + "\n"
+    )
     args = (
         spark,
         str(d / "*.txt"),
         _cmd("tok_map.py"),
         _cmd("sum_reduce.py"),
     )
-    want = sorted(map(tuple, exec_job.run_executable_job(*args, num_reducers=2).collect()))
+    want = sorted(map(tuple, exec_job.run_executable_job(*args, num_reducers=3).collect()))
+    keys = sorted(["alpha", "beta", "gamma", *words])
+    assert {(i % 3, k) for i, k in enumerate(keys)} == {
+        (part, line.split("\t")[0]) for part, line in want
+    }
     monkeypatch.setattr(exec_job, "BROADCAST_KEY_LIMIT", 0)
-    got = sorted(map(tuple, exec_job.run_executable_job(*args, num_reducers=2).collect()))
+    with scoped_conf(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        got = sorted(map(tuple, exec_job.run_executable_job(*args, num_reducers=3).collect()))
+    assert got == want
+
+
+def test_exec_line_framing_is_lossless(spark, tmp_path_factory):
+    """Identity mapper and reducer: every line comes back exactly as
+    RDD.pipe returns it — empty lines, the default TRANSFORM NULL marker
+    '\\N', the default field separator '\\u0001', whitespace around
+    tabs and non-ASCII text included."""
+    d = tmp_path_factory.mktemp("framing_in")
+    lines = [
+        "",
+        "\\N",
+        "x\u0001y\tz",
+        "\u0001",
+        "  a \t b  ",
+        "\tlead",
+        "trail\t",
+        "k\t\t",
+        " ",
+        "café\tdéjà",
+        "",
+    ]
+    (d / "f0.txt").write_text("\n".join(lines) + "\n", encoding="utf-8")
+    piped = spark.sparkContext.textFile(str(d)).pipe("cat").pipe("cat").collect()
+    assert sorted(piped) == sorted(lines)
+    out = run_executable_job(spark, str(d), "cat", "cat", num_reducers=1).collect()
+    # one reducer: its stdin (and so its identity output) is sorted
+    assert [r["line"] for r in out] == sorted(piped)
+
+
+def test_exec_command_quoting(spark, corpus_dir, tmp_path_factory):
+    """TRANSFORM runs its command under a shell; the executable must
+    still get the argv a shell-free split gives — '$HOME', '*' and a
+    single quote arrive literally, on both the SQL and per-file path."""
+    d = tmp_path_factory.mktemp("argv_exec")
+    argv_map = d / "argv_map.py"
+    argv_map.write_text(
+        "import sys\n"
+        "sys.stdin.read()\n"
+        "for a in sys.argv[1:]:\n"
+        "    print(a + '\\t1')\n"
+    )
+    # what a shell-free split gives; a shell would expand $HOME and *
+    cmd = f"{PY} {argv_map} $HOME * \"it's\" 'a\\b'"
+    args = ["$HOME", "*", "it's", "a\\b"]
+    assert shlex.split(cmd)[2:] == args
+    for per_file in (False, True):
+        out = run_executable_job(
+            spark, corpus_dir, cmd, "cat", num_reducers=2, per_file=per_file
+        ).collect()
+        got = {r["line"].split("\t")[0] for r in out}
+        assert got == set(args), per_file
+
+
+def _crash_reducer(tmp_path_factory) -> str:
+    """A reducer that echoes two lines, then dies mid-stream (status 7)."""
+    d = tmp_path_factory.mktemp("crash_exec")
+    script = d / "crash_reduce.py"
+    script.write_text(
+        "import sys\n"
+        "for i, line in enumerate(sys.stdin):\n"
+        "    if i == 2:\n"
+        "        sys.stderr.write('reducer died mid-stream\\n')\n"
+        "        sys.exit(7)\n"
+        "    sys.stdout.write(line)\n"
+    )
+    return f"{PY} {script}"
+
+
+CRASH_MSG = "Subprocess exited with status 7. Error: reducer died mid-stream"
+
+
+def test_exec_reducer_crash_raises_exit_status(spark, corpus_dir, tmp_path_factory):
+    """A reducer dying mid-stream fails the job with its exit status and
+    stderr, not with the lines it wrote before dying."""
+    with pytest.raises(Exception, match=re.escape(CRASH_MSG)):
+        run_executable_job(
+            spark, corpus_dir, _cmd("tok_map.py"), _crash_reducer(tmp_path_factory)
+        )
+
+
+def test_job_queue_reducer_crash_isolated(spark, corpus_dir, tmp_path_factory):
+    """The queue records the crashed job FAILED with the exit-status
+    text and still runs the next job."""
+    from distributed_mapreduce_server_spark.mapreduce.submit import (
+        ExecJobSpec,
+        JobQueue,
+        JobState,
+    )
+
+    q = JobQueue(spark)
+    bad = q.submit(
+        ExecJobSpec(
+            input_directory=corpus_dir,
+            output_directory=str(tmp_path_factory.mktemp("jq_crash")),
+            mapper_executable=_cmd("tok_map.py"),
+            reducer_executable=_crash_reducer(tmp_path_factory),
+        )
+    )
+    good_out = str(tmp_path_factory.mktemp("jq_after_crash"))
+    good = q.submit(
+        ExecJobSpec(
+            input_directory=corpus_dir,
+            output_directory=good_out,
+            mapper_executable=_cmd("tok_map.py"),
+            reducer_executable=_cmd("sum_reduce.py"),
+        )
+    )
+    final = q.run_all()
+    assert final[bad] == JobState.FAILED
+    assert CRASH_MSG in q.error(bad)
+    assert final[good] == JobState.FINISHED
+    assert "the\t3\n" in open(os.path.join(good_out, "outputfile01")).read()
+
+
+def test_exec_placement_exact_with_aqe(spark, tmp_path_factory):
+    """More reducers than distinct keys with AQE on: key i lands in
+    outputfile(i % R + 1) and the empty groups still get their file
+    (repartitionById places reducer i in partition i; AQE must neither
+    coalesce nor reshuffle it)."""
+    from distributed_mapreduce_server_spark.mapreduce.submit import (
+        ExecJobSpec,
+        submit_exec,
+    )
+
+    keys = ["apple", "kiwi", "melon", "pear", "plum"]
+    indir = tmp_path_factory.mktemp("placement_in")
+    (indir / "a.txt").write_text(" ".join(keys[::-1] * 3) + "\n")
+    outdir = str(tmp_path_factory.mktemp("placement_out"))
+    r = 8
+    aqe = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    }
+    with scoped_conf(spark, aqe):
+        submit_exec(
+            spark,
+            ExecJobSpec(
+                input_directory=str(indir),
+                output_directory=outdir,
+                mapper_executable=_cmd("tok_map.py"),
+                reducer_executable=_cmd("sum_reduce.py"),
+                num_reducers=r,
+            ),
+        )
+    files = sorted(os.listdir(outdir))
+    assert files == [f"outputfile{i + 1:02d}" for i in range(r)]
+    want = [""] * r
+    for i, k in enumerate(keys):
+        want[i % r] += f"{k}\t3\n"
+    got = [open(os.path.join(outdir, f), encoding="utf-8").read() for f in files]
     assert got == want
 
 

@@ -149,9 +149,9 @@ EAGER_OPS = {
     "text_global_shuffle",  # partition-offset collect runs eagerly
     "text_perplexity_filter",  # two-phase rank offsets collect eagerly
     "text_bpe_train",  # iterative merge rounds run eagerly
-    "mr_exec_wordcount",  # RDD pipe job: zipWithIndex runs eagerly
-    "mr_exec_grep",  # RDD pipe job: zipWithIndex runs eagerly
-    "mr_exec_join",  # RDD pipe job: zipWithIndex runs eagerly
+    "mr_exec_wordcount",  # TRANSFORM job: key collect + checkpoint run eagerly
+    "mr_exec_grep",  # TRANSFORM job: key collect + checkpoint run eagerly
+    "mr_exec_join",  # TRANSFORM job: key collect + checkpoint run eagerly
     "emb_pca_project",  # driver spectral solve at plan time
     "emb_pca_invariants",  # spectral solve + stats collect; PCA_K-row result
     "dedup_lsh_eval",  # runs both pair operators eagerly; final plan

@@ -8,7 +8,8 @@ internals the round changed.
   + sum(d)/2 edge count off the degree frame, restriction against the
   ORIGINAL edge frame) must reproduce the straightforward per-round
   materialized peel row for row.
-- session.scoped_conf must restore values on success and error.
+- session.scoped_conf must restore values on success and error, and
+  unset again a conf that was unset (one with no default included).
 """
 
 from __future__ import annotations
@@ -86,6 +87,15 @@ class TestScopedConf:
     def test_empty_dict_is_noop(self, spark):
         with scoped_conf(spark, {}):
             pass
+
+    def test_unset_conf_without_default(self, spark):
+        """A conf with no default (a plain ``get`` raises) is set inside
+        and unset again on exit."""
+        key = "spark.sql.files.minPartitionNum"
+        assert spark.conf.get(key, None) is None
+        with scoped_conf(spark, {key: 7}):
+            assert spark.conf.get(key) == "7"
+        assert spark.conf.get(key, None) is None
 
 
 class TestLpaModeVote:
