@@ -37,13 +37,15 @@ class JobSpec:
 
 def submit(spark: SparkSession, spec: JobSpec) -> DataFrame:
     """Run the job and write ``num_reducers`` part files; returns the
-    result DataFrame (already computed by the write action)."""
+    result DataFrame (already computed by the write action). An
+    existing ``output_directory`` is overwritten, as in
+    :func:`submit_exec`, so a JobSpec can be submitted again."""
     lines = read_text_lines(spark, spec.input_directory)
     # replace(), not in-place mutation: a MapReduceJob shared across
     # JobSpecs must not inherit this spec's reducer count.
     job = replace(spec.job, num_reducers=spec.num_reducers)
     result = job.run(lines)
-    write_sink(result, spec.output_directory, fmt=spec.output_format)
+    write_sink(result, spec.output_directory, fmt=spec.output_format, mode="overwrite")
     return result
 
 

@@ -785,7 +785,32 @@ def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter-many rounds and each round re-joins the FULL static edge
     list — fine for shallow near-dup clusters, but a long path or
     high-degree hub costs O(diameter) shuffles of every edge.
-    Star contraction instead rewires the edge set itself each round:
+    Star contraction (:func:`_star_contraction_cc`) instead rewires
+    the edge set itself each round, in O(log^2 n) rounds regardless
+    of diameter.
+
+    The jaccard pairs come out of _ngram_pairs already canonical
+    (doc_a < doc_b, one row per pair), so they feed the loop as
+    (u, v) = (doc_b, doc_a) with no symmetric edge frame and no extra
+    persist or count. There is no member roster either: star
+    contraction keeps every node of a component of two or more in
+    some edge at every round, so the final stars label exactly the
+    documents of the near-dup graph. A one-round run is 4 eager
+    actions: the shingle persist, the loop's initial signature, and
+    per round one large-star persist plus one signature; the labels
+    return lazily over the last round's checkpoint.
+    """
+    pairs, e = _ngram_pairs(spark, sf_dir)
+    canon = pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    labels = _star_contraction_cc(spark, canon)
+    e.unpersist()
+    return labels.orderBy("doc_id")
+
+
+def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) connected-component labels of the graph
+    given as a DISTINCT canonical (u, v) edge frame with u > v; the
+    cluster id is the component's minimum node.
 
     - large-star: per node u, connect every LARGER neighbor v > u to
       m(u) = min(N(u) ∪ {u}). Cuts long paths toward minima in
@@ -793,34 +818,33 @@ def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     - small-star: per node u, connect every neighbor v <= u (and u)
       to that minimum. Collapses the remaining small neighborhoods.
 
-    Both halves converge in O(log^2 n) rounds REGARDLESS of diameter
-    (in practice single digits), and the edge set shrinks monotonically
-    toward one star per component — so late rounds shuffle far fewer
-    bytes than early ones, the opposite of label propagation's
-    constant per-round cost. Each half-round is one groupBy + one
-    join, persisted with flat lineage.
+    Both halves converge in O(log^2 n) rounds (in practice single
+    digits), and the edge set shrinks monotonically toward one star
+    per component — so late rounds shuffle far fewer bytes than
+    early ones. Neither half drops a node: a node keeps an edge to
+    its neighborhood minimum or is that minimum for a neighbor.
 
-    Convergence detection: the canonical edge set's (count,
-    xor-of-xxhash64) signature is compared across rounds (edges are
-    distinct, so xor cancellation can't occur within one set) — one cheap
-    aggregate instead of two exceptAll jobs. At the fixed point every
-    edge is (node, component-min), so labels read directly off the
-    final stars.
+    Convergence detection: the edge set's (count, xor-of-xxhash64)
+    signature is compared across rounds (edges are distinct, so xor
+    cancellation can't occur within one set) — one cheap aggregate
+    instead of two exceptAll jobs. At the fixed point every edge is
+    (node, component-min), so labels read directly off the stars.
 
-    Lineage management: each round's edge set becomes a LEAF via an
-    eager localCheckpoint, not just a persist. Persist leaves the
+    Lineage management: each round's edge set becomes a LEAF via a
+    lazy ``localCheckpoint(eager=False)`` that the signature collect
+    materializes (one job, not checkpoint-then-aggregate; the
+    q_graph_kcore_peel discipline). Persist alone would leave the
     logical plan in place, and one star round references its input
     ~6x (sym union, mins join, two small-star reads), so the plan
     tree grows geometrically and Catalyst re-analyzes every prior
     round on each action — measured as a minutes-long analyzer stall
-    by round 3. Checkpointing bounds analysis to one round; the
-    (small, shrinking) edge blocks free on GC via the ContextCleaner.
+    by round 3. Superseded rounds' blocks retire by their own rdd id;
+    the returned labels are lazy over the last round's checkpoint.
     """
-    edges = _near_dup_edges(spark, sf_dir)  # symmetric (src, dst)
-    # members: every node of the original graph (output row set);
-    # star contraction rewires edges, so keep the roster separately.
-    members = edges.select(F.col("src").alias("doc_id")).distinct().persist()
-    members.count()
+    from distributed_mapreduce_server_spark.session import (
+        checkpointed_rdd_ids,
+        unpersist_rdd_ids,
+    )
 
     def _sym(canon: DataFrame) -> DataFrame:
         """Symmetric view of a canonical (u > v) edge frame."""
@@ -835,23 +859,16 @@ def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
         return row["n"], row["s"]
 
-    # canonical edges: u > v, distinct — checkpointed to a leaf
-    canon = (
-        edges.filter(F.col("src") > F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    canon = canon.localCheckpoint(eager=False)
     sig = _signature(canon)
-    edges.unpersist()
     while True:
         sym = _sym(canon)
         # large-star: m(u) = min over N(u) ∪ {u}; emit (v, m) for v > u
+        # (m <= u < v, so no self-edge can appear)
         mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
         large = (
             sym.join(mins, "u")
             .filter(F.col("v") > F.col("u"))
-            .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         # small-star over the large-star output: neighbors v < u only,
@@ -866,27 +883,23 @@ def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(sm.select(F.col("u"), F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
         )
-        new_canon = small.distinct().localCheckpoint(eager=True)
+        new_canon = small.distinct().localCheckpoint(eager=False)
         new_sig = _signature(new_canon)
         ls_canon.unpersist()
+        unpersist_rdd_ids(spark, checkpointed_rdd_ids(canon))
         canon = new_canon
         if new_sig == sig:
             break
         sig = new_sig
     # fixed point: every edge is (node, component-min). Leaves label
-    # via their edge; centers label as themselves; the members roster
-    # keeps isolated-after-rewire nodes impossible (components >= 2
-    # always retain their star edge).
-    labels = (
+    # via their edge; centers label as themselves.
+    return (
         canon.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
         .unionByName(
             canon.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))
         )
         .distinct()
     )
-    out = _cache_result(members.join(labels, "doc_id"))
-    members.unpersist()
-    return out.orderBy("doc_id")
 
 
 def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -793,8 +793,8 @@ def _family(key: str) -> str:
 # that already have a green driver CORRECTNESS row (union of
 # CORRECTNESS_r01..r11 keys, 218 of 290) are demoted to a second
 # tier and every never-sampled key is emitted first. With this set
-# regenerated from CORRECTNESS_r01..r12 (263 sampled), round 13's
-# prefix carries the final 29 never-sampled keys — the tail ends.
+# regenerated from CORRECTNESS_r01..r14, all 294 keys are sampled and
+# the rotation no longer reorders anything.
 # Maintenance: after each driver round, add that round's sampled
 # keys here (scripts/update_sampled.py regenerates the block from
 # the CORRECTNESS_r*.json files); tests/test_plans.py
@@ -824,6 +824,7 @@ _DRIVER_SAMPLED = frozenset(
         "dedup_routed_eval",
         "dedup_routed_nested_eval",
         "dedup_routed_probe_sweep",
+        "dedup_routed_rank1_eval",
         "dedup_semantic_clusters",
         "dedup_semantic_keep",
         "dedup_semantic_routed",
@@ -914,19 +915,32 @@ _DRIVER_SAMPLED = frozenset(
         "q_customer_rfm",
         "q_customers_no_orders",
         "q_data_quality_audit",
+        "q_events_ab_test",
         "q_events_anomaly",
+        "q_events_approx_topk",
+        "q_events_attribution",
         "q_events_autocorrelation",
+        "q_events_bot_flags",
+        "q_events_burst_detection",
+        "q_events_cohort_ltv",
+        "q_events_daily_sketch_rollup",
         "q_events_dau_wau",
         "q_events_error_rate_slo",
         "q_events_funnel",
+        "q_events_heatmap",
+        "q_events_hierarchical_rollup",
         "q_events_intersect_except",
         "q_events_json_extract",
         "q_events_lateness",
+        "q_events_latest_per_key",
         "q_events_markov_stationary",
         "q_events_paths",
         "q_events_pivot",
         "q_events_retention",
+        "q_events_scd2",
+        "q_events_sequential_pattern",
         "q_events_sessionize",
+        "q_events_theta_setops",
         "q_events_transitions",
         "q_events_trend_fit",
         "q_events_user_entropy",
@@ -950,6 +964,7 @@ _DRIVER_SAMPLED = frozenset(
         "q_market_segment_sales",
         "q_moving_avg_events",
         "q_nation_rollup",
+        "q_new_vs_returning",
         "q_open_order_backlog",
         "q_order_gaps",
         "q_order_priority",
@@ -966,11 +981,15 @@ _DRIVER_SAMPLED = frozenset(
         "q_rolling_revenue_30d",
         "q_running_revenue",
         "q_salted_skew_join",
+        "q_scd2_pit_join",
         "q_seasonality_index",
         "q_session_overlap_join",
         "q_sessions_bounce_rate",
+        "q_shuffle_key_skew",
         "q_sketch_error_bounds",
         "q_skyline_parts",
+        "q_snapshot_diff",
+        "q_sql_dedup_keep",
         "q_sql_funnel",
         "q_sql_interface",
         "q_sql_q1_pricing",
@@ -980,6 +999,7 @@ _DRIVER_SAMPLED = frozenset(
         "q_sql_sessionize_kpi",
         "q_stats_suite",
         "q_supplier_hhi",
+        "q_time_bucket_gapfill",
         "q_time_weighted_avg",
         "q_top_customer_per_nation",
         "q_unpivot_balance",
@@ -1027,6 +1047,8 @@ _DRIVER_SAMPLED = frozenset(
         "stream_upsert_foreachbatch",
         "stream_wordcount",
         "text_bigram_logprob",
+        "text_bm25_search",
+        "text_bpe_fertility",
         "text_bpe_pair_counts",
         "text_bpe_train",
         "text_c4_filters",
@@ -1040,20 +1062,28 @@ _DRIVER_SAMPLED = frozenset(
         "text_fingerprint",
         "text_global_shuffle",
         "text_gopher_filters",
+        "text_hashed_features",
         "text_kfold_split",
         "text_lang_distribution",
         "text_langid",
         "text_mixture_sample",
+        "text_model_quality_filter",
+        "text_ngram_novelty",
         "text_perplexity_filter",
         "text_phrase_search",
         "text_pii_scrub",
+        "text_quality_eval",
         "text_quality_keep",
         "text_quality_score",
+        "text_quality_train",
+        "text_quality_trained_filter",
         "text_repetition_ratio",
         "text_reservoir_sample",
         "text_sample_stratified",
         "text_sequence_packing",
+        "text_source_kl_divergence",
         "text_source_mix",
+        "text_source_overlap",
         "text_tfidf",
         "text_token_entropy",
         "text_token_stats",
@@ -1065,6 +1095,7 @@ _DRIVER_SAMPLED = frozenset(
         "text_unigram_tokenize",
         "text_unigram_train",
         "text_weighted_sample",
+        "text_zipf_fit",
     }
 )
 

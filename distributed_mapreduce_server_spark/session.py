@@ -14,6 +14,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Generated classes the JVM keeps compiled (see get_spark): ~4x the
+# ~225 distinct classes one query_mix pass compiles, so a job mix
+# several times wider still runs warm.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(app_name: str = "dmrs-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-oriented defaults.
@@ -24,6 +29,14 @@ def get_spark(app_name: str = "dmrs-spark", shuffle_partitions: int | None = Non
     - Arrow on: any Pandas-UDF path transfers columnar batches.
     - shuffle.partitions sized by SPARK_GRAFT_CPUS locally; on a real
       cluster this would be ~2-3x total cores and AQE coalesces down.
+    - Codegen cache of CODEGEN_CACHE_ENTRIES classes: one session runs
+      job after job (the reference manager's server loop, JobQueue,
+      bench.py), and Spark's default of 100 entries is smaller than
+      the classes one pass of perfbench's six query_mix registry keys
+      needs: at sf0.01 every warm pass recompiled 223-228 classes
+      (q_pagerank 56, dedup_clusters_bigstar 76-81) through Janino and
+      the JIT; with this cache a warm pass compiles 0-6. The conf is
+      static (read once per JVM), hence set here.
     """
     # Python workers (Pandas UDF / mapInPandas) import this package by
     # name from pickled closures; they read PYTHONPATH from the
@@ -53,6 +66,7 @@ def get_spark(app_name: str = "dmrs-spark", shuffle_partitions: int | None = Non
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         # local[N, 2]: allow one task retry, like a real cluster

@@ -14,6 +14,11 @@ operators (iterative graph loops, two-phase collects) the lazy
 explain() shows only the post-localCheckpoint Scan ExistingRDD, but
 the internal jobs' executed plans land here, Exchange counts included.
 
+Each timed run also reports the Spark jobs it submitted (counted from
+the status store by job group) and the classes codegen compiled during
+it (the JVM's CodegenMetrics compile counter), so per-run action cuts
+and codegen-cache thrash show in the printed line and the JSON.
+
 Usage:
     python scripts/opt_measure.py [--tag before|after] [--sf DIR] name...
     python scripts/opt_measure.py --tag before --executed q_pagerank
@@ -43,6 +48,13 @@ from distributed_mapreduce_server_spark import (  # noqa: E402
 MEDIAN_OF = 3
 
 
+def job_count(spark, group: str) -> int:
+    """Spark jobs the status store holds for ``group``, after flushing
+    the listener bus (job events arrive asynchronously)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -65,7 +77,9 @@ def main() -> None:
     os.makedirs(plans_dir, exist_ok=True)
 
     spark = get_spark("dmrs-opt-measure")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    compile_count = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
     queries = registry.all_queries()
     out: dict[str, dict] = {}
     for name in args.names:
@@ -76,18 +90,21 @@ def main() -> None:
             fn(spark, warm).write.format("noop").mode("overwrite").save()
             spark.catalog.clearCache()
             retire_persistent_rdds(spark)
-        samples = []
-        for _ in range(args.runs):
+        samples, jobs, compiles = [], [], []
+        for i in range(args.runs):
             spark.catalog.clearCache()
             retire_persistent_rdds(spark)
-            spark.sparkContext.setJobDescription(f"opt:{name}")
+            group = f"opt:{name}:{i}"
+            sc.setJobGroup(group, group)
+            compiled0 = compile_count()
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
-        samples.sort()
-        med = samples[len(samples) // 2]
+            compiles.append(compile_count() - compiled0)
+            sc._jsc.clearJobGroup()
+            jobs.append(job_count(spark, group))
+        med = sorted(samples)[len(samples) // 2]
         if not args.no_plan:
             # fresh build for the plan so persisted frames from the timed
             # runs don't appear as InMemoryRelation noise
@@ -124,8 +141,11 @@ def main() -> None:
                             f" build above) ===\n"
                         )
                         fh.write(p)
-        out[name] = {"median": med, "samples": samples}
-        print(f"{name}: median={med}s samples={samples}", flush=True)
+        out[name] = {"median": med, "samples": samples, "jobs": jobs, "compiles": compiles}
+        print(
+            f"{name}: median={med}s samples={samples} jobs={jobs} compiles={compiles}",
+            flush=True,
+        )
     print(json.dumps(out))
 
 

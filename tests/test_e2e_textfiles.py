@@ -115,6 +115,40 @@ def test_submit_mirrors_reference_payload(spark, tmp_path_factory):
     assert len(parts) == 2
 
 
+def test_job_queue_resubmits_jobspec(spark, tmp_path_factory):
+    """The same JobSpec submitted twice through the JobQueue finishes
+    both times: the second run overwrites the first run's part files
+    instead of failing on the existing output directory."""
+    import os
+
+    from distributed_mapreduce_server_spark.mapreduce.submit import (
+        JobQueue,
+        JobSpec,
+        JobState,
+    )
+
+    base = tmp_path_factory.mktemp("resubmit")
+    input_dir, output_dir = str(base / "in"), str(base / "out")
+    docs = load_tables(spark, SF_DIR, register_views=False)["documents"]
+    docs.select(F.col("text").alias("value")).repartition(2).write.format("text").save(input_dir)
+    spec = JobSpec(
+        input_directory=input_dir,
+        output_directory=output_dir,
+        job=word_count_job(text_col="line"),
+        num_reducers=2,
+    )
+    q = JobQueue(spark)
+    j1, j2 = q.submit(spec), q.submit(spec)
+    final = q.run_all()
+    assert final[j1] == JobState.FINISHED, q.error(j1)
+    assert final[j2] == JobState.FINISHED, q.error(j2)
+    parts = [f for f in os.listdir(output_dir) if f.startswith("part-")]
+    assert len(parts) == 2
+    got = read_source(spark, output_dir, fmt="csv", schema="key string, cnt long")
+    expect = word_count_job(text_col="line").run(read_text_lines(spark, input_dir))
+    assert sorted(got.collect()) == sorted(expect.collect())
+
+
 def test_cli_submit_entrypoint(tmp_path):
     """The reference's mapreduce-submit front door as a subprocess:
     python -m distributed_mapreduce_server_spark.submit with the

@@ -1,0 +1,51 @@
+"""Session-level behaviour that only shows across queries: a long-lived
+session must keep warm queries compiled."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Runs the two iterative query_mix keys twice in ONE fresh session and
+# prints the number of classes codegen compiled in each run. A fresh
+# process makes the first run cold whatever the test session has
+# already compiled.
+_TWO_RUNS = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from distributed_mapreduce_server_spark import get_spark, registry
+spark = get_spark("dmrs-codegen-cache-test")
+spark.sparkContext.setLogLevel("ERROR")
+compiled = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+queries = registry.all_queries()
+counts = []
+for _ in range(2):
+    before = compiled.getCount()
+    for key in ("q_pagerank", "dedup_clusters_bigstar"):
+        queries[key](spark, sys.argv[2]).write.format("noop").mode("overwrite").save()
+    counts.append(compiled.getCount() - before)
+print(json.dumps(counts))
+"""
+
+
+def test_warm_rerun_compiles_almost_nothing(sf_smoke):
+    """The second run of q_pagerank + dedup_clusters_bigstar in one
+    session compiles at most 10 % as many classes as the first. With
+    Spark's default 100-entry codegen cache the pair's ~146 distinct
+    classes evict each other and the second run recompiled 119."""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _TWO_RUNS, ROOT, sf_smoke],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    cold, warm = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert cold > 50, (cold, warm)
+    assert warm <= 0.1 * cold, (cold, warm)

@@ -1,0 +1,60 @@
+"""Large-star / small-star connected components on synthetic graphs
+the near-dup corpus never produces: long paths, hubs, disjoint
+components and inputs that are already stars. Each is checked against
+a plain-Python union-find."""
+
+from __future__ import annotations
+
+import random
+
+import pytest
+
+from distributed_mapreduce_server_spark.operators.dedup import _star_contraction_cc
+
+
+def _union_find_labels(edges: list[tuple[int, int]]) -> set[tuple[int, int]]:
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # keep the smaller root: the root is the component minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
+def _path(n: int) -> list[tuple[int, int]]:
+    # node ids shuffled along the path, so minima sit mid-path and the
+    # path is not already sorted toward its smallest end
+    ids = list(range(n))
+    random.Random(7).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+GRAPHS = {
+    "path50": _path(50),
+    # the hub sits mid-range: half its leaves are smaller, half larger
+    "hub30": [(15, leaf) for leaf in range(31) if leaf != 15],
+    # interleaved ids: evens form one chain, odds another
+    "two_components": [(i, i + 2) for i in range(0, 18, 2)]
+    + [(i, i + 2) for i in range(1, 19, 2)],
+    # already at the fixed point: every edge is (leaf, center = min)
+    "stars": [(leaf, 0) for leaf in range(1, 11)] + [(leaf, 20) for leaf in range(21, 26)],
+}
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_star_contraction_matches_union_find(spark, name):
+    edges = GRAPHS[name]
+    canon = spark.createDataFrame(
+        sorted({(max(a, b), min(a, b)) for a, b in edges}), "u long, v long"
+    )
+    got = {(r["doc_id"], r["cluster_id"]) for r in _star_contraction_cc(spark, canon).collect()}
+    assert got == _union_find_labels(edges)
