@@ -451,19 +451,9 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     cp = cp.persist()
     pdeg = cp.groupBy("p").agg(F.count("*").alias("d"))
     capped = cp.join(pdeg.filter(F.col("d") <= CN_DEG_CAP).select("p"), "p").persist()
-    n_capped = capped.count()
+    capped.count()
     cp.unpersist()
     sizes = capped.groupBy("c").agg(F.count("*").alias("n_parts"))
-    # The union-size joins attach a |C|-row frame to the PAIR-count
-    # frame (the biggest frame in the op): broadcast-hint both sides
-    # so the pair frame is never shuffled/sorted by ca then cb (the
-    # r13 plan ran one of them as a SortMergeJoin). |C| <= capped
-    # rows, so the already-taken eager count gates the hint — a
-    # customer set past the cap keeps the shuffle plan (r14, §3.1).
-    sa = sizes.select(F.col("c").alias("ca"), F.col("n_parts").alias("na"))
-    sb = sizes.select(F.col("c").alias("cb"), F.col("n_parts").alias("nb"))
-    if n_capped <= LOOP_BROADCAST_MAX_NODES:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
     buyers = capped.groupBy("p").agg(F.collect_list("c").alias("cs"))
     pairs = (
         buyers.select(F.explode("cs").alias("ca"), "cs")
@@ -472,8 +462,8 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     inter = pairs.groupBy("ca", "cb").agg(F.count("*").alias("n_shared"))
     j = (
-        inter.join(sa, "ca")
-        .join(sb, "cb")
+        inter.join(sizes.select(F.col("c").alias("ca"), F.col("n_parts").alias("na")), "ca")
+        .join(sizes.select(F.col("c").alias("cb"), F.col("n_parts").alias("nb")), "cb")
         .select(
             F.col("ca").alias("cust_a"),
             F.col("cb").alias("cust_b"),

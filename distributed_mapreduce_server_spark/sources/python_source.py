@@ -332,6 +332,12 @@ def pysource_stream_oracle() -> str:
     return _series_oracle(0)
 
 
+PYSOURCE_ORACLES = {
+    "pysource_range_events": pysource_oracle(),
+    "pysource_stream_events": pysource_stream_oracle(),
+}
+
+
 # --- write path: a custom SINK with two-phase commit ----------------
 # Executors write staged part files and return commit messages; the
 # driver's commit() atomically promotes the staged files into the

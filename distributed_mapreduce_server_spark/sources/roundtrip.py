@@ -125,6 +125,11 @@ def src_gzip_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-GZIP_TEXT_ORACLE = """
+ROUNDTRIP_ORACLES = {
+    "src_csv_roundtrip": ROUNDTRIP_ORACLE,
+    "src_json_roundtrip": ROUNDTRIP_ORACLE,
+    "src_orc_roundtrip": ROUNDTRIP_ORACLE,
+    "src_gzip_text_roundtrip": """
     SELECT text AS value FROM documents ORDER BY 1
-"""
+""",
+}

@@ -34,7 +34,7 @@ def main() -> int:
     spark = get_spark("dmrs-parity-check")
     spark.sparkContext.setLogLevel("ERROR")
     queries = registry.all_queries()
-    oracles = registry.all_oracles() if hasattr(registry, "all_oracles") else registry._ORACLES
+    oracles = registry.all_oracles()
     rc = 0
     for sf_dir in args.sf.split(","):
         con = duckdb_conn(sf_dir)

@@ -203,6 +203,34 @@ def test_submit_exec_empty_reducer_groups_get_files(spark, tmp_path_factory):
     assert contents[1] == "" and contents[2] == ""
 
 
+@pytest.mark.parametrize("per_file", [False, True])
+def test_submit_exec_empty_input_dir(spark, tmp_path_factory, per_file):
+    """An empty input directory still wraps up like the reference
+    manager: exactly num_reducers outputfileNN files, all empty."""
+    from distributed_mapreduce_server_spark.mapreduce.submit import (
+        ExecJobSpec,
+        submit_exec,
+    )
+
+    indir = tmp_path_factory.mktemp("empty_in")
+    outdir = str(tmp_path_factory.mktemp("empty_out"))
+    submit_exec(
+        spark,
+        ExecJobSpec(
+            input_directory=str(indir),
+            output_directory=outdir,
+            mapper_executable=_cmd("tok_map.py"),
+            reducer_executable=_cmd("sum_reduce.py"),
+            num_reducers=3,
+            per_file=per_file,
+        ),
+    )
+    files = sorted(os.listdir(outdir))
+    assert files == ["outputfile01", "outputfile02", "outputfile03"]
+    for f in files:
+        assert os.path.getsize(os.path.join(outdir, f)) == 0, f
+
+
 def test_per_file_mapper_strict_reference_granularity(spark, tmp_path_factory):
     """A STATEFUL mapper (emits one '__header__\\t1' per invocation)
     must see exactly one invocation per input file under

@@ -572,53 +572,6 @@ def test_registry_prefix_covers_all_families(queries):
     } <= fams, fams
 
 
-def test_registry_prefix_rotates_onto_never_sampled_keys(queries):
-    """Driver-sample rotation (VERDICT r9 task 2): while keys without
-    a driver CORRECTNESS row remain, the 50-key prefix must be drawn
-    from them — except the single pinned pysource key the family-
-    coverage lint above requires (both pysource keys already have
-    green driver rows, so 50/50 is impossible under that lint)."""
-    from distributed_mapreduce_server_spark import registry
-
-    never_total = sum(
-        1 for k in registry._QUERIES if k not in registry._DRIVER_SAMPLED
-    )
-    prefix = list(queries)[:50]
-    sampled_in_prefix = [k for k in prefix if k in registry._DRIVER_SAMPLED]
-    budget = len(registry._TIER0_PINNED) if never_total >= 49 else 50
-    assert len(sampled_in_prefix) <= budget, sampled_in_prefix
-
-
-def test_driver_sampled_not_stale(queries):
-    """VERDICT r12 'What's wrong' 1: registry._DRIVER_SAMPLED was last
-    regenerated from r1-r11 while CORRECTNESS_r12.json sat committed,
-    so the r13 prefix contained ZERO never-sampled keys. Pin the
-    maintenance contract: the frozen set must equal the union of keys
-    across ALL committed CORRECTNESS_r*.json files (so the rotation
-    can never silently lag a driver round), and every still-never-
-    sampled key must sit inside the driver's 50-key prefix while any
-    remain."""
-    import glob
-    import json
-
-    from distributed_mapreduce_server_spark import registry
-
-    sampled: set[str] = set()
-    for f in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        sampled.update(json.load(open(f)).keys())
-    sampled &= set(registry._QUERIES)  # ignore renamed/retired keys
-    assert sampled == set(registry._DRIVER_SAMPLED), (
-        "run scripts/update_sampled.py and splice the block into "
-        "registry.py — stale by "
-        f"{sorted(sampled ^ set(registry._DRIVER_SAMPLED))}"
-    )
-    never = [k for k in registry._QUERIES if k not in sampled]
-    prefix = set(list(queries)[:50])
-    missing = [k for k in never[: 50 - len(registry._TIER0_PINNED)]
-               if k not in prefix]
-    assert not missing, missing
-
-
 # ---------------------------------------------------------------------------
 # Executed-plan audit: the EAGER_OPS blind spot, closed (round 8)
 # ---------------------------------------------------------------------------

@@ -93,7 +93,7 @@ class TestBenchSplit:
 
         headline, trust = set(bench.HEADLINE), set(bench.TRUST_SUITE)
         assert not (headline & trust), headline & trust
-        unknown = (headline | trust) - set(registry._QUERIES)
+        unknown = (headline | trust) - set(registry.all_queries())
         assert not unknown, unknown
 
     def test_previously_unbenched_keys_now_covered(self):

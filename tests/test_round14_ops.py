@@ -67,6 +67,15 @@ class TestContractLine:
         assert parsed["value"] == best["value"]
         assert parsed["headline_value"] == best["headline_value"]
 
+    def test_sub_5ms_rows_stay_positive(self):
+        """A positive row under 5 ms rounds to 0.0 at 2 decimals; the
+        line floors it at 0.01 so it never reads as a zero-cost row."""
+        from bench import contract_line
+
+        best = {"metric": "m", "value": 1.238, "unit": "s",
+                "queries": {"a": 0.004, "b": 1.234}, "headline_value": 1.238, "sf": 0.1}
+        assert contract_line(best)["queries"] == {"a": 0.01, "b": 1.23}
+
 
 class TestScopedConf:
     def test_sets_and_restores(self, spark):
