@@ -21,8 +21,8 @@ Five dedup strategies, all avoiding O(n²) at scale:
   corpus-sized on the driver); the approximate LSH-bucketed regime
   lives in similarity.py.
 
-Built on top of the pair generators: connected components two ways
-(min-label propagation + large-star/small-star contraction),
+Built on top of the pair generators: connected components by
+large-star/small-star contraction (one loop for every CC key),
 canonicalization by lowest id or by highest quality score,
 incremental-ingest variants (exact fingerprints and MinHash bands)
 against a historical index, and the persistent index lifecycle
@@ -698,96 +698,17 @@ def _blocked_cosine_pairs(
     )
 
 
-def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric (src, dst) edge list from the jaccard >= 0.8 pairs.
-    Returned persisted + materialized; caller unpersists."""
-    pairs, e = _ngram_pairs(spark, sf_dir)
-    pairs = pairs.select("doc_a", "doc_b")
-    edges = (
-        pairs.selectExpr("doc_a AS src", "doc_b AS dst")
-        .unionByName(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
-        .persist()
-    )
-    edges.count()
-    e.unpersist()
-    return edges
-
-
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup graph: every document in
     at least one near-dup pair, labeled with the minimum doc_id
     reachable from it (the cluster's canonical id).
 
-    Iterative min-label propagation: each round every node takes the
-    min of its own label and its neighbors'. Rounds = graph diameter
-    (near-dup clusters are shallow; single digits even at 100 TB —
-    this is the simple variant of the large-star/small-star CC
-    algorithm). Each round is one shuffle join against the static
-    edge list; convergence is checked with a cheap count.
-    """
-    edges = _near_dup_edges(spark, sf_dir)
-    out = _cc_min_label(edges)
-    edges.unpersist()
-    return out.orderBy("doc_id")
-
-
-def _cc_min_label(edges: DataFrame) -> DataFrame:
-    """Min-label-propagation connected components over a persisted
-    symmetric (src, dst) edge frame — the shared loop behind
-    dedup_clusters (jaccard graph) and dedup_semantic_clusters
-    (embedding-cosine graph). Returns the cached (doc_id, cluster_id)
-    labels; caller releases the edge frame."""
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .persist()
-    )
-    labels.count()
-    while True:
-        neigh = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("neigh_min"))
-        )
-        new_labels = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("neigh_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-                (F.col("neigh_min") < F.col("cluster_id")).alias("changed"),
-            )
-            .persist()
-        )
-        n_changed = new_labels.filter(F.col("changed")).count()
-        old = labels
-        labels = new_labels.drop("changed").persist()
-        labels.count()
-        old.unpersist()
-        new_labels.unpersist()
-        if n_changed == 0:
-            break
-    # labels is already persisted+counted by the loop; just track it as
-    # the result cache (re-persist is a no-op) — do NOT unpersist it.
-    return _cache_result(labels)
-
-
-def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) — the 100 TB-proper CC algorithm beside the
-    simple min-label propagation of dedup_clusters, with the identical
-    result (same oracle object).
-
-    Why a second CC implementation: min-label propagation needs
-    diameter-many rounds and each round re-joins the FULL static edge
-    list — fine for shallow near-dup clusters, but a long path or
-    high-degree hub costs O(diameter) shuffles of every edge.
-    Star contraction (:func:`_star_contraction_cc`) instead rewires
-    the edge set itself each round, in O(log^2 n) rounds regardless
-    of diameter.
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14; the loop
+    is :func:`_star_contraction_cc`): each round rewires the edge set
+    itself, so a long path or a high-degree hub converges in
+    O(log^2 n) rounds regardless of diameter, and the edge set
+    shrinks toward one star per component.
 
     The jaccard pairs come out of _ngram_pairs already canonical
     (doc_a < doc_b, one row per pair), so they feed the loop as
@@ -805,6 +726,10 @@ def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = _star_contraction_cc(spark, canon)
     e.unpersist()
     return labels.orderBy("doc_id")
+
+
+# Same operator under its second registry key (both share one oracle).
+dedup_clusters_bigstar = dedup_clusters
 
 
 def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
@@ -1958,22 +1883,17 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive view SemDedup-style pipelines cluster on (a ~ b ~ c
     groups all three even when cos(a, c) < T), completing the
     semantic arc: pairs (dedup_embedding_cosine) -> clusters (here)
-    -> greedy keep (dedup_semantic_keep). Same min-label-propagation
-    loop as the jaccard clusters (shared _cc_min_label), over edges
+    -> greedy keep (dedup_semantic_keep). Same star-contraction loop
+    as the jaccard clusters (shared _star_contraction_cc), over edges
     from the exact blocked pair-matmul — both halves are the
-    components already proven at scale."""
-    pairs = _cache_result(
-        _embedding_cosine_pairs(spark, sf_dir).select("vec_a", "vec_b")
-    )
-    edges = (
-        pairs.selectExpr("vec_a AS src", "vec_b AS dst")
-        .unionByName(pairs.selectExpr("vec_b AS src", "vec_a AS dst"))
-        .persist()
-    )
-    edges.count()
-    out = _cc_min_label(edges)
-    edges.unpersist()
-    return out.withColumnsRenamed({"doc_id": "vec_id"}).orderBy("vec_id")
+    components already proven at scale. The cosine pairs are already
+    distinct with vec_a < vec_b, so they feed the loop as
+    (u, v) = (vec_b, vec_a) with no symmetric edge frame; the loop's
+    first checkpoint runs the pair grid once."""
+    pairs = _embedding_cosine_pairs(spark, sf_dir)
+    canon = pairs.select(F.col("vec_b").alias("u"), F.col("vec_a").alias("v"))
+    labels = _star_contraction_cc(spark, canon)
+    return labels.withColumnsRenamed({"doc_id": "vec_id"}).orderBy("vec_id")
 
 
 def dedup_span_clean(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,7 +3,7 @@
 The customer↔supplier bipartite graph — an edge wherever a customer
 bought from a supplier (lineitem ⋈ orders, distinct pairs) — is the
 natural graph hiding in the star schema. dedup.py already runs
-connected components (min-label + large-star/small-star); this module
+connected components (large-star/small-star contraction); this module
 adds the importance/shape queries a user would run next:
 
 - q_pagerank: damped PageRank, fixed ITERATIONS rounds. The classic
@@ -37,15 +37,17 @@ Node encoding: customers at c_custkey·2, suppliers at l_suppkey·2+1
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_server_spark.catalog import load_tables
 from distributed_mapreduce_server_spark.functions import fround
 from distributed_mapreduce_server_spark.session import (
     GRAPH_EDGE_ROWS_PER_TASK,
-    data_sized_shuffle,
+    checkpointed_rdd_ids,
     scoped_conf,
+    sized_shuffle_partitions,
+    unpersist_rdd_ids,
 )
 
 # Iterative-loop label/keep frames broadcast only below this node
@@ -145,15 +147,19 @@ def _edges_with_outdeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edeg
 
 
-def _pr_round(edeg: DataFrame, pr: DataFrame) -> DataFrame:
+def _pr_round(edeg: DataFrame, pr: DataFrame, base: Column | None = None) -> DataFrame:
     """One damped PageRank round: contributions flow along edges (the
-    persisted src-partitioned frame), aggregate per destination."""
+    persisted src-partitioned frame), aggregate per destination.
+    ``base`` is the teleport term, evaluated per destination ``dst``;
+    None means the uniform F.lit(PR_BASE)."""
+    if base is None:
+        base = F.lit(PR_BASE)
     return (
         edeg.join(pr, edeg["src"] == pr["node"])
         .groupBy(F.col("dst").alias("node2"))
         .agg(
             fround(
-                F.lit(PR_BASE) + F.lit(PR_DAMPING) * F.sum(F.col("pr") / F.col("out_deg")),
+                base + F.lit(PR_DAMPING) * F.sum(F.col("pr") / F.col("out_deg")),
                 10,
             ).alias("pr")
         )
@@ -172,8 +178,9 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is cut to a leaf with eager localCheckpoint — the delta
     test forces an action per round anyway, and an uncut chain would
     re-execute geometrically once the round count is data-dependent
-    (the q_pagerank measurement notes). The delta itself is a
-    node-sized join of two checkpointed frames: no corpus-scale work
+    (the q_pagerank measurement notes). The superseded round retires
+    by its own rdd id once the delta has read it. The delta itself is
+    a node-sized join of two checkpointed frames: no corpus-scale work
     beyond the round's own join-agg. Damping guarantees termination:
     Δ contracts by ~0.85/round (measured: 1.3e+01 at round 1 ->
     8.6e-08 at round 117 at sf0.01, a clean x0.85 geometric decay —
@@ -200,6 +207,7 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max(F.abs(F.col("n.pr") - F.col("o.pr"))).alias("d"))
             .collect()[0]["d"]
         )
+        unpersist_rdd_ids(spark, checkpointed_rdd_ids(pr))
         pr = new
         n_rounds = i + 1
         if delta < PR_TOL:
@@ -271,9 +279,9 @@ def _oriented_intersections(spark: SparkSession, sf_dir: str):
     the triangle {src, dst, w}, and each triangle appears on exactly
     one row (any acyclic orientation of a triangle has exactly one
     node with out-degree 2; that node is this row's src). m is the
-    (already-eager) edge count the caller feeds to
-    session.data_sized_shuffle around its materializing action
-    (SCALING.md finding 1).
+    (already-eager) edge count the caller sizes
+    ``spark.sql.shuffle.partitions`` from (session.scoped_conf around
+    its materializing action; SCALING.md finding 1).
 
     r13 reshape (guide §2.3/§2.4, measured): the previous form
     enumerated wedges (apex, u, v) via an oriented self-join and
@@ -388,7 +396,10 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge_stats = edges.agg(F.count("*").alias("n_edges"))
     from pyspark.sql.functions import broadcast
 
-    with data_sized_shuffle(spark, m, GRAPH_EDGE_ROWS_PER_TASK):
+    with scoped_conf(
+        spark,
+        {"spark.sql.shuffle.partitions": sized_shuffle_partitions(m, GRAPH_EDGE_ROWS_PER_TASK)},
+    ):
         out = (
             node_stats.crossJoin(broadcast(edge_stats))
             .crossJoin(broadcast(tri))
@@ -496,9 +507,11 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Loop discipline: per-round frames are cut to leaves with eager
     localCheckpoint (the variable-round rule from
-    q_pagerank_converged); edges persist ONCE pre-partitioned on src,
-    so each round shuffles only the frontier (frontier ⋈ edges, then
-    an anti-join against the visited set — both keyed on node).
+    q_pagerank_converged), and each superseded visited/frontier frame
+    retires by its own rdd id once its successor is materialized;
+    edges persist ONCE pre-partitioned on src, so each round shuffles
+    only the frontier (frontier ⋈ edges, then an anti-join against
+    the visited set — both keyed on node).
     Terminates when the frontier empties, bounded by BFS_MAX_ROUNDS
     (the oracle unrolls exactly that many rounds; an empty frontier
     makes the remaining rounds no-ops in both engines, so early exit
@@ -509,6 +522,8 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(src_node, 0)], "node long, level int"
     ).localCheckpoint(eager=True)
     frontier = visited.select("node")
+    # the first frontier reads visited's own blocks
+    frontier_ids: set[int] = set()
     for lvl in range(1, BFS_MAX_ROUNDS + 1):
         nxt = (
             edges.join(frontier, edges["src"] == frontier["node"])
@@ -517,12 +532,16 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(visited, "node", "left_anti")
             .localCheckpoint(eager=True)
         )
+        nxt_ids = checkpointed_rdd_ids(nxt)
         if nxt.count() == 0:
+            unpersist_rdd_ids(spark, nxt_ids)
             break
-        visited = visited.unionAll(
+        new_visited = visited.unionAll(
             nxt.withColumn("level", F.lit(lvl))
         ).localCheckpoint(eager=True)
-        frontier = nxt
+        unpersist_rdd_ids(spark, checkpointed_rdd_ids(visited) | frontier_ids)
+        visited, frontier, frontier_ids = new_visited, nxt, nxt_ids
+    unpersist_rdd_ids(spark, frontier_ids)
     edges.unpersist()
     return (
         visited.groupBy("level")
@@ -654,11 +673,11 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than global PageRank backs most production
     who-to-recommend systems.
 
-    Same loop discipline as q_pagerank (persisted src-partitioned
-    edge frame, linear lineage, per-round fround(10) pinning both
-    engines to one grid); the only changes are the seed-concentrated
-    base term and pr₀ = 1 at the seed, 0 elsewhere. The seed id is a
-    1-row bounded collect. Output is the top-PPR_TOP_K nodes by
+    Same loop as q_pagerank (the shared _pr_round over the persisted
+    src-partitioned edge frame, linear lineage, per-round fround(10)
+    pinning both engines to one grid); the only changes are the
+    seed-concentrated base term and pr₀ = 1 at the seed, 0
+    elsewhere. The seed id is a 1-row bounded collect. Output is the top-PPR_TOP_K nodes by
     (rounded) rank — rank mass outside the seed's neighborhood decays
     geometrically, so the top-K is the useful recommendation slate."""
     edeg = _edges_with_outdeg(spark, sf_dir)
@@ -670,19 +689,9 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("pr", F.when(F.col("node") == seed, 1.0).otherwise(0.0))
     )
+    base = F.when(F.col("dst") == seed, F.lit(PR_BASE)).otherwise(F.lit(0.0))
     for _ in range(PR_ITERATIONS):
-        pr = (
-            edeg.join(pr, edeg["src"] == pr["node"])
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(
-                fround(
-                    F.when(F.col("dst") == seed, F.lit(PR_BASE)).otherwise(F.lit(0.0))
-                    + F.lit(PR_DAMPING) * F.sum(F.col("pr") / F.col("out_deg")),
-                    10,
-                ).alias("pr")
-            )
-            .select(F.col("node2").alias("node"), "pr")
-        )
+        pr = _pr_round(edeg, pr, base)
     out = (
         pr.select(
             F.col("node").alias("node_id"),
@@ -752,7 +761,10 @@ def q_graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .orderBy("d")
     )
-    with data_sized_shuffle(spark, m, GRAPH_EDGE_ROWS_PER_TASK):
+    with scoped_conf(
+        spark,
+        {"spark.sql.shuffle.partitions": sized_shuffle_partitions(m, GRAPH_EDGE_ROWS_PER_TASK)},
+    ):
         out = out.localCheckpoint(eager=True)
     edges.unpersist()
     deg.unpersist()
@@ -794,11 +806,6 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session.checkpointed_rdd_ids — the concurrency-safe discipline).
     Rounds are FIXED, so the DuckDB oracle unrolls the same peel as
     MATERIALIZED CTEs."""
-    from distributed_mapreduce_server_spark.session import (
-        checkpointed_rdd_ids,
-        unpersist_rdd_ids,
-    )
-
     # lazy checkpoint: the count below is the materializing action
     # (one job, not checkpoint-then-count).
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
@@ -830,49 +837,49 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep_ids: set[int] = set()
     stats = []  # per round: (n_keep, tot_edges_of_input)
     bcast = True
-    with data_sized_shuffle(spark, m, GRAPH_EDGE_ROWS_PER_TASK):
-        # rounds 1..R restrict by the previous survivor set; one extra
-        # pass after round R prices row R's surviving-edge count.
-        for r in range(KCORE_ROUNDS + 1):
-            e_r = edges
-            if keep is not None:
-                keep_u = keep.select(F.col("node").alias("u"))
-                keep_v = keep.select(F.col("node").alias("v"))
-                if bcast:
-                    keep_u, keep_v = F.broadcast(keep_u), F.broadcast(keep_v)
-                e_r = e_r.join(keep_u, "u", "left_semi").join(
-                    keep_v, "v", "left_semi"
-                )
-            with scoped_conf(
-                spark,
-                {"spark.sql.adaptive.enabled": "false"}
-                if (bcast and keep is not None)
-                else {},
-            ):
-                # explode(array(u, v)) = the same endpoint multiset as
-                # union(select u, select v) in ONE scan of the edge
-                # frame instead of two (measured 1.12 -> 0.82 s for the
-                # degree job at sf0.1).
-                deg = (
-                    e_r.select(F.explode(F.array("u", "v")).alias("node"))
-                    .groupBy("node")
-                    .agg(F.count("*").alias("d"))
-                    .localCheckpoint(eager=False)
-                )
-                deg_ids = checkpointed_rdd_ids(deg)
-                row = deg.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("d") >= KCORE_K, 1)), F.lit(0)
-                    ).alias("n_keep"),
-                    F.coalesce((F.sum("d") / 2).cast("bigint"), F.lit(0)).alias(
-                        "tot_edges"
-                    ),
-                ).collect()[0]
-            stats.append((int(row["n_keep"]), int(row["tot_edges"])))
-            unpersist_rdd_ids(spark, keep_ids)
-            keep = deg.filter(F.col("d") >= KCORE_K).select("node")
-            keep_ids = deg_ids
-            bcast = bcast and row["n_keep"] <= LOOP_BROADCAST_MAX_NODES
+    shuffle = {
+        "spark.sql.shuffle.partitions": sized_shuffle_partitions(m, GRAPH_EDGE_ROWS_PER_TASK)
+    }
+    # rounds 1..R restrict by the previous survivor set; one extra
+    # pass after round R prices row R's surviving-edge count.
+    for r in range(KCORE_ROUNDS + 1):
+        e_r = edges
+        if keep is not None:
+            keep_u = keep.select(F.col("node").alias("u"))
+            keep_v = keep.select(F.col("node").alias("v"))
+            if bcast:
+                keep_u, keep_v = F.broadcast(keep_u), F.broadcast(keep_v)
+            e_r = e_r.join(keep_u, "u", "left_semi").join(keep_v, "v", "left_semi")
+        with scoped_conf(
+            spark,
+            {**shuffle, "spark.sql.adaptive.enabled": "false"}
+            if (bcast and keep is not None)
+            else shuffle,
+        ):
+            # explode(array(u, v)) = the same endpoint multiset as
+            # union(select u, select v) in ONE scan of the edge frame
+            # instead of two (measured 1.12 -> 0.82 s for the degree
+            # job at sf0.1).
+            deg = (
+                e_r.select(F.explode(F.array("u", "v")).alias("node"))
+                .groupBy("node")
+                .agg(F.count("*").alias("d"))
+                .localCheckpoint(eager=False)
+            )
+            deg_ids = checkpointed_rdd_ids(deg)
+            row = deg.agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("d") >= KCORE_K, 1)), F.lit(0)
+                ).alias("n_keep"),
+                F.coalesce((F.sum("d") / 2).cast("bigint"), F.lit(0)).alias(
+                    "tot_edges"
+                ),
+            ).collect()[0]
+        stats.append((int(row["n_keep"]), int(row["tot_edges"])))
+        unpersist_rdd_ids(spark, keep_ids)
+        keep = deg.filter(F.col("d") >= KCORE_K).select("node")
+        keep_ids = deg_ids
+        bcast = bcast and row["n_keep"] <= LOOP_BROADCAST_MAX_NODES
     unpersist_rdd_ids(spark, keep_ids | edge_ids)
     # row r reports the survivors of round r's filter and the edge set
     # RESTRICTED to them — which is exactly round r+1's input size.
@@ -923,11 +930,6 @@ def q_graph_community_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame's OWN rdd id (session.checkpointed_rdd_ids — the
     concurrency-safe discipline). Rounds are FIXED, so the DuckDB
     oracle unrolls the same propagation as MATERIALIZED CTEs."""
-    from distributed_mapreduce_server_spark.session import (
-        checkpointed_rdd_ids,
-        unpersist_rdd_ids,
-    )
-
     # lazy checkpoint: the count below materializes it in one job.
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     edge_ids = checkpointed_rdd_ids(edges)
@@ -937,7 +939,10 @@ def q_graph_community_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    with data_sized_shuffle(spark, m, GRAPH_EDGE_ROWS_PER_TASK):
+    with scoped_conf(
+        spark,
+        {"spark.sql.shuffle.partitions": sized_shuffle_partitions(m, GRAPH_EDGE_ROWS_PER_TASK)},
+    ):
         labels = (
             und.select(F.col("src").alias("node"))
             .distinct()

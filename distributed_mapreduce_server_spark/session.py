@@ -120,33 +120,19 @@ def sized_shuffle_partitions(
 
 
 @contextlib.contextmanager
-def data_sized_shuffle(spark: SparkSession, n_rows: int, rows_per_task: int):
-    """Scope ``spark.sql.shuffle.partitions`` to a value sized from a
-    MEASURED input row count (an eager edge/frame count the operator
-    already takes), restoring the previous value on exit. The conf is
-    read at ACTION time, so callers must wrap the materializing action
-    (count / eager localCheckpoint), not just plan construction.
+def scoped_conf(spark: SparkSession, confs: dict[str, str | int]):
+    """Scope arbitrary SQL confs (r14): set each key=value, restore the
+    previous values on exit. Confs are read when a query is planned,
+    so callers must wrap the materializing action (count / collect /
+    localCheckpoint), not just plan construction.
 
     Single-threaded-session assumption (the same one
-    persistent_rdd_ids documents): the conf is session-global, so a
-    concurrent query materializing inside the window inherits the
-    raised value — harmless (AQE coalesces) but worth knowing."""
-    target = sized_shuffle_partitions(n_rows, rows_per_task)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
-        yield target
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    persistent_rdd_ids documents): the confs are session-global, so a
+    concurrent query planned inside the window inherits them.
 
-
-@contextlib.contextmanager
-def scoped_conf(spark: SparkSession, confs: dict[str, str]):
-    """Scope arbitrary SQL confs (r14): set each key=value, restore the
-    previous values on exit. Same ACTION-time caveat and
-    single-threaded-session assumption as :func:`data_sized_shuffle`.
-
-    First use: switching AQE off around fixed-shape iterative loops
+    Uses: ``spark.sql.shuffle.partitions`` sized from a MEASURED row
+    count (:func:`sized_shuffle_partitions` — the graph operators'
+    edge counts), and switching AQE off around fixed-shape iterative loops
     (graph rounds) whose joins are explicitly broadcast-hinted — AQE's
     per-job re-planning and separate broadcast-materialization jobs
     dominate a sub-second round, and nothing in a fixed broadcast+agg

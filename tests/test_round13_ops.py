@@ -9,7 +9,7 @@ import pytest
 from distributed_mapreduce_server_spark.session import (
     GRAPH_EDGE_ROWS_PER_TASK,
     MAX_SIZED_PARTITIONS,
-    data_sized_shuffle,
+    scoped_conf,
     sized_shuffle_partitions,
 )
 
@@ -49,7 +49,8 @@ class TestDataSizedShuffleScope:
     def test_sets_and_restores_conf(self, spark):
         key = "spark.sql.shuffle.partitions"
         before = spark.conf.get(key)
-        with data_sized_shuffle(spark, 11_997_046, GRAPH_EDGE_ROWS_PER_TASK) as target:
+        target = sized_shuffle_partitions(11_997_046, GRAPH_EDGE_ROWS_PER_TASK)
+        with scoped_conf(spark, {key: target}):
             assert target == 128
             assert spark.conf.get(key) == "128"
         assert spark.conf.get(key) == before
@@ -58,7 +59,9 @@ class TestDataSizedShuffleScope:
         key = "spark.sql.shuffle.partitions"
         before = spark.conf.get(key)
         with pytest.raises(RuntimeError):
-            with data_sized_shuffle(spark, 10**9, GRAPH_EDGE_ROWS_PER_TASK):
+            with scoped_conf(
+                spark, {key: sized_shuffle_partitions(10**9, GRAPH_EDGE_ROWS_PER_TASK)}
+            ):
                 raise RuntimeError("boom")
         assert spark.conf.get(key) == before
 
