@@ -6,6 +6,11 @@ applyInPandasWithState. Both run with the availableNow trigger so
 batch-equivalence is testable (stream result == the batch operators in
 operators/events.py), which is also how a backfill over 100 TB of
 history would run: same code, bounded trigger.
+
+A file stream needs its schema up front: every stream here takes it
+from the table's parquet footer through the catalog (no Spark job),
+and the events stream converts ts with the catalog's own
+``normalize_timestamps``.
 """
 
 from __future__ import annotations
@@ -19,38 +24,32 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
 
+from distributed_mapreduce_server_spark.catalog import normalize_timestamps, parquet_footer
 from distributed_mapreduce_server_spark.operators.events import SESSION_GAP_SECONDS
 from distributed_mapreduce_server_spark.functions import fround
 
 
-def _normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Match the batch catalog's timestamp normalization: the driver has
-    shipped `ts` both as INT64 nanos (read as bigint under
-    nanosAsLong) and as naive timestamp[us] (read as TIMESTAMP_NTZ).
-    Either way, emit TIMESTAMP — value-preserving under the UTC
-    session timezone."""
-    dt = dict(df.dtypes)[col]
-    if dt == "bigint":
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    elif dt == "timestamp_ntz":
-        df = df.withColumn(col, F.col(col).cast("timestamp"))
-    return df
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` replayed as a file stream with its footer schema,
+    columns as on disk (ts of events stays bigint nanos or
+    TIMESTAMP_NTZ). The sf dir holds one parquet file per table; the
+    file-stream source wants a directory, so glob-filter down to the
+    table's file."""
+    path = f"{sf_dir}/{name}.parquet"
+    return (
+        spark.readStream.schema(parquet_footer(path)[0])
+        .format("parquet")
+        .option("pathGlobFilter", f"{name}.parquet")
+        .load(sf_dir)
+    )
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # schema must match the file exactly (ts is INT64 nanos on disk),
-    # so take it from a raw batch read, not the converted catalog.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the sf dir holds one parquet file per table; the file-stream
-    # source wants a directory, so glob-filter down to the events file.
-    return _normalize_ts(
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    """The events stream with ts as TIMESTAMP, converted exactly like
+    the batch catalog converts it."""
+    return normalize_timestamps("events", _table_stream(spark, sf_dir, "events"))
 
 
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -190,12 +189,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from distributed_mapreduce_server_spark.functions import tokens
 
-    docs = (
-        spark.readStream.schema(spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    docs = _table_stream(spark, sf_dir, "documents")
     fp = F.md5(F.array_join(tokens("text"), " "))
     agg = (
         docs.select("doc_id", fp.alias("fingerprint"))
@@ -216,16 +210,9 @@ def stream_static_join_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import broadcast
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ev = (
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    ev = _normalize_ts(ev)
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    ev = _events_stream(spark, sf_dir)
+    cust_path = f"{sf_dir}/customer.parquet"
+    cust = spark.read.schema(parquet_footer(cust_path)[0]).parquet(cust_path).select(
         "c_custkey", "c_mktsegment"
     )
     joined = ev.join(broadcast(cust), ev.user_id == cust.c_custkey)
@@ -246,18 +233,9 @@ def _click_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFram
     both watermarked sides, the range predicate, and the output
     projection live HERE so the inner and left-outer variants cannot
     drift (only the join type differs)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def side(event_type: str, prefix: str) -> DataFrame:
-        s = (
-            spark.readStream.schema(raw_schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
-        s = _normalize_ts(s)
-        s = s.filter(F.col("event_type") == event_type)
+        s = _events_stream(spark, sf_dir).filter(F.col("event_type") == event_type)
         return s.select(
             F.col("event_id").alias(f"{prefix}_id"),
             F.col("user_id").alias(f"{prefix}_user"),
@@ -307,12 +285,7 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from distributed_mapreduce_server_spark.functions import tokens
 
-    docs = (
-        spark.readStream.schema(spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    docs = _table_stream(spark, sf_dir, "documents")
     agg = (
         docs.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
@@ -324,18 +297,19 @@ def stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_ingest_partitioned(
     spark: SparkSession, sf_dir: str, out_dir: str, ckpt_dir: str
-) -> None:
+) -> StructType:
     """The canonical ingest pipeline: the event stream written to a
     date-partitioned parquet sink (hive layout, one directory per
     event_date) with the file sink's exactly-once manifest + the
     checkpoint for restart recovery. availableNow here; on an
     unbounded stream the same code runs with a processing-time
     trigger. Downstream batch queries on the sink get partition
-    pruning on event_date for free."""
-    ev = _events_stream(spark, sf_dir)
+    pruning on event_date for free. Returns the sink's schema, so a
+    reader needs no inference job (nor files: an empty source lands
+    none)."""
+    ev = _events_stream(spark, sf_dir).withColumn("event_date", F.to_date("ts"))
     q = (
-        ev.withColumn("event_date", F.to_date("ts"))
-        .writeStream.format("parquet")
+        ev.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt_dir)
         .partitionBy("event_date")
@@ -343,6 +317,7 @@ def stream_ingest_partitioned(
         .start()
     )
     q.awaitTermination()
+    return ev.schema
 
 
 def stream_ingest_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -352,7 +327,9 @@ def stream_ingest_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle verifies the whole write path (manifest commit included),
     not just the in-memory stream. Deterministic under availableNow:
     the sink holds exactly the source events, value-for-value, plus
-    the derived hive partition column."""
+    the derived hive partition column. The sink is read with the
+    schema the ingest wrote, so an empty events table reads back as
+    0 rows instead of failing Spark's schema inference."""
     import hashlib
     import shutil
 
@@ -360,9 +337,9 @@ def stream_ingest_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = f"{tempfile.gettempdir()}/dmrs_stream_ingest_{tag}"
     shutil.rmtree(base, ignore_errors=True)  # fresh run each call
     out_dir, ckpt_dir = f"{base}/out", f"{base}/ckpt"
-    stream_ingest_partitioned(spark, sf_dir, out_dir, ckpt_dir)
+    schema = stream_ingest_partitioned(spark, sf_dir, out_dir, ckpt_dir)
     return (
-        spark.read.parquet(out_dir)
+        spark.read.schema(schema).parquet(out_dir)
         .select(
             "event_id",
             "ts",
@@ -854,14 +831,7 @@ def stream_model_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         model_quality_frame,
     )
 
-    docs = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    docs = _table_stream(spark, sf_dir, "documents")
     kept = (
         model_quality_frame(docs)
         .filter(F.col("keep"))
@@ -984,14 +954,7 @@ def stream_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_server_spark.functions import tokens
     from distributed_mapreduce_server_spark.operators.search import PHRASE_QUERIES
 
-    docs = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    docs = _table_stream(spark, sf_dir, "documents")
     toks = docs.select(tokens("text").alias("toks")).filter(F.size("toks") >= 2)
     bigrams = toks.select(
         F.explode(
@@ -1051,14 +1014,7 @@ def stream_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         kl_from_source_counts,
     )
 
-    docs = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    docs = _table_stream(spark, sf_dir, "documents")
     counts = (
         docs.select("source", F.explode(tokens("text")).alias("tok"))
         .groupBy("source", "tok")
@@ -1086,14 +1042,7 @@ def stream_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         bursts_from_hourly,
     )
 
-    ev = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    ev = _table_stream(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("m")
     ).agg(F.count("*").alias("n"))
@@ -1333,9 +1282,8 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in os.listdir(f"{src_dir}/{d}"):
             os.utime(f"{src_dir}/{d}/{f}", (now - 3600 + i, now - 3600 + i))
 
-    schema = spark.read.parquet(src_dir + "/" + parts[0]).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_footer(f"{src_dir}/{parts[0]}")[0])
         .format("parquet")
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")

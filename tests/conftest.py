@@ -29,3 +29,17 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_smoke():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def sf_empty(tmp_path_factory):
+    """Every table of the smoke set with its schema and no rows."""
+    import pyarrow.parquet as pq
+
+    from distributed_mapreduce_server_spark.catalog import TABLES
+
+    out = tmp_path_factory.mktemp("sf_empty")
+    for t in TABLES:
+        tbl = pq.read_table(f"{SF_SMOKE}/{t}.parquet")
+        pq.write_table(tbl.slice(0, 0), str(out / f"{t}.parquet"))
+    return str(out)

@@ -115,7 +115,7 @@ def test_stream_ingest_partitioned_layout_and_pruning(spark, sf_smoke, tmp_path)
     from distributed_mapreduce_server_spark.streaming.jobs import stream_ingest_partitioned
 
     out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    stream_ingest_partitioned(spark, sf_smoke, out, ckpt)
+    schema = stream_ingest_partitioned(spark, sf_smoke, out, ckpt)
 
     part_dirs = [d for d in os.listdir(out) if d.startswith("event_date=")]
     assert len(part_dirs) > 1
@@ -124,6 +124,8 @@ def test_stream_ingest_partitioned_layout_and_pruning(spark, sf_smoke, tmp_path)
     n_src = spark.read.parquet(f"{sf_smoke}/events.parquet").count()
     back = spark.read.parquet(out)
     assert back.count() == n_src
+    # the returned schema is the one Spark infers over the landed sink
+    assert back.schema == schema
 
     n_files_before = sum(len(fs) for _, _, fs in os.walk(out))
     stream_ingest_partitioned(spark, sf_smoke, out, ckpt)  # same checkpoint
@@ -134,6 +136,24 @@ def test_stream_ingest_partitioned_layout_and_pruning(spark, sf_smoke, tmp_path)
     pruned = back.filter(F.col("event_date") == one_day)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "event_date" in plan
+
+
+def test_stream_ingest_readback_on_empty_events_matches_oracle(spark, sf_empty):
+    """Degenerate input: over an empty events table the ingest lands no
+    data file, and the read-back returns 0 rows, as the DuckDB oracle
+    does (Spark's schema inference over the empty sink would fail)."""
+    from distributed_mapreduce_server_spark import registry
+    from tests.oracle_utils import compare, duckdb_conn
+
+    key = "stream_ingest_partitioned"  # runs stream_ingest_readback
+    df = registry.all_queries()[key](spark, sf_empty)
+    con = duckdb_conn(sf_empty)
+    try:
+        problems = compare(df, con, registry.all_oracles()[key])
+    finally:
+        con.close()
+    assert not problems, "; ".join(problems)
+    assert df.count() == 0
 
 
 def test_upsert_sink_checkpoint_restart_is_noop(spark, sf_smoke, tmp_path_factory):
