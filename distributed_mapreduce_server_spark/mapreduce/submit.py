@@ -54,7 +54,7 @@ class ExecJobSpec:
     """The reference submit payload with REAL executables (reference:
     mapreduce/submit.py posts mapper_executable/reducer_executable;
     the manager pipes files through them). Runs via
-    exec_job.run_executable_job."""
+    :func:`submit_exec`."""
 
     input_directory: str
     output_directory: str
@@ -68,30 +68,28 @@ class ExecJobSpec:
     per_file: bool = False
 
 
-def submit_exec(spark: SparkSession, spec: ExecJobSpec) -> DataFrame:
+def submit_exec(spark: SparkSession, spec: ExecJobSpec) -> None:
     """Run an executable job and wrap up like the reference manager:
     one ``outputfileNN`` per reducer group in the output directory
     (reference: mapreduce/manager/__main__.py:490-505 moves
     reducer-output files to outputfile01..NN).
 
-    Reducer output is written EXECUTOR-SIDE via a hive-partitioned
-    text write (``part=N`` directories, each filled by the reducer
-    partition that owns it), then renamed to the reference's
-    outputfileNN layout — the driver never materializes a single
-    reducer line, so an identity reduce over a huge grep is bounded
-    by the sink, not driver memory. Line order inside a file is the
-    reducer's stdout order (the text writer preserves task row
-    order), and empty reducer groups still get their (empty) file —
-    the reference's wrap-up contract."""
+    The job's one action is an EXECUTOR-SIDE text write of the reducer
+    stdout frame (exec_job.reduced_lines) into ``_spark_staging``, one
+    file per task, so reducer *i* writes ``part-{i:05d}-*`` in its stdout
+    order; the driver then renames each such file to
+    ``outputfile{i+1:02d}`` and never reads a reducer line. A reducer
+    group that printed nothing writes no file and gets an empty
+    ``outputfileNN`` (the reference's wrap-up contract). An existing
+    output directory is reused: ``outputfile01..NN`` are replaced."""
     import glob
     import os
     import shutil
 
-    from distributed_mapreduce_server_spark.mapreduce.exec_job import (
-        run_executable_job,
-    )
+    from distributed_mapreduce_server_spark.mapreduce.exec_job import reduced_lines
 
-    result = run_executable_job(
+    staging = os.path.join(spec.output_directory, "_spark_staging")
+    with reduced_lines(
         spark,
         spec.input_directory,
         spec.mapper_executable,
@@ -99,20 +97,17 @@ def submit_exec(spark: SparkSession, spec: ExecJobSpec) -> DataFrame:
         num_mappers=spec.num_mappers,
         num_reducers=spec.num_reducers,
         per_file=spec.per_file,
-    )
-    os.makedirs(spec.output_directory, exist_ok=True)
-    staging = os.path.join(spec.output_directory, "_spark_staging")
-    shutil.rmtree(staging, ignore_errors=True)
-    result.write.mode("overwrite").partitionBy("part").text(staging)
+    ) as reduced:
+        # maxRecordsPerFile 0: one file per task whatever the session's cap
+        reduced.write.mode("overwrite").option("maxRecordsPerFile", 0).text(staging)
     for part in range(spec.num_reducers):
         dst = os.path.join(spec.output_directory, f"outputfile{part + 1:02d}")
-        srcs = sorted(glob.glob(os.path.join(staging, f"part={part}", "part-*")))
-        with open(dst, "wb") as out:
-            for src in srcs:
-                with open(src, "rb") as f:
-                    shutil.copyfileobj(f, out)
-    shutil.rmtree(staging, ignore_errors=True)
-    return result
+        src = glob.glob(os.path.join(staging, f"part-{part:05d}-*"))
+        if src:
+            os.replace(src[0], dst)
+        else:
+            open(dst, "wb").close()
+    shutil.rmtree(staging)
 
 
 class JobState:

@@ -2418,16 +2418,17 @@ def q_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = totals.rows
     # Σx comes FREE from the kernel's stats pass (totals.sums) — no
-    # second aggregation over the revenue frame.
-    total = totals.sums["rev_c"] / 100.0
+    # second aggregation over the revenue frame. With no orders (n = 0)
+    # the sum of no rows is NULL and x / 0 is NULL, as in DuckDB.
+    total = F.lit(totals.sums["rev_c"] / 100.0 if n else None).cast("double")
     srx = ranked.agg(F.sum(F.col("rk") * F.col("rev")).alias("srx"))
     out = (
         srx.select(
             F.lit(n).cast("bigint").alias("n_customers"),
-            F.lit(total).alias("total_revenue"),
+            total.alias("total_revenue"),
             fround(
-                F.lit(2.0) * F.col("srx") / (F.lit(float(n)) * F.lit(total))
-                - (F.lit(float(n + 1)) / F.lit(float(n))),
+                F.try_divide(F.lit(2.0) * F.col("srx"), F.lit(float(n)) * total)
+                - F.try_divide(F.lit(float(n + 1)), F.lit(float(n))),
                 6,
             ).alias("gini"),
         )

@@ -1517,9 +1517,10 @@ def text_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_langs",
             "n_sources",
             "n_exact_dupes",
-            fround(F.col("n_exact_dupes") / F.col("n_docs"), 4).alias("dup_rate"),
+            # try_divide: an empty corpus gives NULL rates, as in DuckDB
+            fround(F.try_divide("n_exact_dupes", "n_docs"), 4).alias("dup_rate"),
             "n_quality_keep",
-            fround(F.col("n_quality_keep") / F.col("n_docs"), 4).alias("quality_keep_rate"),
+            fround(F.try_divide("n_quality_keep", "n_docs"), 4).alias("quality_keep_rate"),
             "avg_token_entropy",
         )
     )

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from distributed_mapreduce_server_spark.catalog import normalize_timestamps, parquet_footer
 from distributed_mapreduce_server_spark.operators.events import SESSION_GAP_SECONDS
@@ -50,6 +50,16 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events stream with ts as TIMESTAMP, converted exactly like
     the batch catalog converts it."""
     return normalize_timestamps("events", _table_stream(spark, sf_dir, "events"))
+
+
+def _read_written(spark: SparkSession, schema: StructType, *paths: str) -> DataFrame:
+    """Parquet this module wrote, read with the schema it wrote (no
+    inference job). A path never written (no micro-batch had rows)
+    reads as no rows, so an empty stream gives an empty frame of that
+    schema; hive partition dirs still add their columns."""
+    import os
+
+    return spark.read.schema(schema).parquet(*[p for p in paths if os.path.isdir(p)])
 
 
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -448,6 +458,12 @@ def stream_trending_topk_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 UPSERT_BUCKETS = 16
 
 
+def _upsert_bucket():
+    """The state table's hive partition column, bucket = hash(user_id)
+    mod UPSERT_BUCKETS."""
+    return F.pmod(F.xxhash64("user_id"), F.lit(UPSERT_BUCKETS)).cast("int")
+
+
 def upsert_apply_batch(state_dir: str):
     """foreachBatch body for the hash-bucketed CDC upsert sink
     (module-level so tests can drive micro-batches directly).
@@ -490,10 +506,7 @@ def upsert_apply_batch(state_dir: str):
             batch_df.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .drop("rn")
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("user_id"), F.lit(UPSERT_BUCKETS)).cast("int"),
-            )
+            .withColumn("bucket", _upsert_bucket())
         )
         latest = latest.persist()
         touched = sorted(
@@ -504,7 +517,7 @@ def upsert_apply_batch(state_dir: str):
             return
         if os.path.isdir(state_dir):
             # partition-pruned read: only the touched bucket dirs
-            current = sess.read.parquet(state_dir).filter(
+            current = _read_written(sess, latest.schema, state_dir).filter(
                 F.col("bucket").isin(touched)
             )
             merged = (
@@ -601,7 +614,7 @@ def stream_upsert_foreachbatch(
         .start()
     )
     q.awaitTermination()
-    final = spark.read.parquet(state_dir)
+    final = _read_written(spark, ev.withColumn("bucket", _upsert_bucket()).schema, state_dir)
     return final.select(
         "user_id",
         "event_type",
@@ -841,6 +854,19 @@ def stream_model_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("doc_id")
 
 
+def _minute_partials(events: DataFrame) -> DataFrame:
+    """Per-minute (count, raw value sum) rows of ``events``, tagged with
+    their ``day``: the rollup state table's rows and schema."""
+    return (
+        events.groupBy(F.date_trunc("minute", "ts").alias("bucket_start"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum("value").alias("sum_value"),
+        )
+        .withColumn("day", F.date_format("bucket_start", "yyyy-MM-dd"))
+    )
+
+
 def rollup_apply_batch(state_dir: str):
     """foreachBatch body for stream_hierarchical_rollup: ADDITIVE merge
     of the micro-batch's minute partials into a day-partitioned minute
@@ -860,21 +886,15 @@ def rollup_apply_batch(state_dir: str):
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        partial = (
-            batch_df.groupBy(F.date_trunc("minute", "ts").alias("bucket_start"))
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum("value").alias("sum_value"),
-            )
-            .withColumn("day", F.date_format("bucket_start", "yyyy-MM-dd"))
-            .persist()
-        )
+        partial = _minute_partials(batch_df).persist()
         touched = sorted(r["day"] for r in partial.select("day").distinct().collect())
         if not touched:
             partial.unpersist()
             return
         if os.path.isdir(state_dir):
-            current = sess.read.parquet(state_dir).filter(F.col("day").isin(touched))
+            current = _read_written(sess, partial.schema, state_dir).filter(
+                F.col("day").isin(touched)
+            )
             merged = (
                 current.unionByName(partial)
                 .groupBy("day", "bucket_start")
@@ -931,7 +951,7 @@ def stream_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    minute = spark.read.parquet(state_dir).select(
+    minute = _read_written(spark, _minute_partials(ev).schema, state_dir).select(
         "bucket_start",
         "n_events",
         fround(F.col("sum_value"), 2).alias("total_value"),
@@ -1104,8 +1124,9 @@ def neardup_apply_batch(index_dir: str, state_dir: str, cutoff: int):
         _shingle_rows_from,
     )
 
-    def _prior(sess, d: str, batch_id: int):
-        """Frame of every batch < batch_id landed under d, or None.
+    def _prior(sess, d: str, batch_id: int, schema: StructType):
+        """Frame of every batch < batch_id landed under d (each written
+        with ``schema``), or None.
         Partition inference turns the batch=N subdirs into an int
         column; incomplete replay leftovers (the current batch's own
         subdir) are excluded by the filter."""
@@ -1118,7 +1139,7 @@ def neardup_apply_batch(index_dir: str, state_dir: str, cutoff: int):
         ]
         if not prior:
             return None
-        return sess.read.parquet(*[f"{d}/{x}" for x in prior]).drop("batch")
+        return _read_written(sess, schema, *[f"{d}/{x}" for x in prior]).drop("batch")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1132,11 +1153,14 @@ def neardup_apply_batch(index_dir: str, state_dir: str, cutoff: int):
         sigb.count()
         bandsb = bandsb.persist()
         bandsb.count()
+        sizesb = sigb.select("doc_id", "n_sh")
 
-        idx_bands = spark.read.parquet(f"{index_dir}/bands")
+        # the index tables hold the same shapes as this batch's frames
+        # (dedup_index_build runs the same shingle and band functions)
+        idx_bands = _read_written(spark, bandsb.schema, f"{index_dir}/bands")
         old_sides = [idx_bands]
         ext_bands_dir = f"{state_dir}/ext_bands"
-        ext_bands = _prior(spark, ext_bands_dir, batch_id)
+        ext_bands = _prior(spark, ext_bands_dir, batch_id, bandsb.schema)
         if ext_bands is not None:
             old_sides.append(ext_bands)
         bb = bandsb.alias("bb")
@@ -1173,13 +1197,12 @@ def neardup_apply_batch(index_dir: str, state_dir: str, cutoff: int):
             .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
             .distinct()
         )
-        e_sides = [eb, spark.read.parquet(f"{index_dir}/shingles").join(cand_ids, "doc_id", "left_semi")]
-        size_sides = [
-            sigb.select("doc_id", "n_sh"),
-            spark.read.parquet(f"{index_dir}/sizes").join(cand_ids, "doc_id", "left_semi"),
-        ]
-        ext_sh = _prior(spark, f"{state_dir}/ext_shingles", batch_id)
-        ext_sz = _prior(spark, f"{state_dir}/ext_sizes", batch_id)
+        idx_sh = _read_written(spark, eb.schema, f"{index_dir}/shingles")
+        idx_sz = _read_written(spark, sizesb.schema, f"{index_dir}/sizes")
+        e_sides = [eb, idx_sh.join(cand_ids, "doc_id", "left_semi")]
+        size_sides = [sizesb, idx_sz.join(cand_ids, "doc_id", "left_semi")]
+        ext_sh = _prior(spark, f"{state_dir}/ext_shingles", batch_id, eb.schema)
+        ext_sz = _prior(spark, f"{state_dir}/ext_sizes", batch_id, sizesb.schema)
         if ext_sh is not None:
             e_sides.append(ext_sh.join(cand_ids, "doc_id", "left_semi"))
         if ext_sz is not None:
@@ -1221,9 +1244,7 @@ def neardup_apply_batch(index_dir: str, state_dir: str, cutoff: int):
         # extension index grows by the WHOLE batch
         bandsb.write.mode("overwrite").parquet(f"{ext_bands_dir}/{sub}")
         eb.write.mode("overwrite").parquet(f"{state_dir}/ext_shingles/{sub}")
-        sigb.select("doc_id", "n_sh").write.mode("overwrite").parquet(
-            f"{state_dir}/ext_sizes/{sub}"
-        )
+        sizesb.write.mode("overwrite").parquet(f"{state_dir}/ext_sizes/{sub}")
         for frame in (status, cand, bandsb, sigb, eb):
             frame.unpersist()
 
@@ -1301,6 +1322,7 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     # batch=N is a partition column after the idempotent-sink change;
     # the operator's contract (and oracle) is (doc_id, status) only.
-    out = spark.read.parquet(f"{state_dir}/status").select("doc_id", "status")
+    status_schema = StructType([docs.schema["doc_id"], StructField("status", StringType())])
+    out = _read_written(spark, status_schema, f"{state_dir}/status").select("doc_id", "status")
     result = spark.createDataFrame(out.collect(), out.schema)
     return result.orderBy("doc_id")

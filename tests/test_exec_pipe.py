@@ -93,7 +93,8 @@ def test_exec_reducer_assignment_is_sorted_round_robin(spark, corpus_dir):
         assert r["part"] == expected[r["word"]]
 
 
-def test_exec_mapper_failure_raises(spark, corpus_dir):
+@pytest.mark.parametrize("per_file", [False, True])
+def test_exec_mapper_failure_raises(spark, corpus_dir, per_file):
     """A non-zero mapper exit must fail the job with its exit status,
     not silently truncate output — the analog of the reference's task
     status: failed path."""
@@ -103,6 +104,7 @@ def test_exec_mapper_failure_raises(spark, corpus_dir):
             corpus_dir,
             f"{PY} -c 'import sys; sys.exit(3)'",
             _cmd("identity_reduce.py"),
+            per_file=per_file,
         ).collect()
 
 
@@ -231,15 +233,32 @@ def test_submit_exec_empty_input_dir(spark, tmp_path_factory, per_file):
         assert os.path.getsize(os.path.join(outdir, f)) == 0, f
 
 
+def _per_file_corpus(d) -> list[int]:
+    """Four files — one empty, one with no final newline — whose tokens
+    are alpha, beta, gamma twice each; returns the file sizes."""
+    bodies = ["alpha beta\n", "beta gamma\nalpha\n", "gamma", ""]
+    for i, body in enumerate(bodies):
+        (d / f"f{i}.txt").write_text(body)
+    return [len(b) for b in bodies]
+
+
+def _counts(rows) -> dict[str, int]:
+    counts = {}
+    for r in rows:
+        w, _, n = r["line"].partition("\t")
+        counts[w] = int(n)
+    return counts
+
+
 def test_per_file_mapper_strict_reference_granularity(spark, tmp_path_factory):
     """A STATEFUL mapper (emits one '__header__\\t1' per invocation)
     must see exactly one invocation per input file under
     per_file=True — the reference worker's granularity (reference
     worker/__main__.py:137-183) — regardless of how many splits the
-    default path would use."""
+    default path would use, an empty file included; and each
+    invocation reads its file's exact bytes."""
     d = tmp_path_factory.mktemp("per_file_in")
-    for i, body in enumerate(["alpha beta\n", "beta gamma\n", "gamma alpha\n"]):
-        (d / f"f{i}.txt").write_text(body)
+    sizes = _per_file_corpus(d)
     mapper = d / "header_map.py"
     mapper.write_text(
         "import sys\n"
@@ -248,28 +267,114 @@ def test_per_file_mapper_strict_reference_granularity(spark, tmp_path_factory):
         "    for tok in line.split():\n"
         "        print(f'{tok}\\t1')\n"
     )
-    out = run_executable_job(
-        spark,
-        str(d / "*.txt"),
-        f"{PY} {mapper}",
-        _cmd("sum_reduce.py"),
-        num_mappers=8,  # more splits than files: per-split piping
-        # would emit >3 headers if files were ever split further
-        per_file=True,
-    ).collect()
-    counts = {}
-    for r in out:
-        w, _, n = r["line"].partition("\t")
-        counts[w] = int(n)
+    size_map = d / "size_map.py"
+    size_map.write_text("import sys\nprint(f'{len(sys.stdin.buffer.read())}\\t1')\n")
+
+    def run(cmd: str):
+        return run_executable_job(
+            spark,
+            str(d / "*.txt"),
+            cmd,
+            _cmd("sum_reduce.py"),
+            num_mappers=8,  # more splits than files: per-split piping
+            # would emit >4 headers if files were ever split further
+            per_file=True,
+        ).collect()
+
     # exactly one header per input FILE, and token counts intact
-    assert counts["__header__"] == 3
-    assert counts == {"__header__": 3, "alpha": 2, "beta": 2, "gamma": 2}
+    counts = _counts(run(f"{PY} {mapper}"))
+    assert counts == {"__header__": 4, "alpha": 2, "beta": 2, "gamma": 2}
+    assert _counts(run(f"{PY} {size_map}")) == {str(n): 1 for n in sizes}
+
+
+@pytest.mark.parametrize("how", ["submit_exec", "run_executable_job"])
+def test_per_file_pipes_run_once(spark, tmp_path_factory, how):
+    """Each pipe runs exactly once: one mapper process per input file
+    (the empty one too) and one reducer process per non-empty group —
+    the key ranking and the reduce both read the persisted map output,
+    and the single action runs the reducers."""
+    from distributed_mapreduce_server_spark.mapreduce.submit import (
+        ExecJobSpec,
+        submit_exec,
+    )
+
+    d = tmp_path_factory.mktemp("run_once")
+    indir = d / "in"
+    indir.mkdir()
+    n_files = len(_per_file_corpus(indir))
+
+    def counting(script: str, counter) -> str:
+        wrapper = d / f"count_{script}"
+        wrapper.write_text(
+            f"open({str(counter)!r}, 'a').write('run\\n')\n"
+            f"exec(open({os.path.join(EXEC_DIR, script)!r}).read())\n"
+        )
+        return f"{PY} {wrapper}"
+
+    map_runs, reduce_runs = d / "map_runs", d / "reduce_runs"
+    mapper = counting("tok_map.py", map_runs)
+    reducer = counting("sum_reduce.py", reduce_runs)
+    r = 5  # three keys: two reducer groups stay empty
+    if how == "submit_exec":
+        outdir = str(d / "out")
+        submit_exec(
+            spark,
+            ExecJobSpec(str(indir), outdir, mapper, reducer, num_reducers=r, per_file=True),
+        )
+        groups = [open(os.path.join(outdir, f"outputfile{i + 1:02d}")).read() for i in range(r)]
+    else:
+        rows = run_executable_job(spark, str(indir), mapper, reducer, num_reducers=r, per_file=True)
+        groups = ["".join(x["line"] + "\n" for x in rows.collect() if x["part"] == i) for i in range(r)]
+    assert groups == ["alpha\t2\n", "beta\t2\n", "gamma\t2\n", "", ""]
+    assert len(map_runs.read_text().splitlines()) == n_files
+    assert len(reduce_runs.read_text().splitlines()) == 3
+
+
+@pytest.mark.parametrize("per_file", [False, True])
+def test_submit_exec_output_equals_job_groups(spark, corpus_dir, tmp_path_factory, per_file):
+    """submit_exec leaves exactly outputfile01..NN (no staging dir), each
+    byte-equal to run_executable_job's rows of that reducer, in order."""
+    from distributed_mapreduce_server_spark.mapreduce.submit import (
+        ExecJobSpec,
+        submit_exec,
+    )
+
+    r = 3
+    mapper, reducer = _cmd("tok_map.py"), _cmd("sum_reduce.py")
+    outdir = str(tmp_path_factory.mktemp("exec_groups"))
+    submit_exec(
+        spark,
+        ExecJobSpec(corpus_dir, outdir, mapper, reducer, num_reducers=r, per_file=per_file),
+    )
+    names = [f"outputfile{i + 1:02d}" for i in range(r)]
+    assert sorted(os.listdir(outdir)) == names
+    rows = run_executable_job(
+        spark, corpus_dir, mapper, reducer, num_reducers=r, per_file=per_file
+    ).collect()
+    for i, name in enumerate(names):
+        want = "".join(x["line"] + "\n" for x in rows if x["part"] == i).encode()
+        assert open(os.path.join(outdir, name), "rb").read() == want, name
+
+
+@pytest.mark.parametrize("per_file", [False, True])
+def test_exec_non_utf8_input_reaches_mapper_as_replacement_char(spark, tmp_path_factory, per_file):
+    """Input is decoded as UTF-8 with replacement: the mapper of a file
+    holding the byte 0xE9 (Latin-1 'é') reads U+FFFD's UTF-8 bytes where
+    the reference would pipe the raw byte — on both granularities."""
+    d = tmp_path_factory.mktemp("non_utf8")
+    (d / "f0.txt").write_bytes(b"caf\xe9\n")
+    hex_map = d / "hex_map.py"
+    hex_map.write_text("import sys\nprint(sys.stdin.buffer.read().hex())\n")
+    out = run_executable_job(
+        spark, str(d / "*.txt"), f"{PY} {hex_map}", "cat", per_file=per_file
+    ).collect()
+    assert [r["line"] for r in out] == [b"caf\xef\xbf\xbd\n".hex()]
 
 
 def test_per_file_mapper_non_ascii_utf8(spark, tmp_path_factory):
-    """The per-file subprocess must speak UTF-8 regardless of the
-    executor's locale (text=True under LANG=C crashed on non-ASCII;
-    the TRANSFORM path passes UTF-8 bytes, so per_file must match)."""
+    """The per-file mapper reads UTF-8 regardless of the executor's
+    locale (a text-mode pipe under LANG=C once crashed on non-ASCII),
+    exactly as the per-split path does."""
     d = tmp_path_factory.mktemp("per_file_utf8")
     (d / "f0.txt").write_text("café café déjà\n", encoding="utf-8")
     mapper = d / "id_map.py"
