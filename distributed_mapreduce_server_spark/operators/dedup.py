@@ -1061,9 +1061,13 @@ def dedup_incremental_neardup_indexed(
     sigb = sigb.persist()
     sigb.count()
 
-    idx_bands = spark.read.parquet(f"{index_dir}/bands")
-    idx_shingles = spark.read.parquet(f"{index_dir}/shingles")
-    idx_sizes = spark.read.parquet(f"{index_dir}/sizes")
+    # dedup_index_build wrote the index from the same shingle and band
+    # kernels, so the batch frames carry its schema: no inference job
+    idx_bands = spark.read.schema(bandsb.schema).parquet(f"{index_dir}/bands")
+    idx_shingles = spark.read.schema(eb.schema).parquet(f"{index_dir}/shingles")
+    idx_sizes = spark.read.schema(sigb.select("doc_id", "n_sh").schema).parquet(
+        f"{index_dir}/sizes"
+    )
 
     ib, bb = idx_bands.alias("ib"), bandsb.alias("bb")
     cand_index = ib.join(
@@ -2129,8 +2133,8 @@ def _threshold_sweep(
 # WITHIN each centroid bucket.
 #
 # Codebook (round 9): FIXED-K, trained by ROUTE_ITERS rounds of
-# cosine Lloyd (spherical k-means with the quantization discipline
-# of similarity._kmeans_fit: cosines rounded to the 1e-4 grid before
+# cosine Lloyd (spherical k-means on the shared trainer,
+# similarity._train_codebook: cosines rounded to the 1e-4 grid before
 # the argmax, means to 1e-6 after every update — a fixed-point
 # iteration both engines reproduce exactly). The r8 codebook was a
 # stride sample (K = n/32): its driver collect and its n·K·d
@@ -2166,13 +2170,6 @@ def _threshold_sweep(
 ROUTE_K = 64
 ROUTE_ITERS = 2
 ROUTE_PROBES = 6
-# Driver fast path bound for codebook training (the BPE-trainer
-# take(limit+1) pattern): 65536 x 64-dim doubles = 32 MiB. Above it
-# the distributed per-round loop runs; below it the whole corpus
-# trains in numpy on the driver (2 rounds of a 65k x 64 matmul, ~ms)
-# — result-identical on the 1e-4/1e-6 grids, pinned by a
-# forced-fallback test.
-ROUTE_TRAIN_LIMIT = 65536
 
 
 def _route_codebook(
@@ -2183,34 +2180,27 @@ def _route_codebook(
     (ids, matrix) numpy pair `_centroid_assign` broadcasts. Init =
     the first ROUTE_K vectors by vec_id.
 
-    The trainer itself moved to similarity._train_cosine_codebook in
-    round 10 (the IVF coarse quantizer now trains on the identical
-    quantized-grid kernel); this wrapper pins dedup's corpus (ALL
-    embeddings), init cut, round count, and driver fast-path bound
-    (ROUTE_TRAIN_LIMIT — take(limit+1) is the size check AND the
-    data; ``force_distributed`` pins the two paths result-identical
-    in tests). See the shared trainer's docstring for the grid and
-    scale-shape contract. Memoized per (session, sf_dir) via the
-    shared codebook memo (similarity._codebook_memo) — the whole
-    routed family (flat + nested + the eval/sweep trust keys) shares
-    ONE training per session; force_distributed bypasses the memo
-    (those calls exist to really train the distributed path)."""
+    This wrapper pins dedup's corpus (ALL embeddings), init cut and
+    round count for the shared trainer, similarity._train_codebook
+    (the IVF coarse quantizer, the PQ sub-codebooks and emb_kmeans
+    train on it too; its docstring holds the grid and scale-shape
+    contract). Memoized per (session, sf_dir) via the shared codebook
+    memo (similarity._codebook_memo) — the whole routed family (flat
+    + nested + the eval/sweep trust keys) shares ONE training per
+    session; force_distributed bypasses the memo (those calls exist
+    to really train the distributed path)."""
     from distributed_mapreduce_server_spark.operators.similarity import (
+        CODEBOOK_TRAIN_LIMIT,
         _codebook_memo,
-        _train_cosine_codebook,
+        _train_codebook,
     )
 
     def build():
         emb = load_tables(spark, sf_dir, register_views=False)[
             "embeddings"
         ].select("vec_id", "embedding")
-        return _train_cosine_codebook(
-            spark,
-            emb,
-            ROUTE_K,
-            ROUTE_ITERS,
-            train_limit=ROUTE_TRAIN_LIMIT,
-            force_distributed=force_distributed,
+        return _train_codebook(
+            emb, range(ROUTE_K), ROUTE_ITERS, "cosine", force_distributed
         )
 
     if force_distributed:
@@ -2221,7 +2211,7 @@ def _route_codebook(
     return _codebook_memo(
         spark,
         sf_dir,
-        f"dedup_route[K={ROUTE_K},i={ROUTE_ITERS},lim={ROUTE_TRAIN_LIMIT}]",
+        f"dedup_route[K={ROUTE_K},i={ROUTE_ITERS},lim={CODEBOOK_TRAIN_LIMIT}]",
         build,
     )
 
@@ -2426,17 +2416,37 @@ def dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract banner; n_eval_vecs reports the denominator corpus, == n
     below the bound); n_candidates / n_brute_pairs stay full-corpus
     (they cost nothing quadratic)."""
+    emb, assign = _routed_assignments(spark, sf_dir)
+    return _routed_eval(spark, sf_dir, emb, assign, ("centroid_id",), "fused")
+
+
+def _routed_eval(
+    spark: SparkSession,
+    sf_dir: str,
+    emb: DataFrame,
+    assign: DataFrame,
+    keys: tuple[str, ...],
+    strategy: str,
+) -> DataFrame:
+    """The routed trust row behind dedup_routed_eval (flat router:
+    coarse buckets, fused pairs) and dedup_routed_nested_eval (nested
+    router: (coarse, fine) buckets, pairdist): recall of the routed
+    pairs within ``keys`` buckets of ``assign`` against the exact
+    baseline (hash-sampled above EXACT_EVAL_SAMPLE_BOUND), the
+    multi-probe candidate budget Σ C(bucket, 2) and the reduction
+    against brute force."""
     from distributed_mapreduce_server_spark.catalog import table_row_count
 
-    emb, assign = _routed_assignments(spark, sf_dir)
     assign = assign.persist()
     n = table_row_count(sf_dir, "embeddings")
     cand = (
-        assign.groupBy("centroid_id")
+        assign.groupBy(*keys)
         .agg(F.count("*").alias("c"))
         .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).cast("bigint").alias("n_candidates"))
     )
-    routed = _routed_pairs_from(emb, assign).select("vec_a", "vec_b")
+    routed = _routed_pairs_from(emb, assign, keys=keys, strategy=strategy).select(
+        "vec_a", "vec_b"
+    )
     emb_eval, is_sampled = _exact_eval_sample(emb, "vec_id", n)
     if is_sampled:
         emb_eval = emb_eval.select("vec_id", "embedding").persist()
@@ -2453,8 +2463,9 @@ def dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.6 — the q_sketch_error_bounds discipline): the routed verify,
     # the exact baseline and the budget fold union into a 3-row
     # collect, so wall-clock tracks the slowest subtree, not the sum.
+    # The budget is NULL over no buckets (SUM of no rows).
     counts = {
-        row["k"]: int(row["c"])
+        row["k"]: row["c"]
         for row in routed.agg(F.count("*").cast("bigint").alias("c"))
         .select(F.lit("routed").alias("k"), "c")
         .unionAll(
@@ -2481,7 +2492,10 @@ def dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         fround(F.lit(n_routed / max(n_exact, 1)), 4).alias("recall"),
         F.lit(n_cand).cast("bigint").alias("n_candidates"),
         F.lit(n_brute).cast("bigint").alias("n_brute_pairs"),
-        fround(F.lit(n_brute) / F.lit(n_cand), 2).alias("candidate_reduction"),
+        # no candidate pairs: NULL, as DuckDB's CAST(nb AS DOUBLE) / nc
+        fround(
+            F.try_divide(F.lit(float(n_brute)), F.lit(n_cand).cast("bigint")), 2
+        ).alias("candidate_reduction"),
     )
 
 
@@ -2590,8 +2604,9 @@ def dedup_routed_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("r.n_routed_pairs"), F.lit(0)).alias("n_routed_pairs"),
     )
     ne = exact.agg(F.count("*").cast("bigint").alias("__ne"))
+    # every width gets its row; its budget is NULL over no buckets
     out = (
-        budgets.join(recalls, "probes")
+        recalls.join(budgets, "probes", "left")
         .crossJoin(F.broadcast(ne))
         .select(
             "probes",
@@ -2645,45 +2660,38 @@ def _fine_codebook(spark: SparkSession, sf_dir: str, coarse):
     the memo key folds a CRC of the coarse (ids, matrix) in anyway
     (ADVICE r12) — a caller handing a force_distributed-trained or
     sweep-retuned coarse book can never silently receive a fine book
-    trained against a different coarse. ``coarse`` rank-1 assignment
-    is cos.argmax(axis=1) — ids_b is sorted ascending, so argmax's
-    first-max convention IS the smallest-cid tie-break, the same
-    vectorized idiom _train_cosine_codebook documents."""
+    trained against a different coarse. The home centroid is the
+    trainer's own cosine assignment (similarity._nearest)."""
     import numpy as np
     import pandas as pd
 
     from distributed_mapreduce_server_spark.operators.similarity import (
+        CODEBOOK_TRAIN_LIMIT,
         _codebook_memo,
-        _train_cosine_codebook,
+        _nearest,
+        _train_codebook,
     )
 
     def build():
         emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
-        c_ids, c_mat = coarse
-        c_norms = np.sqrt((c_mat * c_mat).sum(axis=1))
-        bc = spark.sparkContext.broadcast((c_ids, c_mat, c_norms))
+        bc = spark.sparkContext.broadcast(coarse)
 
         def residuals(batches):
-            ids_b, mat_b, norms_b = bc.value
+            ids_b, mat_b = bc.value
             for pdf in batches:
-                if pdf.empty:
+                if pdf.empty or not len(ids_b):
                     continue
                 a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
                 a_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-                cos = fround_np((a_mat @ mat_b.T) / np.outer(a_norms, norms_b))
-                home = cos.argmax(axis=1)
-                res = a_mat - mat_b[home]
+                home, _ = _nearest(a_mat, mat_b, "cosine")
                 yield pd.DataFrame(
-                    {"vec_id": a_ids, "embedding": list(res)}
+                    {"vec_id": a_ids, "embedding": list(a_mat - mat_b[home])}
                 )
 
         resid = emb.select("vec_id", "embedding").mapInPandas(
             residuals, "vec_id long, embedding array<double>"
         )
-        return _train_cosine_codebook(
-            spark, resid, NESTED_K2, ROUTE_ITERS, train_limit=ROUTE_TRAIN_LIMIT
-        )
+        return _train_codebook(resid, range(NESTED_K2), ROUTE_ITERS, "cosine")
 
     import zlib
 
@@ -2693,7 +2701,7 @@ def _fine_codebook(spark: SparkSession, sf_dir: str, coarse):
         spark,
         sf_dir,
         f"dedup_fine[K={ROUTE_K},K2={NESTED_K2},i={ROUTE_ITERS},"
-        f"lim={ROUTE_TRAIN_LIMIT},coarse={fp:08x}]",
+        f"lim={CODEBOOK_TRAIN_LIMIT},coarse={fp:08x}]",
         build,
     )
 
@@ -2925,8 +2933,13 @@ def dedup_nested_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count_distinct("vec_a", "vec_b").alias("n_routed_pairs"))
     )
     ne = exact.agg(F.count("*").cast("bigint").alias("__ne"))
+    # every (p1, p2) cell gets its row; its budget is NULL over no buckets
+    grid = spark.range(1).select(F.explode(widths1).alias("p1")).select(
+        "p1", F.explode(widths2).alias("p2")
+    )
     out = (
-        budgets.join(caught, ["p1", "p2"], "left")
+        grid.join(budgets, ["p1", "p2"], "left")
+        .join(caught, ["p1", "p2"], "left")
         .crossJoin(F.broadcast(ne))
         .select(
             F.col("p1").cast("int").alias("p1"),
@@ -2958,64 +2971,9 @@ def dedup_routed_nested_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force. Reading the two eval rows side by side is the
     equal-budget dominance check: nested must match or beat flat
     recall on no more candidates."""
-    from distributed_mapreduce_server_spark.catalog import table_row_count
-
     emb, assign = _nested_assignments(spark, sf_dir)
-    assign = assign.persist()
-    n = table_row_count(sf_dir, "embeddings")
-    cand = (
-        assign.groupBy("centroid_id", "fine_id")
-        .agg(F.count("*").alias("c"))
-        .agg(
-            F.sum(F.col("c") * (F.col("c") - 1) / 2)
-            .cast("bigint")
-            .alias("n_candidates")
-        )
-    )
-    routed = _routed_pairs_from(
-        emb, assign, keys=("centroid_id", "fine_id"), strategy="pairdist"
-    ).select("vec_a", "vec_b")
-    emb_eval, is_sampled = _exact_eval_sample(emb, "vec_id", n)
-    if is_sampled:
-        emb_eval = emb_eval.select("vec_id", "embedding").persist()
-        n_eval = emb_eval.count()
-        routed = _pairs_within(
-            routed, emb_eval.select("vec_id"), "vec_a", "vec_b"
-        )
-    else:
-        n_eval = n
-    exact = _blocked_cosine_pairs(spark, emb_eval, n_hint=n_eval).select(
-        "vec_a", "vec_b"
-    )
-    # ONE concurrent job for the three independent counts (r13, guide
-    # §2.6): routed verify + exact baseline + budget fold union into a
-    # 3-row collect — wall-clock tracks the slowest subtree.
-    counts = {
-        row["k"]: int(row["c"])
-        for row in routed.agg(F.count("*").cast("bigint").alias("c"))
-        .select(F.lit("routed").alias("k"), "c")
-        .unionAll(
-            exact.agg(F.count("*").cast("bigint").alias("c")).select(
-                F.lit("exact").alias("k"), "c"
-            )
-        )
-        .unionAll(cand.select(F.lit("cand").alias("k"), F.col("n_candidates").alias("c")))
-        .collect()
-    }
-    n_routed, n_exact, n_cand = counts["routed"], counts["exact"], counts["cand"]
-    assign.unpersist()
-    if is_sampled:
-        emb_eval.unpersist()
-    n_brute = n * (n - 1) // 2
-    return spark.range(1).select(
-        F.lit(n_eval).cast("bigint").alias("n_eval_vecs"),
-        F.lit(n_exact).cast("bigint").alias("n_exact_pairs"),
-        F.lit(n_routed).cast("bigint").alias("n_routed_pairs"),
-        F.lit(n_exact - n_routed).cast("bigint").alias("n_missed"),
-        fround(F.lit(n_routed / max(n_exact, 1)), 4).alias("recall"),
-        F.lit(n_cand).cast("bigint").alias("n_candidates"),
-        F.lit(n_brute).cast("bigint").alias("n_brute_pairs"),
-        fround(F.lit(n_brute) / F.lit(n_cand), 2).alias("candidate_reduction"),
+    return _routed_eval(
+        spark, sf_dir, emb, assign, ("centroid_id", "fine_id"), "pairdist"
     )
 
 
@@ -3085,7 +3043,7 @@ def dedup_routed_rank1_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.6): the two pair verifies are the heavy subtrees and now
     # schedule together instead of back to back.
     counts = {
-        row["k"]: int(row["c"])
+        row["k"]: row["c"]
         for row in sym.agg(F.count("*").cast("bigint").alias("c"))
         .select(F.lit("sym").alias("k"), "c")
         .unionAll(
@@ -3098,15 +3056,16 @@ def dedup_routed_rank1_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     n_sym, n_r1 = counts["sym"], counts["r1"]
     assign.unpersist()
-    sym_rows, r1_rows = counts["sym_rows"], counts["r1_rows"]
+    # the two volumes are NULL over no cells (SUM of no rows); greatest
+    # skips a NULL like DuckDB's GREATEST(rv, 1)
+    sym_rows = F.lit(counts["sym_rows"]).cast("bigint")
+    r1_rows = F.lit(counts["r1_rows"]).cast("bigint")
     return spark.range(1).select(
         F.lit(n_sym).cast("bigint").alias("n_sym_pairs"),
         F.lit(n_r1).cast("bigint").alias("n_r1_pairs"),
         F.lit(n_sym - n_r1).cast("bigint").alias("n_missed"),
         fround(F.lit(n_r1 / max(n_sym, 1)), 4).alias("recall_vs_sym"),
-        F.lit(sym_rows).cast("bigint").alias("n_sym_cand_rows"),
-        F.lit(r1_rows).cast("bigint").alias("n_r1_cand_rows"),
-        fround(F.lit(sym_rows) / F.lit(max(r1_rows, 1)), 2).alias(
-            "volume_reduction"
-        ),
+        sym_rows.alias("n_sym_cand_rows"),
+        r1_rows.alias("n_r1_cand_rows"),
+        fround(sym_rows / F.greatest(r1_rows, F.lit(1)), 2).alias("volume_reduction"),
     )

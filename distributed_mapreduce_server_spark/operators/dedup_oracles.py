@@ -834,8 +834,8 @@ _COS_VK = """ROUND(list_sum(list_transform(range(1, len(v.embedding) + 1),
 
 def _lloyd_ctes(prefix: str, source: str, k: int, iters: int, out_name: str) -> str:
     """Unrolled cosine-Lloyd trainer over any long-form
-    (vec_id, pos, x) CTE ``source``, mirroring
-    similarity._train_cosine_codebook: init = rows with
+    (vec_id, pos, x) CTE ``source``, mirroring the shared trainer's
+    cosine metric (similarity._train_codebook): init = rows with
     vec_id < ``k``, per round a 1e-4-rounded cosine argmax assignment
     (cid ASC tie-break == numpy argmax-first over the sorted id axis)
     and a 1e-6-rounded per-(cid, dim) mean update. Ends with

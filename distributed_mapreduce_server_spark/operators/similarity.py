@@ -84,17 +84,23 @@ N_TABLES = 4
 EMB_DIM = 64
 
 
-def _collect_matrix(df, id_col: str = "vec_id", vec_col: str = "embedding"):
+def _matrix(rows):
+    """(ids, matrix) of (vec_id, embedding) rows sorted by vec_id. The
+    matrix is (n, EMB_DIM) for every n, 0 included, so an empty corpus
+    or codebook flows through the numpy kernels as zero rows."""
+    import numpy as np
+
+    rows = sorted(rows, key=lambda r: r["vec_id"])
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    return ids, mat.reshape(len(rows), EMB_DIM)
+
+
+def _collect_matrix(df):
     """Bounded driver fetch of (ids, matrix) sorted by id - for
     codebooks and query sets ONLY (fixed size at any corpus scale;
     never call on a corpus-sized frame)."""
-    import numpy as np
-
-    rows = df.select(id_col, vec_col).collect()
-    rows.sort(key=lambda r: r[id_col])
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    mat = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    return ids, mat
+    return _matrix(df.select("vec_id", "embedding").collect())
 
 
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,6 +216,18 @@ N_CENTROIDS = 16
 N_PROBE = 4
 
 
+def _cosines(x, mat):
+    """(n, k) cosines between the rows of ``x`` and of ``mat``,
+    dot-then-divide like the oracles' dot / (|x| |c|), on the 1e-4 grid
+    (fround_np: DuckDB ROUND semantics, scaled half-away-from-zero;
+    np.round is banker's at scaled .5 ties)."""
+    import numpy as np
+
+    x_norms = np.sqrt((x * x).sum(axis=1))
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    return fround_np((x @ mat.T) / np.outer(x_norms, norms))
+
+
 def _centroid_assign(
     emb: DataFrame, centroids, n_best: int, with_rank: bool = False
 ) -> DataFrame:
@@ -232,26 +250,20 @@ def _centroid_assign(
     import numpy as np
     import pandas as pd
 
-    if isinstance(centroids, tuple):
-        cen_ids, cen_mat = centroids
-    else:
-        cen_ids, cen_mat = _collect_matrix(centroids)
-    cen_norms = np.sqrt((cen_mat * cen_mat).sum(axis=1))
+    if not isinstance(centroids, tuple):
+        centroids = _collect_matrix(centroids)
     # broadcast lifetime = the returned plan's; ContextCleaner reclaims it.
-    bc = emb.sparkSession.sparkContext.broadcast((cen_ids, cen_mat, cen_norms))
+    bc = emb.sparkSession.sparkContext.broadcast(centroids)
 
     def blocks(batches):
-        ids_b, mat_b, norms_b = bc.value
+        ids_b, mat_b = bc.value
         for pdf in batches:
-            if pdf.empty:
+            # no centroids: no vector has a nearest one, so no rows
+            if pdf.empty or not len(ids_b):
                 continue
             a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             a_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-            raw = (a_mat @ mat_b.T) / np.outer(a_norms, norms_b)
-            # DuckDB ROUND semantics (scaled half-away-from-zero);
-            # np.round is banker's at scaled .5 ties
-            cos = fround_np(raw)
+            cos = _cosines(a_mat, mat_b)
             out_vec, out_cen, out_rank = [], [], []
             for i in range(len(a_ids)):
                 # row_number() over (cos desc, centroid_id asc)
@@ -271,121 +283,179 @@ def _centroid_assign(
 
 
 # Driver fast path bound for codebook training (the BPE-trainer
-# take(limit+1) pattern, same figure as dedup.ROUTE_TRAIN_LIMIT):
-# 65536 x 64-dim doubles = 32 MiB. Below it the whole corpus trains
-# in numpy on the driver; above it the distributed per-round loop
-# runs — result-identical on the 1e-4/1e-6 grids.
+# take(limit+1) pattern): 65536 x 64-dim doubles = 32 MiB. Below it
+# every round runs the block kernel once over the whole corpus on the
+# driver; above it each round runs the same kernel per Arrow batch in
+# mapInPandas — result-identical on the 1e-4/1e-6 grids.
 CODEBOOK_TRAIN_LIMIT = 65536
 
 
-def _lloyd_rounds_np(ids, mat, corpus, iters: int):
-    """Driver-side cosine-Lloyd rounds: (1e-4-rounded cosine argmax,
-    1e-6-rounded mean update) over the full in-memory corpus. Shares
-    the exact quantization grid with the distributed mapInPandas
-    kernel, so both paths land on the same fixed points. Clusters
-    that win no vectors drop out (both engines: the group simply has
-    no rows)."""
+def _sq_dists(x, mat, nd: int):
+    """(n, k) squared L2 distances between the rows of ``x`` and of
+    ``mat`` in the direct-difference form ((x - c) ** 2).sum(), on the
+    10^-nd grid (fround_np). One centroid at a time, so the temporary
+    is (n, d) rather than (n, k, d)."""
     import numpy as np
 
-    corpus_norms = np.sqrt((corpus * corpus).sum(axis=1))
-    for _ in range(iters):
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        cos = fround_np((corpus @ mat.T) / np.outer(corpus_norms, norms))
-        best = cos.argmax(axis=1)  # first-max == smallest-cid tie-break
-        k, d = mat.shape
-        sums = np.zeros((k, d))
-        counts = np.zeros(k, dtype=np.int64)
-        np.add.at(sums, best, corpus)
+    d = np.empty((len(x), len(mat)))
+    for j, c in enumerate(mat):
+        d[:, j] = ((x - c) ** 2).sum(axis=1)
+    return fround_np(d, nd)
+
+
+def _pq_dists(x, mat, m: int):
+    """(n, k) 1e-4-rounded squared distances between subspace ``m`` of
+    the rows of ``x`` and of the stitched PQ codebook ``mat`` — the
+    kernel the PQ trainer, encoder and ADC tables share."""
+    sub = slice(m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM)
+    return _sq_dists(x[:, sub], mat[:, sub], 4)
+
+
+def _pq_lut(q, mat):
+    """(|q|, PQ_M, k) ADC lookup table of the query rows ``q``:
+    LUT[i, m, j] = _pq_dists of query i's subspace m to sub-centroid
+    j of the stitched codebook ``mat``."""
+    import numpy as np
+
+    lut = np.empty((len(q), PQ_M, len(mat)))
+    for m in range(PQ_M):
+        lut[:, m, :] = _pq_dists(q, mat, m)
+    return lut
+
+
+def _nearest(x, mat, metric: str):
+    """Row index into ``mat`` of each vector's nearest centroid and
+    its rounded score. ``cosine``: first argmax of the 1e-4-rounded
+    cosines; ``l2``: first argmin of the 1e-6-rounded squared
+    distances. Codebook rows are sorted by id, so "first" is the
+    smallest-cid tie-break (ROW_NUMBER ... cid ASC in the oracles)."""
+    import numpy as np
+
+    if metric == "cosine":
+        scores = _cosines(x, mat)
+        best = scores.argmax(axis=1)
+    else:
+        scores = _sq_dists(x, mat, 6)
+        best = scores.argmin(axis=1)
+    return best, scores[np.arange(len(x)), best]
+
+
+def _lloyd_partials(x, mat, metric: str):
+    """One Lloyd map step: the per-cluster partial ``(sums, counts)``
+    of the block of vectors ``x`` under the codebook ``mat``, both
+    shaped like ``mat``. Counts are per element, so a PQ sub-cluster
+    counts only the vectors whose subspace it won (``pq``: per-subspace
+    first argmin of _pq_dists). Serves unchanged as the driver step
+    (the whole corpus as one block) and as the per-batch map kernel."""
+    import numpy as np
+
+    sums = np.zeros(mat.shape)
+    counts = np.zeros(mat.shape, dtype=np.int64)
+    if not (len(x) and len(mat)):
+        return sums, counts
+    if metric == "pq":
+        for m in range(PQ_M):
+            sub = slice(m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM)
+            best = _pq_dists(x, mat, m).argmin(axis=1)
+            np.add.at(sums[:, sub], best, x[:, sub])
+            np.add.at(counts[:, sub], best, 1)
+    else:
+        best, _ = _nearest(x, mat, metric)
+        np.add.at(sums, best, x)
         np.add.at(counts, best, 1)
-        live = np.nonzero(counts)[0]
-        ids = ids[live]
-        mat = fround_np(sums[live] / counts[live, None], 6)
-    return ids, mat
+    return sums, counts
 
 
-def _train_cosine_codebook(
-    spark: SparkSession,
+def _distributed_partials(emb: DataFrame, mat, metric: str):
+    """One Lloyd round's map and shuffle on Spark: _lloyd_partials per
+    Arrow batch, emitted as (row, pos, s, c) rows for the elements it
+    touched, summed per (row, pos) — a map-side-combined shuffle of
+    at most K·d rows per task — and collected into ``(sums, counts)``
+    arrays shaped like ``mat``."""
+    import numpy as np
+
+    bc = emb.sparkSession.sparkContext.broadcast(mat)
+
+    def block_partials(batches):
+        import pandas as pd
+
+        mat_b = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            sums, counts = _lloyd_partials(x, mat_b, metric)
+            row, pos = np.nonzero(counts)
+            yield pd.DataFrame(
+                {"row": row, "pos": pos, "s": sums[row, pos], "c": counts[row, pos]}
+            )
+
+    sums = np.zeros(mat.shape)
+    counts = np.zeros(mat.shape, dtype=np.int64)
+    for r in (
+        emb.select("embedding")
+        .mapInPandas(block_partials, "row long, pos long, s double, c long")
+        .groupBy("row", "pos")
+        .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
+        .collect()
+    ):
+        sums[r["row"], r["pos"]] = r["s"]
+        counts[r["row"], r["pos"]] = r["c"]
+    return sums, counts
+
+
+def _train_codebook(
     emb: DataFrame,
-    init_max_id: int,
+    init: range,
     iters: int,
-    train_limit: int = CODEBOOK_TRAIN_LIMIT,
+    metric: str,
     force_distributed: bool = False,
 ):
-    """Train a fixed-K cosine-Lloyd codebook over the (vec_id,
-    embedding) frame ``emb``, returning the bounded (ids, matrix)
-    numpy pair `_centroid_assign` broadcasts. Init = the corpus rows
-    with vec_id < ``init_max_id``; K is fixed (dead clusters drop).
+    """The one Lloyd trainer: ``iters`` rounds over the (vec_id,
+    embedding) frame ``emb`` from the codebook of its rows whose
+    vec_id lies in ``init``, returning the bounded (ids, matrix) numpy
+    pair (matrix (k, EMB_DIM), rows sorted by id).
 
-    Deterministic end to end: per round each Arrow batch scores all
-    K centroids in one numpy matmul, rounds cosines to the 1e-4 grid
-    (fround_np — ties break to the smallest cid, argmax-first =
-    ROW_NUMBER cid ASC in the oracle), and emits K·d partial
-    (sum, count) rows; means are fround(·, 6) so the update lands on
-    a grid ~9 orders above the engines' sum-order noise.
+    Each round is the reference's job shape: the map step assigns
+    every vector to its nearest centroid and emits per-cluster partial
+    sums (_lloyd_partials), the sums meet per cluster, and the update
+    is their mean on the 1e-6 grid — ~9 orders above the engines'
+    sum-order noise, so the fit is a fixed point both engines and the
+    unrolled DuckDB oracles reproduce exactly. The metric decides the
+    assignment (_nearest, _pq_dists) and the fate of a centroid that
+    wins no vectors: ``cosine`` (IVF coarse, dedup route and fine) and
+    ``l2`` (emb_kmeans) drop it; ``pq`` keeps it per subspace, so the
+    stitched (PQ_K, EMB_DIM) codebook keeps its shape.
 
-    Scale shape: per round ONE corpus scan (no vector shuffle — the
-    shuffle carries ≤ K·d partial rows per task), one K·d-row driver
-    collect. Nothing grows with n. Corpora ≤ ``train_limit`` vectors
-    train on the driver in one numpy loop (take(limit+1) is the size
-    check AND the data — the BPE-trainer pattern);
-    ``force_distributed`` pins the two paths result-identical in
-    tests. Shared by dedup's routing codebook (dedup._route_codebook)
-    and the IVF coarse quantizer (_ivf_codebook)."""
-    import numpy as np
+    Corpora of at most CODEBOOK_TRAIN_LIMIT vectors train on the
+    driver (take(limit+1) is the size check AND the data); larger ones
+    run each round as one corpus scan plus a K·d-row collect
+    (_distributed_partials). ``force_distributed`` takes the second
+    path at any size — the path-equality tests' reference."""
+    head = None if force_distributed else emb.take(CODEBOOK_TRAIN_LIMIT + 1)
+    if head is not None and len(head) <= CODEBOOK_TRAIN_LIMIT:
+        corpus_ids, corpus = _matrix(head)
+        seed = (corpus_ids >= init.start) & (corpus_ids < init.stop)
+        ids, mat = corpus_ids[seed], corpus[seed]
 
-    if not force_distributed:
-        head = emb.take(train_limit + 1)
-        if len(head) <= train_limit:
-            head.sort(key=lambda r: r["vec_id"])
-            corpus_ids = np.array([r["vec_id"] for r in head], dtype=np.int64)
-            corpus = np.array([r["embedding"] for r in head], dtype=np.float64)
-            init = corpus_ids < init_max_id
-            return _lloyd_rounds_np(corpus_ids[init], corpus[init], corpus, iters)
-    ids, mat = _collect_matrix(emb.filter(F.col("vec_id") < init_max_id))
-    dim = mat.shape[1]
-    for _ in range(iters):
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        bc = spark.sparkContext.broadcast((ids, mat, norms))
+        def partials(mat):
+            return _lloyd_partials(corpus, mat, metric)
 
-        def partials(batches):
-            import pandas as pd
-
-            ids_b, mat_b, norms_b = bc.value
-            k, d = mat_b.shape
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                a = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                an = np.sqrt((a * a).sum(axis=1))
-                cos = fround_np((a @ mat_b.T) / np.outer(an, norms_b))
-                # ids_b is sorted ascending, so argmax's first-max
-                # convention == smallest-cid tie-break
-                best = cos.argmax(axis=1)
-                sums = np.zeros((k, d))
-                counts = np.zeros(k, dtype=np.int64)
-                np.add.at(sums, best, a)
-                np.add.at(counts, best, 1)
-                live = np.nonzero(counts)[0]
-                yield pd.DataFrame(
-                    {
-                        "cid": np.repeat(ids_b[live], d),
-                        "pos": np.tile(np.arange(d, dtype=np.int64), len(live)),
-                        "s": sums[live].ravel(),
-                        "c": np.repeat(counts[live], d),
-                    }
-                )
-
-        rows = (
-            emb.mapInPandas(partials, "cid long, pos long, s double, c long")
-            .groupBy("cid", "pos")
-            .agg(fround(F.sum("s") / F.sum("c"), 6).alias("m"))
-            .collect()
+    else:
+        ids, mat = _collect_matrix(
+            emb.filter(F.col("vec_id").between(init.start, init.stop - 1))
         )
-        by_cid: dict = {}
-        for r in rows:
-            by_cid.setdefault(r["cid"], [0.0] * dim)[r["pos"]] = r["m"]
-        ids = np.array(sorted(by_cid), dtype=np.int64)
-        mat = np.array([by_cid[c] for c in sorted(by_cid)], dtype=np.float64)
+
+        def partials(mat):
+            return _distributed_partials(emb, mat, metric)
+
+    for _ in range(iters):
+        sums, counts = partials(mat)
+        won = counts > 0
+        mat[won] = fround_np(sums[won] / counts[won], 6)
+        if metric != "pq":
+            live = won.all(axis=1)
+            ids, mat = ids[live], mat[live]
     return ids, mat
 
 
@@ -407,8 +477,8 @@ def _ivf_codebook(spark: SparkSession, sf_dir: str):
             "embeddings"
         ].select("vec_id", "embedding")
         cand = emb.filter(F.col("vec_id") >= N_QUERIES)
-        return _train_cosine_codebook(
-            spark, cand, N_QUERIES + N_CENTROIDS, IVF_TRAIN_ITERS
+        return _train_codebook(
+            cand, range(N_QUERIES, N_QUERIES + N_CENTROIDS), IVF_TRAIN_ITERS, "cosine"
         )
 
     return _codebook_memo(
@@ -571,100 +641,47 @@ KMEANS_K = 8
 KMEANS_ITERS = 5
 
 
-def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int, iters: int):
-    """Lloyd's k-means over the embedding corpus, DataFrame-iterative
-    (the real codebook builder behind sim_ivf_ann's deterministic
-    stand-in).
-
-    Per round: assignment is a broadcast of the K x dim centroid table
-    against the corpus (one scan, no shuffle of the vectors); the
-    update is a posexplode + map-side-combined avg per (cluster, dim)
-    — 64*K partial rows per task regardless of corpus size — then a
-    K-row array rebuild. Centroids persist each round so lineage stays
-    flat (same pattern as dedup_clusters). Returns (assignments,
-    centroids); assignments = (vec_id, cid, dist_sq) under the FINAL
-    centroids (one closing assign pass, materialized while those
-    centroids are still persisted — an assignment built from an
-    earlier round would recompute the whole unpersisted chain).
-
-    Quantization discipline (round 7, the q_graph_bfs_levels recipe
-    applied to Lloyd): centroid means are fround(., 6) after every
-    update and distances fround(., 6) before the argmin — so the loop
-    is a fixed-point iteration on a 1e-6 grid that a DuckDB
-    unrolled-CTE oracle reproduces exactly (engine sum-order noise is
-    ~1e-15, nine orders below the grid). The distance column returned
-    IS the rounded one, so downstream WCSS sums quantized values in
-    both engines.
-    """
-    from pyspark.sql.window import Window
-
-    emb = (
-        load_tables(spark, sf_dir, register_views=False)["embeddings"]
-        .select("vec_id", "embedding")
-        .persist()
-    )
-    emb.count()
-    # deterministic init: the first K vectors by vec_id
-    centroids = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cid"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cen"),
-    )
-    centroids = centroids.persist()
-    centroids.count()
-
-    def dist_sq():
-        d = F.zip_with("embedding", "cen", lambda x, c: (x.cast("double") - c) ** 2)
-        return fround(F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x), 6)
-
-    def assign(cen_df):
-        w = Window.partitionBy("vec_id").orderBy("dist_sq", "cid")
-        return (
-            emb.crossJoin(broadcast(cen_df))
-            .withColumn("dist_sq", dist_sq())
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("vec_id", "cid", "dist_sq", "embedding")
-        )
-
-    for _ in range(iters):
-        assigned = assign(centroids)
-        new_centroids = (
-            assigned.select("cid", F.posexplode("embedding").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(fround(F.avg(F.col("x").cast("double")), 6).alias("m"))
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cid", F.transform("pm", lambda s: s["m"]).alias("cen"))
-            .persist()
-        )
-        new_centroids.count()
-        centroids.unpersist()
-        centroids = new_centroids
-    # closing assignment under the FINAL (still-persisted) centroids;
-    # the loop's `assigned` references centroids already unpersisted.
-    assignments = assign(centroids).select("vec_id", "cid", "dist_sq").persist()
-    assignments.count()
-    emb.unpersist()
-    return assignments, centroids
-
-
 def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means clustering summary: per-cluster size and within-cluster
-    sum of squares after KMEANS_ITERS Lloyd rounds. Iterative and
-    float-accumulation-dependent, so rows-only at the driver gate;
-    tests assert the algorithmic invariants (partition completeness,
-    monotone WCSS, fixed-point assignment) instead."""
-    assignments, centroids = _kmeans_fit(spark, sf_dir, KMEANS_K, KMEANS_ITERS)
-    out = assignments.groupBy("cid").agg(
-        F.count("*").alias("n_vectors"),
-        fround(F.sum("dist_sq"), 2).alias("wcss"),
+    sum of squares after KMEANS_ITERS Lloyd rounds from the first
+    KMEANS_K vectors by vec_id, trained by the shared trainer's ``l2``
+    metric (squared distances on the 1e-6 grid before the argmin,
+    smallest cid on ties; means on the 1e-6 grid). One closing corpus
+    pass assigns every vector under the final centroids; wcss sums
+    the rounded distances, so the unrolled DuckDB oracle reproduces
+    every row exactly.
+
+    Scale shape: the K x dim codebook is broadcast and each Arrow
+    batch scores it in numpy — one corpus scan into a K-row
+    aggregation, no crossJoin and no per-vector window."""
+    import numpy as np
+    import pandas as pd
+
+    emb = load_tables(spark, sf_dir, register_views=False)["embeddings"].select(
+        "vec_id", "embedding"
     )
-    out = out.persist()
-    out.count()
-    # K summary rows stay cached; the big intermediates are released.
-    assignments.unpersist()
-    centroids.unpersist()
-    return out.orderBy("cid")
+    bc = spark.sparkContext.broadcast(
+        _train_codebook(emb, range(KMEANS_K), KMEANS_ITERS, "l2")
+    )
+
+    def assign(batches):
+        ids_b, mat_b = bc.value
+        for pdf in batches:
+            if pdf.empty or not len(ids_b):
+                continue
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            best, dist_sq = _nearest(x, mat_b, "l2")
+            yield pd.DataFrame({"cid": ids_b[best].astype(np.int32), "dist_sq": dist_sq})
+
+    return (
+        emb.mapInPandas(assign, "cid int, dist_sq double")
+        .groupBy("cid")
+        .agg(
+            F.count("*").alias("n_vectors"),
+            fround(F.sum("dist_sq"), 2).alias("wcss"),
+        )
+        .orderBy("cid")
+    )
 
 
 def _cov_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -904,33 +921,6 @@ PQ_SUB_DIM = EMB_DIM // PQ_M
 PQ_TRAIN_ITERS = 2
 
 
-def _pq_lloyd_np(ids, mat, corpus, iters: int):
-    """Driver-side per-subspace L2 Lloyd: per round and subspace m,
-    assignment = argmin over 1e-4-rounded squared sub-distance (ties
-    to the lowest cid — ids sorted ascending, argmin-first), update =
-    1e-6-rounded sub-vector mean; a sub-cluster that wins no vectors
-    KEEPS its previous centroid (K stays fixed so the stitched
-    (PQ_K x EMB_DIM) matrix shape — block m holds subspace m's
-    codebook — survives training)."""
-    import numpy as np
-
-    for _ in range(iters):
-        new = mat.copy()
-        for m in range(PQ_M):
-            lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-            diff = corpus[:, None, lo:hi] - mat[None, :, lo:hi]
-            d = fround_np((diff * diff).sum(axis=2))
-            best = d.argmin(axis=1)
-            sums = np.zeros((len(ids), PQ_SUB_DIM))
-            counts = np.zeros(len(ids), dtype=np.int64)
-            np.add.at(sums, best, corpus[:, lo:hi])
-            np.add.at(counts, best, 1)
-            live = counts > 0
-            new[live, lo:hi] = fround_np(sums[live] / counts[live, None], 6)
-        mat = new
-    return ids, mat
-
-
 def _pq_codebook(
     emb: DataFrame, force_distributed: bool = False, sf_dir: str | None = None
 ):
@@ -941,99 +931,35 @@ def _pq_codebook(
     shared by the encoder (emb_pq_quantize) and every ADC serving
     scan, so they can never disagree on the codebook.
 
-    Returns the same (ids, stitched matrix) pair as before — block m
-    of each row is subspace m's centroid — so every downstream
-    lo:hi-slicing kernel is untouched. Deterministic via the
-    quantized-grid discipline (1e-4 distances before argmin, 1e-6
-    means, keep-previous on empty) -> the oracles unroll the rounds
-    as CTEs (similarity_oracles._pq_codebook_ctes).
-
-    Scale shape mirrors _train_cosine_codebook: driver numpy loop
-    under CODEBOOK_TRAIN_LIMIT (take(limit+1) = size check AND data);
-    above it, per round ONE corpus scan emitting ≤ PQ_K·EMB_DIM
-    partial (sum, count) rows per task and a bounded driver collect.
-    Callers that derive ``emb`` straight from load_tables pass
-    ``sf_dir`` so the training memoizes per (session, sf_dir);
-    force_distributed (the path-equality tests) always retrains.
+    Returns the (ids, stitched matrix) pair — block m of each row is
+    subspace m's centroid — so every downstream kernel slices it per
+    subspace (_pq_dists). Trained by the shared trainer's ``pq``
+    metric (1e-4 distances before the argmin, 1e-6 means, keep-previous
+    on empty) -> the oracles unroll the rounds as CTEs
+    (similarity_oracles._pq_codebook_ctes). Callers that derive
+    ``emb`` straight from load_tables pass ``sf_dir`` so the training
+    memoizes per (session, sf_dir); force_distributed (the
+    path-equality tests) always retrains.
     """
-    spark = emb.sparkSession
-    if sf_dir is not None and not force_distributed:
-        # i/lim ride in the key like K does (ADVICE r12): a sweep that
-        # retunes the training constants must never see a stale book.
-        return _codebook_memo(
-            spark,
-            sf_dir,
-            f"pq[M={PQ_M},K={PQ_K},i={PQ_TRAIN_ITERS},lim={CODEBOOK_TRAIN_LIMIT}]",
-            lambda: _pq_codebook(emb, force_distributed),
+    def build():
+        return _train_codebook(
+            emb.select("vec_id", "embedding"),
+            range(N_QUERIES, N_QUERIES + PQ_K),
+            PQ_TRAIN_ITERS,
+            "pq",
+            force_distributed=force_distributed,
         )
-    import numpy as np
 
-    base = emb.select("vec_id", "embedding")
-    if not force_distributed:
-        head = base.take(CODEBOOK_TRAIN_LIMIT + 1)
-        if len(head) <= CODEBOOK_TRAIN_LIMIT:
-            head.sort(key=lambda r: r["vec_id"])
-            corpus_ids = np.array([r["vec_id"] for r in head], dtype=np.int64)
-            corpus = np.array([r["embedding"] for r in head], dtype=np.float64)
-            init = (corpus_ids >= N_QUERIES) & (corpus_ids < N_QUERIES + PQ_K)
-            return _pq_lloyd_np(
-                corpus_ids[init], corpus[init], corpus, PQ_TRAIN_ITERS
-            )
-    ids, mat = _collect_matrix(
-        base.filter(
-            (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_K)
-        )
+    if sf_dir is None or force_distributed:
+        return build()
+    # i/lim ride in the key like K does (ADVICE r12): a sweep that
+    # retunes the training constants must never see a stale book.
+    return _codebook_memo(
+        emb.sparkSession,
+        sf_dir,
+        f"pq[M={PQ_M},K={PQ_K},i={PQ_TRAIN_ITERS},lim={CODEBOOK_TRAIN_LIMIT}]",
+        build,
     )
-    for _ in range(PQ_TRAIN_ITERS):
-        bc = spark.sparkContext.broadcast(mat)
-
-        def partials(batches):
-            import pandas as pd
-
-            mat_b = bc.value
-            k = mat_b.shape[0]
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                out_pos, out_ci, out_s, out_c = [], [], [], []
-                for m in range(PQ_M):
-                    lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-                    diff = x[:, None, lo:hi] - mat_b[None, :, lo:hi]
-                    d = fround_np((diff * diff).sum(axis=2))
-                    best = d.argmin(axis=1)
-                    sums = np.zeros((k, PQ_SUB_DIM))
-                    counts = np.zeros(k, dtype=np.int64)
-                    np.add.at(sums, best, x[:, lo:hi])
-                    np.add.at(counts, best, 1)
-                    live = np.nonzero(counts)[0]
-                    out_ci.append(np.repeat(live, PQ_SUB_DIM))
-                    out_pos.append(
-                        np.tile(np.arange(lo, hi, dtype=np.int64), len(live))
-                    )
-                    out_s.append(sums[live].ravel())
-                    out_c.append(np.repeat(counts[live], PQ_SUB_DIM))
-                if out_ci:
-                    yield pd.DataFrame(
-                        {
-                            "ci": np.concatenate(out_ci),
-                            "pos": np.concatenate(out_pos),
-                            "s": np.concatenate(out_s),
-                            "c": np.concatenate(out_c),
-                        }
-                    )
-
-        rows = (
-            base.mapInPandas(partials, "ci long, pos long, s double, c long")
-            .groupBy("ci", "pos")
-            .agg(fround(F.sum("s") / F.sum("c"), 6).alias("m"))
-            .collect()
-        )
-        new = mat.copy()  # keep-previous on empty sub-clusters
-        for r in rows:
-            new[r["ci"], r["pos"]] = r["m"]
-        mat = new
-    return ids, mat
 
 
 PQ_K = 16  # centroids per sub-codebook -> 4-bit codes
@@ -1068,19 +994,17 @@ def emb_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     def blocks(batches):
         ids_c, cen = bc.value
         for pdf in batches:
-            if pdf.empty:
+            # an empty codebook encodes nothing (no nearest centroid)
+            if pdf.empty or not len(ids_c):
                 continue
             vids = pdf["vec_id"].to_numpy(dtype=np.int64)
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             out = {"vec_id": vids}
             err = np.zeros(len(vids))
             for m in range(PQ_M):
-                lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-                diff = x[:, None, lo:hi] - cen[None, :, lo:hi]
-                d = (diff * diff).sum(axis=2)
-                # DuckDB ROUND semantics before argmin: selection must
-                # not depend on sub-1e-4 float noise
-                d = fround_np(d)
+                # rounded before the argmin: selection must not depend
+                # on sub-1e-4 float noise
+                d = _pq_dists(x, cen, m)
                 best = np.argmin(d, axis=1)  # first min = lowest cid
                 out[f"code{m}"] = ids_c[best].astype(np.int32)
                 err += d[np.arange(len(vids)), best]
@@ -1132,17 +1056,13 @@ def sim_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # LUT[q, m, j] = rounded squared distance from query q's subspace
     # m to sub-centroid j — fixed size (|Q| x 8 x 16) at any corpus
-    lut = np.zeros((len(q_ids), PQ_M, PQ_K))
-    for m in range(PQ_M):
-        lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-        diff = q_mat[:, None, lo:hi] - cen_mat[None, :, lo:hi]
-        lut[:, m, :] = fround_np((diff * diff).sum(axis=2))
+    lut = _pq_lut(q_mat, cen_mat)
     bc = spark.sparkContext.broadcast((cen_mat, q_ids, lut))
 
     def blocks(batches):
         cen, qids, tab = bc.value
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(cen):
                 continue
             vids = pdf["vec_id"].to_numpy(dtype=np.int64)
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
@@ -1150,10 +1070,7 @@ def sim_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             # all queries against the batch via LUT gathers
             adc = np.zeros((len(qids), len(vids)))
             for m in range(PQ_M):
-                lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-                diff = x[:, None, lo:hi] - cen[None, :, lo:hi]
-                d = fround_np((diff * diff).sum(axis=2))
-                codes = np.argmin(d, axis=1)
+                codes = np.argmin(_pq_dists(x, cen, m), axis=1)
                 adc += tab[:, m, :][:, codes]
             adc = fround_np(adc)
             yield pd.DataFrame(
@@ -1215,11 +1132,7 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction, shared rounding discipline)
     _, cen_mat = _pq_codebook(emb, sf_dir=sf_dir)
     q_ids, q_mat = _collect_matrix(q)
-    lut = np.zeros((len(q_ids), PQ_M, PQ_K))
-    for m in range(PQ_M):
-        lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-        diff = q_mat[:, None, lo:hi] - cen_mat[None, :, lo:hi]
-        lut[:, m, :] = fround_np((diff * diff).sum(axis=2))
+    lut = _pq_lut(q_mat, cen_mat)
     qpos = {int(v): i for i, v in enumerate(q_ids)}
     bc = spark.sparkContext.broadcast((cen_mat, qpos, lut))
 
@@ -1237,16 +1150,14 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     def blocks(batches):
         cen, qix, tab = bc.value
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(cen):
                 continue
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             qi = np.array([qix[int(v)] for v in pdf["query_id"]], dtype=np.int64)
             adc = np.zeros(len(pdf))
             for m in range(PQ_M):
-                lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-                diff = x[:, None, lo:hi] - cen[None, :, lo:hi]
-                d = fround_np((diff * diff).sum(axis=2))
-                codes = np.argmin(d, axis=1)  # first min = lowest cid
+                # first min = lowest cid
+                codes = np.argmin(_pq_dists(x, cen, m), axis=1)
                 adc += tab[qi, m, codes]
             yield pd.DataFrame(
                 {
@@ -1525,7 +1436,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.sort(key=lambda r: r["vec_id"])
     ids = [r["vec_id"] for r in rows]
     rel = {r["vec_id"]: r["rel"] for r in rows}
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    _, mat = _matrix(rows)
     norms = np.linalg.norm(mat, axis=1)
     sim = fround_np((mat @ mat.T) / np.outer(norms, norms), 4)
 
@@ -1880,7 +1791,9 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_ret = got.count()
         n_hit = got.join(exact, ["query_id", "neighbor_id"], "left_semi").count()
         got.unpersist()
-        rows.append((nprobe, n_ret, n_hit, fround_scalar(n_hit / n_exact, 4)))
+        # no exact neighbors (no queries): recall is NULL, as in DuckDB
+        recall = fround_scalar(n_hit / n_exact, 4) if n_exact else None
+        rows.append((nprobe, n_ret, n_hit, recall))
     exact.unpersist()
     return spark.createDataFrame(
         rows, "nprobe int, n_returned bigint, n_hits bigint, recall_at_k double"
@@ -1979,13 +1892,9 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ids, q_mat = _collect_matrix(q)
     qpos = {int(v): i for i, v in enumerate(q_ids)}
     # LUT[qi, gi, m, cid] = round(|| (q - g)_m - cb_cid_m ||^2, 4)
-    lut = np.zeros((len(q_ids), len(g_ids), PQ_M, PQ_K))
+    lut = np.zeros((len(q_ids), len(g_ids), PQ_M, len(cb_mat)))
     for gi in range(len(g_ids)):
-        qres = q_mat - g_mat[gi][None, :]
-        for m in range(PQ_M):
-            lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-            diff = qres[:, None, lo:hi] - cb_mat[None, :, lo:hi]
-            lut[:, gi, m, :] = fround_np((diff * diff).sum(axis=2))
+        lut[:, gi] = _pq_lut(q_mat - g_mat[gi][None, :], cb_mat)
     bc = spark.sparkContext.broadcast((cb_mat, g_mat, gpos, qpos, lut))
 
     enc_in = cand_buckets.join(
@@ -1995,17 +1904,15 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     def encode(batches):
         cb, g, gix, _, _ = bc.value
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(cb):
                 continue
             x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             gi = np.array([gix[int(v)] for v in pdf["centroid_id"]], dtype=np.int64)
             r = x - g[gi]
             codes = np.zeros((len(pdf), PQ_M), dtype=np.int32)
             for m in range(PQ_M):
-                lo, hi = m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM
-                diff = r[:, None, lo:hi] - cb[None, :, lo:hi]
-                d = fround_np((diff * diff).sum(axis=2))
-                codes[:, m] = np.argmin(d, axis=1)  # first min = lowest cid
+                # first min = lowest cid
+                codes[:, m] = np.argmin(_pq_dists(r, cb, m), axis=1)
             yield pd.DataFrame(
                 {
                     "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
@@ -2092,7 +1999,8 @@ def emb_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_server_spark.catalog import table_row_count
 
     n_cand = table_row_count(sf_dir, "embeddings") - N_QUERIES
-    avg = n_cand / len(centroids[0])
+    # an empty codebook has no rows to divide
+    avg = n_cand / max(len(centroids[0]), 1)
     return sizes.select(
         "centroid_id",
         "n_vectors",

@@ -1047,7 +1047,8 @@ def _kmeans_sql() -> str:
     each as a pair of MATERIALIZED CTEs — d{i}/a{i} (quantized distance
     + argmin assignment under centroids c{i}) and c{i+1} (per-(cid,
     dim) mean, fround 6) — then one closing assignment under the final
-    centroids, exactly the Spark loop in similarity._kmeans_fit.
+    centroids, exactly emb_kmeans: the shared trainer's ``l2`` rounds
+    (similarity._train_codebook) plus its closing corpus pass.
     Both engines round distances and means to the same 1e-6 grid, so
     sum-order noise (~1e-15) cannot flip an argmin or a mean."""
     from distributed_mapreduce_server_spark.operators.similarity import (

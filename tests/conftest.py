@@ -31,15 +31,26 @@ def sf_smoke():
     return SF_SMOKE
 
 
-@pytest.fixture(scope="session")
-def sf_empty(tmp_path_factory):
-    """Every table of the smoke set with its schema and no rows."""
+def _sliced_smoke_set(out, n_rows: int) -> str:
+    """Write every table of the smoke set, schema kept, cut to its
+    first ``n_rows`` rows, under ``out``."""
     import pyarrow.parquet as pq
 
     from distributed_mapreduce_server_spark.catalog import TABLES
 
-    out = tmp_path_factory.mktemp("sf_empty")
     for t in TABLES:
         tbl = pq.read_table(f"{SF_SMOKE}/{t}.parquet")
-        pq.write_table(tbl.slice(0, 0), str(out / f"{t}.parquet"))
+        pq.write_table(tbl.slice(0, n_rows), str(out / f"{t}.parquet"))
     return str(out)
+
+
+@pytest.fixture(scope="session")
+def sf_empty(tmp_path_factory):
+    """Every table of the smoke set with its schema and no rows."""
+    return _sliced_smoke_set(tmp_path_factory.mktemp("sf_empty"), 0)
+
+
+@pytest.fixture(scope="session")
+def sf_one(tmp_path_factory):
+    """Every table of the smoke set cut to its first row."""
+    return _sliced_smoke_set(tmp_path_factory.mktemp("sf_one"), 1)

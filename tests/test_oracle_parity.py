@@ -26,24 +26,74 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
     assert not problems, f"{name}: " + "; ".join(problems)
 
 
-# Keys that crashed on tables with no rows and now return what DuckDB
-# returns there (ROADMAP E tracks the rest of the degenerate sweep).
-EMPTY_INPUT_KEYS = [
-    "q_gini_revenue",  # DIVIDE_BY_ZERO
-    "stream_hierarchical_rollup",  # state dir never written
-    "stream_upsert_foreachbatch",  # state dir never written
-    "text_corpus_report",  # DIVIDE_BY_ZERO
+# Keys that crashed on degenerate tables and now return what DuckDB
+# returns there (ROADMAP E tracks the rest of the degenerate sweep):
+# ``sf_empty`` has every table with no rows, ``sf_one`` every table
+# cut to its first row.
+CODEBOOK_KEYS = [  # 1-D numpy codebooks and matrices (AxisError)
+    "dedup_nested_probe_sweep",
+    "dedup_routed_eval",
+    "dedup_routed_nested_eval",
+    "dedup_routed_probe_sweep",
+    "dedup_routed_rank1_eval",
+    "dedup_semantic_routed",
+    "dedup_semantic_routed_nested",
+    "dedup_threshold_sweep",
+    "emb_cluster_purity",
+    "emb_ivf_balance",
+    "emb_pq_quantize",
+    "sim_ivf_ann",
+    "sim_ivf_nprobe_sweep",
+    "sim_ivfpq_ann",
+    "sim_ivfpq_residual",
+    "sim_mmr_rerank",
+    "sim_pq_adc_ann",
 ]
+DEGENERATE_INPUT_KEYS = {
+    "sf_empty": [
+        "q_gini_revenue",  # DIVIDE_BY_ZERO
+        "stream_hierarchical_rollup",  # state dir never written
+        "stream_upsert_foreachbatch",  # state dir never written
+        "text_corpus_report",  # DIVIDE_BY_ZERO
+        "emb_kmeans",  # guards the one Lloyd trainer (it passed before)
+        *CODEBOOK_KEYS,
+    ],
+    "sf_one": [
+        # no IVF candidate or PQ seed row: an empty codebook
+        "emb_cluster_purity",
+        "emb_ivf_balance",
+        "emb_pq_quantize",
+        "sim_ivf_ann",
+        "sim_ivf_nprobe_sweep",
+        "sim_ivfpq_ann",
+        "sim_ivfpq_residual",
+        "sim_mmr_rerank",
+        "sim_pq_adc_ann",
+        # no candidate pairs: DIVIDE_BY_ZERO
+        "dedup_routed_eval",
+        "dedup_routed_nested_eval",
+        "emb_kmeans",
+    ],
+}
 
 
-@pytest.mark.parametrize("name", EMPTY_INPUT_KEYS)
-def test_query_matches_oracle_on_empty_tables(name, spark, sf_empty):
-    con = duckdb_conn(sf_empty)
+@pytest.mark.parametrize(
+    "fixture, name",
+    [
+        # the empty-table cases keep their bare key name as the id
+        pytest.param(fx, name, id=name if fx == "sf_empty" else f"{name}-one")
+        for fx, names in DEGENERATE_INPUT_KEYS.items()
+        for name in names
+    ],
+)
+def test_query_matches_oracle_on_empty_tables(fixture, name, spark, request):
+    sf = request.getfixturevalue(fixture)
+    con = duckdb_conn(sf)
     try:
-        problems = compare(QUERIES[name](spark, sf_empty), con, ORACLES[name])
+        problems = compare(QUERIES[name](spark, sf), con, ORACLES[name])
     finally:
         con.close()
-    assert not problems, f"{name}: " + "; ".join(problems)
+    assert not problems, f"{name} on {fixture}: " + "; ".join(problems)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

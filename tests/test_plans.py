@@ -143,7 +143,7 @@ EAGER_OPS = {
     "dedup_incremental_neardup_indexed",  # index build runs eagerly
     "dedup_keep_canonical",
     "dedup_keep_best_quality",
-    "emb_kmeans",
+    "emb_kmeans",  # Lloyd training collects eagerly at plan build
     "text_corpus_pipeline_neardup",
     "text_corpus_pipeline_semantic",
     "text_global_shuffle",  # partition-offset collect runs eagerly
@@ -586,7 +586,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # bounded join shape):
 EXECUTED_NESTED_LOOP = {
     "dedup_incremental_neardup_indexed": "1-row broadcast id-cutoff cross-join, repeated per band-union leg",
-    "emb_kmeans": "K-row broadcast centroid crossJoin per Lloyd assignment round",
     "q_graph_triangles": "1-row broadcast edge-stats + triangle-count summary cross-joins (graph.py:312)",
     "sim_ann_eval": "broadcast query-set crossJoins in the exact baseline + ANN arms it evaluates",
     "sim_ivf_nprobe_sweep": "bounded broadcast query-set crossJoin inside each IVF arm",
@@ -640,6 +639,20 @@ def test_eager_ops_no_cartesians_in_executed_plans(eager_executed_plans):
         if any(cartesian_count_in(p) > 0 for p in plans):
             offenders.append(key)
     assert not offenders, f"cartesian joins executed by: {offenders}"
+
+
+def test_executed_nested_loop_allowlist_not_stale(eager_executed_plans):
+    """Every EXECUTED_NESTED_LOOP entry must still execute at least one
+    nested-loop join at sf0.001: an entry whose join is gone would
+    silently exempt the key from the cartesian sweep above."""
+    from distributed_mapreduce_server_spark.plans import cartesian_count_in
+
+    stale = [
+        key
+        for key in EXECUTED_NESTED_LOOP
+        if not any(cartesian_count_in(p) > 0 for p in eager_executed_plans.get(key, []))
+    ]
+    assert not stale, f"EXECUTED_NESTED_LOOP entries with no nested loop: {stale}"
 
 
 def test_eager_ops_no_fact_scale_low_card_windows_executed(eager_executed_plans):

@@ -4,7 +4,6 @@ operators."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -13,53 +12,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def sf_smoke():
     return SF_SMOKE
-
-
-def test_ivf_codebook_driver_and_distributed_paths_identical(spark, sf_smoke):
-    """The shared cosine-Lloyd trainer's two paths (driver numpy loop
-    vs per-round distributed partial-agg) must produce the identical
-    IVF coarse codebook — same discipline as the dedup routing
-    codebook's forced-fallback test."""
-    from distributed_mapreduce_server_spark.catalog import load_tables
-    from distributed_mapreduce_server_spark.operators.similarity import (
-        IVF_TRAIN_ITERS,
-        N_CENTROIDS,
-        N_QUERIES,
-        _train_cosine_codebook,
-    )
-    from pyspark.sql import functions as F
-
-    emb = load_tables(spark, sf_smoke, register_views=False)["embeddings"].select(
-        "vec_id", "embedding"
-    )
-    cand = emb.filter(F.col("vec_id") >= N_QUERIES)
-    ids_d, mat_d = _train_cosine_codebook(
-        spark, cand, N_QUERIES + N_CENTROIDS, IVF_TRAIN_ITERS
-    )
-    ids_x, mat_x = _train_cosine_codebook(
-        spark,
-        cand,
-        N_QUERIES + N_CENTROIDS,
-        IVF_TRAIN_ITERS,
-        force_distributed=True,
-    )
-    assert (ids_d == ids_x).all()
-    assert np.array_equal(mat_d, mat_x)
-
-
-def test_pq_codebook_driver_and_distributed_paths_identical(spark, sf_smoke):
-    """Same forced-fallback discipline for the per-subspace PQ
-    trainer: both paths land on the identical stitched codebook."""
-    from distributed_mapreduce_server_spark.catalog import load_tables
-    from distributed_mapreduce_server_spark.operators.similarity import (
-        _pq_codebook,
-    )
-
-    emb = load_tables(spark, sf_smoke, register_views=False)["embeddings"]
-    ids_d, mat_d = _pq_codebook(emb)
-    ids_x, mat_x = _pq_codebook(emb, force_distributed=True)
-    assert (ids_d == ids_x).all()
-    assert np.array_equal(mat_d, mat_x)
 
 
 def test_lr_training_loss_monotone_and_filter_consistent(spark, sf_smoke):

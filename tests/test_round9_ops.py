@@ -417,21 +417,6 @@ def test_unigram_driver_and_distributed_paths_identical(spark, sf_smoke):
     assert a[4] == b[4]  # final costs
 
 
-def test_route_codebook_driver_and_distributed_paths_identical(spark, sf_smoke):
-    """The driver numpy fast path and the distributed per-round loop
-    must land on the SAME codebook (both quantize cosines to 1e-4 and
-    means to 1e-6, so sum-order noise cannot move a fixed point) —
-    the forced-fallback discipline the BPE trainer established."""
-    import numpy as np
-
-    from distributed_mapreduce_server_spark.operators.dedup import _route_codebook
-
-    ids_d, mat_d = _route_codebook(spark, sf_smoke)
-    ids_x, mat_x = _route_codebook(spark, sf_smoke, force_distributed=True)
-    assert np.array_equal(ids_d, ids_x)
-    assert np.array_equal(mat_d, mat_x)
-
-
 def test_probe_sweep_monotone_and_agrees_with_routed_eval(spark, sf_smoke):
     """The tuning curve must be internally consistent: widening the
     probe width can only ADD candidates and catch MORE exact pairs,

@@ -3,7 +3,18 @@ agree with brute force within its bucket, and recall must be sane."""
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+
+from distributed_mapreduce_server_spark.operators.dedup import ROUTE_ITERS, ROUTE_K
 from distributed_mapreduce_server_spark.operators.similarity import (
+    IVF_TRAIN_ITERS,
+    KMEANS_ITERS,
+    KMEANS_K,
+    N_CENTROIDS,
+    N_QUERIES,
+    PQ_K,
+    PQ_TRAIN_ITERS,
     sim_cosine_topk,
     sim_lsh_ann,
 )
@@ -53,29 +64,74 @@ def test_quantize_reconstruction_bound(spark, sf_dir):
         assert r["scale"] > 0
 
 
+@pytest.mark.parametrize(
+    "metric, first_id, init, iters",
+    [
+        # IVF coarse quantizer: candidates only, seeded past the queries
+        pytest.param(
+            "cosine",
+            N_QUERIES,
+            range(N_QUERIES, N_QUERIES + N_CENTROIDS),
+            IVF_TRAIN_ITERS,
+            id="cosine-ivf",
+        ),
+        # dedup routing codebook: the whole corpus
+        pytest.param("cosine", 0, range(ROUTE_K), ROUTE_ITERS, id="cosine-route"),
+        pytest.param(
+            "pq", 0, range(N_QUERIES, N_QUERIES + PQ_K), PQ_TRAIN_ITERS, id="pq"
+        ),
+        pytest.param("l2", 0, range(KMEANS_K), KMEANS_ITERS, id="l2"),
+    ],
+)
+def test_codebook_driver_and_distributed_paths_identical(
+    spark, sf_smoke, metric, first_id, init, iters
+):
+    """The shared Lloyd trainer's two paths — the driver step over the
+    whole corpus as one block vs the per-Arrow-batch partial sums
+    summed by a Spark shuffle — must land on the identical codebook
+    for every metric: distances and means sit on grids far above
+    sum-order noise, so no fixed point can move."""
+    from pyspark.sql import functions as F
+
+    from distributed_mapreduce_server_spark.catalog import load_tables
+    from distributed_mapreduce_server_spark.operators.similarity import (
+        _train_codebook,
+    )
+
+    emb = (
+        load_tables(spark, sf_smoke, register_views=False)["embeddings"]
+        .select("vec_id", "embedding")
+        .filter(F.col("vec_id") >= first_id)
+    )
+    ids_d, mat_d = _train_codebook(emb, init, iters, metric)
+    ids_x, mat_x = _train_codebook(emb, init, iters, metric, force_distributed=True)
+    assert len(ids_d) > 0
+    assert np.array_equal(ids_d, ids_x)
+    assert np.array_equal(mat_d, mat_x)
+
+
 def test_kmeans_invariants(spark, sf_dir):
     """Lloyd's algorithm contracts: every vector assigned exactly once,
     cluster count bounded by K, WCSS strictly positive, and WCSS after
     more rounds <= WCSS after one round (monotone descent)."""
+    from distributed_mapreduce_server_spark.catalog import load_tables
     from distributed_mapreduce_server_spark.operators.similarity import (
-        KMEANS_K,
-        _kmeans_fit,
+        _collect_matrix,
+        _nearest,
+        _train_codebook,
         emb_kmeans,
     )
 
     summary = emb_kmeans(spark, sf_dir).collect()
     n_total = sum(r["n_vectors"] for r in summary)
-    from distributed_mapreduce_server_spark.catalog import load_tables
-
-    n_vecs = load_tables(spark, sf_dir, register_views=False)["embeddings"].count()
-    assert n_total == n_vecs
+    emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
+    _, corpus = _collect_matrix(emb)
+    assert n_total == len(corpus)
     assert 0 < len(summary) <= KMEANS_K
     assert all(r["wcss"] > 0 for r in summary)
 
-    a1, c1 = _kmeans_fit(spark, sf_dir, KMEANS_K, 1)
-    wcss_1 = a1.groupBy().sum("dist_sq").collect()[0][0]
-    a1.unpersist()
-    c1.unpersist()
+    _, c1 = _train_codebook(emb.select("vec_id", "embedding"), range(KMEANS_K), 1, "l2")
+    wcss_1 = _nearest(corpus, c1, "l2")[1].sum()
     wcss_n = sum(r["wcss"] for r in summary)
     assert wcss_n <= wcss_1 + 1e-6
 
