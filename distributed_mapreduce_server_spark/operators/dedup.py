@@ -62,6 +62,7 @@ from distributed_mapreduce_server_spark.functions import (
     perm_constants,
     tokens,
 )
+from distributed_mapreduce_server_spark.session import checkpoint_loop
 
 _result_caches: list[DataFrame] = []
 
@@ -716,10 +717,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist or count. There is no member roster either: star
     contraction keeps every node of a component of two or more in
     some edge at every round, so the final stars label exactly the
-    documents of the near-dup graph. A one-round run is 4 eager
-    actions: the shingle persist, the loop's initial signature, and
-    per round one large-star persist plus one signature; the labels
-    return lazily over the last round's checkpoint.
+    documents of the near-dup graph. A one-round run is 3 eager
+    actions: the shingle persist, the loop's initial signature and
+    one signature per round; the labels return lazily over the last
+    round's checkpoint.
     """
     pairs, e = _ngram_pairs(spark, sf_dir)
     canon = pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
@@ -755,21 +756,14 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
     instead of two exceptAll jobs. At the fixed point every edge is
     (node, component-min), so labels read directly off the stars.
 
-    Lineage management: each round's edge set becomes a LEAF via a
-    lazy ``localCheckpoint(eager=False)`` that the signature collect
-    materializes (one job, not checkpoint-then-aggregate; the
-    q_graph_kcore_peel discipline). Persist alone would leave the
-    logical plan in place, and one star round references its input
-    ~6x (sym union, mins join, two small-star reads), so the plan
-    tree grows geometrically and Catalyst re-analyzes every prior
-    round on each action — measured as a minutes-long analyzer stall
-    by round 3. Superseded rounds' blocks retire by their own rdd id;
-    the returned labels are lazy over the last round's checkpoint.
+    The loop is session.checkpoint_loop: each round's edge set is
+    checkpointed and its signature is the round's one action; the
+    loop stops when the signature is unchanged. The large-star edge
+    set is read twice inside a round (the small-star mins and the
+    rewiring join) without a persist: the two reads share one
+    exchange (``ReusedExchange`` in the final plan). The returned
+    labels are lazy over the last round's checkpoint.
     """
-    from distributed_mapreduce_server_spark.session import (
-        checkpointed_rdd_ids,
-        unpersist_rdd_ids,
-    )
 
     def _sym(canon: DataFrame) -> DataFrame:
         """Symmetric view of a canonical (u > v) edge frame."""
@@ -784,9 +778,7 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
         ).collect()[0]
         return row["n"], row["s"]
 
-    canon = canon.localCheckpoint(eager=False)
-    sig = _signature(canon)
-    while True:
+    def _star_round(canon: DataFrame, _sig) -> DataFrame:
         sym = _sym(canon)
         # large-star: m(u) = min over N(u) ∪ {u}; emit (v, m) for v > u
         # (m <= u < v, so no self-edge can appear)
@@ -798,8 +790,7 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
         )
         # small-star over the large-star output: neighbors v < u only,
         # m = min(N_<(u)); emit (w, m) for w in N_<(u) ∪ {u}, w != m
-        ls_canon = large.distinct().persist()
-        ls_canon.count()
+        ls_canon = large.distinct()
         sm = ls_canon.groupBy("u").agg(F.min("v").alias("m"))
         small = (
             ls_canon.join(sm, "u")
@@ -808,14 +799,11 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
             .unionByName(sm.select(F.col("u"), F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
         )
-        new_canon = small.distinct().localCheckpoint(eager=False)
-        new_sig = _signature(new_canon)
-        ls_canon.unpersist()
-        unpersist_rdd_ids(spark, checkpointed_rdd_ids(canon))
-        canon = new_canon
-        if new_sig == sig:
-            break
-        sig = new_sig
+        return small.distinct()
+
+    canon, _ = checkpoint_loop(
+        spark, canon, _star_round, _signature, until=lambda prev, sig: sig == prev
+    )
     # fixed point: every edge is (node, component-min). Leaves label
     # via their edge; centers label as themselves.
     return (

@@ -1289,16 +1289,19 @@ def q_events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         fround(F.sum(F.when(F.col("variant") == "A", F.col("purchase_value")).otherwise(0.0)), 2).alias("rev_a"),
         fround(F.sum(F.when(F.col("variant") == "B", F.col("purchase_value")).otherwise(0.0)), 2).alias("rev_b"),
     )
-    pa = F.col("conv_a") / F.col("n_a")
-    pb = F.col("conv_b") / F.col("n_b")
-    pooled = (F.col("conv_a") + F.col("conv_b")) / (F.col("n_a") + F.col("n_b"))
+    # try_divide: an empty variant gives NULL rates, as in DuckDB
+    pa = F.try_divide("conv_a", "n_a")
+    pb = F.try_divide("conv_b", "n_b")
+    pooled = F.try_divide(
+        F.col("conv_a") + F.col("conv_b"), F.col("n_a") + F.col("n_b")
+    )
     z = F.when(
         (pooled > 0) & (pooled < 1),
         (pa - pb)
         / F.sqrt(
             pooled
             * (F.lit(1.0) - pooled)
-            * (F.lit(1.0) / F.col("n_a") + F.lit(1.0) / F.col("n_b"))
+            * (F.try_divide(F.lit(1.0), "n_a") + F.try_divide(F.lit(1.0), "n_b"))
         ),
     )
     return agg.select(
@@ -1407,14 +1410,16 @@ def q_events_trend_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = F.col("n_days") * F.col("sxy") - F.col("sx") * F.col("sy")
     denx = F.col("n_days") * F.col("sxx") - F.col("sx") * F.col("sx")
     deny = F.col("n_days") * F.col("syy") - F.col("sy") * F.col("sy")
-    slope = num / denx
+    # try_divide: a type seen on one day only has no x spread and gets
+    # NULL fits, as in DuckDB
+    slope = F.try_divide(num, denx)
     intercept = (F.col("sy") - slope * F.col("sx")) / F.col("n_days")
     return m.select(
         "event_type",
         F.col("n_days").cast("bigint").alias("n_days"),
         fround(slope, 6).alias("slope"),
         fround(intercept, 6).alias("intercept"),
-        fround(num * num / (denx * deny), 6).alias("r2"),
+        fround(F.try_divide(num * num, denx * deny), 6).alias("r2"),
         fround(intercept + slope * (F.col("xmax") + 1), 6).alias("forecast_next"),
     ).orderBy("event_type")
 

@@ -15,12 +15,6 @@ adds the importance/shape queries a user would run next:
   in-function notes for the measured variants). At 1000 executors
   this is the standard Pregel-equivalent formulation: both sides
   hash-partition on the join key, no driver state.
-- q_pagerank_converged: the same loop run to a delta tolerance with
-  per-round localCheckpoint lineage cuts — the production form when
-  the round count is data/tolerance-driven rather than budgeted.
-  Not in the registry (a tolerance-driven run is ~75 rounds at any
-  SF — too slow for the per-round oracle drive); covered by the
-  fixed-point invariant test instead.
 - q_graph_degree_distribution: degree histogram — the 30-second
   sanity check before trusting any iterative graph result.
 
@@ -44,10 +38,10 @@ from distributed_mapreduce_server_spark.catalog import load_tables
 from distributed_mapreduce_server_spark.functions import fround
 from distributed_mapreduce_server_spark.session import (
     GRAPH_EDGE_ROWS_PER_TASK,
-    checkpointed_rdd_ids,
+    checkpoint_loop,
+    release_checkpoints,
     scoped_conf,
     sized_shuffle_partitions,
-    unpersist_rdd_ids,
 )
 
 # Iterative-loop label/keep frames broadcast only below this node
@@ -60,9 +54,6 @@ LOOP_BROADCAST_MAX_NODES = 4_000_000
 PR_ITERATIONS = 5
 PR_DAMPING = 0.85
 PR_BASE = 0.15
-# convergence-mode knobs (q_pagerank_converged)
-PR_TOL = 1e-4
-PR_MAX_ITERATIONS = 120
 
 
 def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,7 +102,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast-rank} land within 6.6-6.9 s except no-checkpoint +
     # broadcast (7.9 s: each round's broadcast re-materializes the
     # unsaved rank chain — quadratic recompute). A variable-round
-    # PageRank-to-convergence would reintroduce periodic cuts.
+    # PageRank-to-convergence would need per-round cuts: that is
+    # session.checkpoint_loop's until mode.
     # initial ranks derive FROM THE CACHE (edeg), not from the raw
     # edge lineage — otherwise round 1 silently re-runs the whole
     # edge build for the rank side.
@@ -165,67 +157,6 @@ def _pr_round(edeg: DataFrame, pr: DataFrame, base: Column | None = None) -> Dat
         )
         .select(F.col("node2").alias("node"), "pr")
     )
-
-
-def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank run TO CONVERGENCE (max |Δpr| < PR_TOL) instead of a
-    fixed round budget — the production form q_pagerank's docstring
-    deferred. Same per-round computation (so a run that converges in
-    exactly k rounds equals the fixed-k loop bit-for-bit, per-round
-    10 dp rounding included).
-
-    Loop discipline for a VARIABLE round count: every round's rank
-    frame is cut to a leaf with eager localCheckpoint — the delta
-    test forces an action per round anyway, and an uncut chain would
-    re-execute geometrically once the round count is data-dependent
-    (the q_pagerank measurement notes). The superseded round retires
-    by its own rdd id once the delta has read it. The delta itself is
-    a node-sized join of two checkpointed frames: no corpus-scale work
-    beyond the round's own join-agg. Damping guarantees termination:
-    Δ contracts by ~0.85/round (measured: 1.3e+01 at round 1 ->
-    8.6e-08 at round 117 at sf0.01, a clean x0.85 geometric decay —
-    the bipartite graph's -0.85 eigenvalue makes that rate exact), so
-    max_iter=120 covers tol=1e-4 from any start with slack; the loop
-    raises if the budget is ever exhausted (silent non-convergence
-    must not masquerade as a result). Round count is
-    tolerance-driven, NOT data-size-driven — the same ~75 rounds at
-    any SF; each round is one node-frame shuffle against the
-    persisted edges."""
-    edeg = _edges_with_outdeg(spark, sf_dir)
-    pr = (
-        edeg.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("pr", F.lit(1.0))
-        .localCheckpoint(eager=True)
-    )
-    n_rounds = 0
-    for i in range(PR_MAX_ITERATIONS):
-        new = _pr_round(edeg, pr).localCheckpoint(eager=True)
-        delta = (
-            new.alias("n")
-            .join(pr.alias("o"), "node")
-            .agg(F.max(F.abs(F.col("n.pr") - F.col("o.pr"))).alias("d"))
-            .collect()[0]["d"]
-        )
-        unpersist_rdd_ids(spark, checkpointed_rdd_ids(pr))
-        pr = new
-        n_rounds = i + 1
-        if delta < PR_TOL:
-            break
-    else:
-        edeg.unpersist()
-        raise RuntimeError(
-            f"PageRank did not reach tol={PR_TOL} in {PR_MAX_ITERATIONS} rounds"
-        )
-    edeg.unpersist()
-    return pr.select(
-        F.col("node").alias("node_id"),
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        "pr",
-        F.lit(n_rounds).alias("n_rounds"),
-    ).orderBy("node_id")
 
 
 def q_graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,43 +436,42 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     questions, and the third iterative-graph shape next to PageRank
     (fixed rounds) and connected components (fixpoint).
 
-    Loop discipline: per-round frames are cut to leaves with eager
-    localCheckpoint (the variable-round rule from
-    q_pagerank_converged), and each superseded visited/frontier frame
-    retires by its own rdd id once its successor is materialized;
-    edges persist ONCE pre-partitioned on src, so each round shuffles
-    only the frontier (frontier ⋈ edges, then an anti-join against
-    the visited set — both keyed on node).
-    Terminates when the frontier empties, bounded by BFS_MAX_ROUNDS
-    (the oracle unrolls exactly that many rounds; an empty frontier
-    makes the remaining rounds no-ops in both engines, so early exit
-    is value-identical)."""
+    The loop is session.checkpoint_loop over one visited(node, level)
+    frame: the frontier is the last level's rows, each round appends
+    the frontier's unvisited neighbors at the next level (frontier ⋈
+    edges, then an anti-join against visited — both keyed on node),
+    and the round's one action reads (last level, |visited|). Edges
+    persist ONCE pre-partitioned on src, so each round shuffles only
+    the frontier. Terminates when a round adds no node, bounded by
+    BFS_MAX_ROUNDS (the oracle unrolls exactly that many rounds; an
+    empty frontier makes the remaining rounds no-ops in both engines,
+    so early exit is value-identical)."""
     edges = _bipartite_edges(spark, sf_dir).repartition(F.col("src")).persist()
     src_node = edges.agg(F.min("src").alias("s")).collect()[0]["s"]
-    visited = spark.createDataFrame(
-        [(src_node, 0)], "node long, level int"
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    # the first frontier reads visited's own blocks
-    frontier_ids: set[int] = set()
-    for lvl in range(1, BFS_MAX_ROUNDS + 1):
+
+    def step(visited: DataFrame, last: tuple[int, int]) -> DataFrame:
+        level = last[0]
+        frontier = visited.filter(F.col("level") == level).select("node")
         nxt = (
             edges.join(frontier, edges["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        nxt_ids = checkpointed_rdd_ids(nxt)
-        if nxt.count() == 0:
-            unpersist_rdd_ids(spark, nxt_ids)
-            break
-        new_visited = visited.unionAll(
-            nxt.withColumn("level", F.lit(lvl))
-        ).localCheckpoint(eager=True)
-        unpersist_rdd_ids(spark, checkpointed_rdd_ids(visited) | frontier_ids)
-        visited, frontier, frontier_ids = new_visited, nxt, nxt_ids
-    unpersist_rdd_ids(spark, frontier_ids)
+        return visited.unionAll(nxt.withColumn("level", F.lit(level + 1)))
+
+    def observe(visited: DataFrame) -> tuple[int, int]:
+        row = visited.agg(F.max("level"), F.count("*")).collect()[0]
+        return row[0], row[1]
+
+    visited, _ = checkpoint_loop(
+        spark,
+        spark.createDataFrame([(src_node, 0)], "node long, level int"),
+        step,
+        observe,
+        rounds=BFS_MAX_ROUNDS,
+        until=lambda prev, obs: obs[1] == prev[1],
+    )
     edges.unpersist()
     return (
         visited.groupBy("level")
@@ -791,96 +721,80 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     speed (how fast the periphery unravels), not just the fixed
     point.
 
-    Scale shape (r14 reshape): each round is ONE job — two
+    Scale shape (r14 reshape): the loop is session.checkpoint_loop
+    over the |V|-row DEGREE frame, each round ONE job — two
     broadcast-hinted semi-joins restricting the ORIGINAL checkpointed
-    edge frame to the current survivor set, one degree reduction
-    (explode(array(u, v)) partial agg), and a lazy localCheckpoint of
-    the |V|-row DEGREE frame whose materializing stats collect yields
-    both round counts. The surviving |E|-row edge frame is never
-    materialized (the former loop eagerly checkpointed it every round
-    just to read it back once — node-sized state is the only thing
-    the loop writes now); restricting the original edges to the
-    shrinking survivor set is identical to compounding per-round
-    restrictions because survivors only shrink. Superseded degree
-    frames retire via their OWN backing rdd id
-    (session.checkpointed_rdd_ids — the concurrency-safe discipline).
-    Rounds are FIXED, so the DuckDB oracle unrolls the same peel as
-    MATERIALIZED CTEs."""
+    edge frame to the survivors of the previous round's degrees, one
+    degree reduction (explode(array(u, v)) partial agg) and the stats
+    collect that materializes the round and yields both its counts.
+    The surviving |E|-row edge frame is never materialized:
+    restricting the original edges to the shrinking survivor set is
+    identical to compounding per-round restrictions because survivors
+    only shrink. Rounds are FIXED, so the DuckDB oracle unrolls the
+    same peel as MATERIALIZED CTEs."""
     # lazy checkpoint: the count below is the materializing action
-    # (one job, not checkpoint-then-count).
+    # (one job, not checkpoint-then-count); it also sizes the
+    # per-round shuffle (SCALING.md finding 1).
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    edge_ids = checkpointed_rdd_ids(edges)
-    # Materializes the checkpoint AND feeds the per-round shuffle
-    # sizing below (SCALING.md finding 1).
     m = edges.count()
-    # r14 reshape (guide §2.3/§8: move heavy bytes once, iterate on a
-    # lightweight proxy): the former loop MATERIALIZED the surviving
-    # |E|-row edge frame every round (an eager localCheckpoint write of
-    # ~1M rows per round at sf0.1, 4 jobs/round) only to read it back
-    # for the next degree count. The edge set never needs to be
-    # materialized again: restricting the ORIGINAL checkpointed edges
-    # to the current survivor set (both endpoints) is identical to
-    # compounding per-round restrictions (survivors only shrink), so
-    # each round is ONE job — two broadcast-hinted semi-joins against
-    # the node-sized survivor frame, one degree aggregation, and a
-    # lazy localCheckpoint of the |V|-row DEGREE frame whose
-    # materializing action also collects both round stats:
-    # n_keep = |{d >= K}| (this round's n_nodes) and sum(d)/2 = the
-    # PREVIOUS round's surviving-edge count (each surviving edge
-    # contributes to exactly two node degrees). Edge-frame writes are
-    # gone; the only per-round state is node-sized. AQE is scoped off
-    # while the survivor set is broadcastable — fixed-shape broadcast
-    # rounds gain nothing from re-planning (see q_graph_community_lpa);
-    # a 100 TB |V| over LOOP_BROADCAST_MAX_NODES keeps AQE and the
-    # shuffle semi-join plan.
-    keep = None
-    keep_ids: set[int] = set()
-    stats = []  # per round: (n_keep, tot_edges_of_input)
-    bcast = True
     shuffle = {
         "spark.sql.shuffle.partitions": sized_shuffle_partitions(m, GRAPH_EDGE_ROWS_PER_TASK)
     }
-    # rounds 1..R restrict by the previous survivor set; one extra
-    # pass after round R prices row R's surviving-edge count.
-    for r in range(KCORE_ROUNDS + 1):
-        e_r = edges
-        if keep is not None:
-            keep_u = keep.select(F.col("node").alias("u"))
-            keep_v = keep.select(F.col("node").alias("v"))
-            if bcast:
-                keep_u, keep_v = F.broadcast(keep_u), F.broadcast(keep_v)
-            e_r = e_r.join(keep_u, "u", "left_semi").join(keep_v, "v", "left_semi")
-        with scoped_conf(
-            spark,
-            {**shuffle, "spark.sql.adaptive.enabled": "false"}
-            if (bcast and keep is not None)
-            else shuffle,
-        ):
-            # explode(array(u, v)) = the same endpoint multiset as
-            # union(select u, select v) in ONE scan of the edge frame
-            # instead of two (measured 1.12 -> 0.82 s for the degree
-            # job at sf0.1).
-            deg = (
-                e_r.select(F.explode(F.array("u", "v")).alias("node"))
-                .groupBy("node")
-                .agg(F.count("*").alias("d"))
-                .localCheckpoint(eager=False)
-            )
-            deg_ids = checkpointed_rdd_ids(deg)
-            row = deg.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("d") >= KCORE_K, 1)), F.lit(0)
-                ).alias("n_keep"),
-                F.coalesce((F.sum("d") / 2).cast("bigint"), F.lit(0)).alias(
-                    "tot_edges"
-                ),
-            ).collect()[0]
-        stats.append((int(row["n_keep"]), int(row["tot_edges"])))
-        unpersist_rdd_ids(spark, keep_ids)
+
+    def degrees(e: DataFrame) -> DataFrame:
+        # explode(array(u, v)) = the same endpoint multiset as
+        # union(select u, select v) in ONE scan of the edge frame
+        # instead of two (measured 1.12 -> 0.82 s for the degree job
+        # at sf0.1).
+        return (
+            e.select(F.explode(F.array("u", "v")).alias("node"))
+            .groupBy("node")
+            .agg(F.count("*").alias("d"))
+        )
+
+    def bcast(last: tuple[int, int] | None) -> bool:
+        # survivors broadcast while they fit; round 0 has no join
+        return last is not None and last[0] <= LOOP_BROADCAST_MAX_NODES
+
+    def step(deg: DataFrame, last: tuple[int, int]) -> DataFrame:
         keep = deg.filter(F.col("d") >= KCORE_K).select("node")
-        keep_ids = deg_ids
-        bcast = bcast and row["n_keep"] <= LOOP_BROADCAST_MAX_NODES
-    unpersist_rdd_ids(spark, keep_ids | edge_ids)
+        keep_u = keep.select(F.col("node").alias("u"))
+        keep_v = keep.select(F.col("node").alias("v"))
+        if bcast(last):
+            keep_u, keep_v = F.broadcast(keep_u), F.broadcast(keep_v)
+        return degrees(
+            edges.join(keep_u, "u", "left_semi").join(keep_v, "v", "left_semi")
+        )
+
+    def observe(deg: DataFrame) -> tuple[int, int]:
+        # n_keep = |{d >= K}| (this round's n_nodes) and sum(d)/2 =
+        # the edge count of the round's INPUT (each edge contributes
+        # to exactly two node degrees)
+        row = deg.agg(
+            F.coalesce(F.sum(F.when(F.col("d") >= KCORE_K, 1)), F.lit(0)),
+            F.coalesce((F.sum("d") / 2).cast("bigint"), F.lit(0)),
+        ).collect()[0]
+        return int(row[0]), int(row[1])
+
+    # AQE is scoped off for the broadcast rounds: fixed-shape
+    # broadcast rounds gain nothing from re-planning (see
+    # q_graph_community_lpa); a 100 TB |V| over
+    # LOOP_BROADCAST_MAX_NODES keeps AQE and the shuffle semi-join
+    # plan. Rounds 1..R restrict by the previous survivor set; one
+    # extra pass after round R prices row R's surviving-edge count.
+    deg, stats = checkpoint_loop(
+        spark,
+        degrees(edges),
+        step,
+        observe,
+        rounds=KCORE_ROUNDS,
+        confs=lambda last: (
+            {**shuffle, "spark.sql.adaptive.enabled": "false"}
+            if bcast(last)
+            else shuffle
+        ),
+    )
+    release_checkpoints(spark, deg, edges)
     # row r reports the survivors of round r's filter and the edge set
     # RESTRICTED to them — which is exactly round r+1's input size.
     rows = [
@@ -924,70 +838,67 @@ def q_graph_community_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     HashAggregate count, then argmax via max(struct(c, -lbl))) paid a
     second Exchange AND two SortAggregate sorts per round: a struct
     buffer cannot hash-aggregate, so the executed plans showed
-    SortAggregate partial/final around the argmax exchange. The label
-    frame is cut to a leaf per round
-    with eager localCheckpoint, superseded rounds retired via each
-    frame's OWN rdd id (session.checkpointed_rdd_ids — the
-    concurrency-safe discipline). Rounds are FIXED, so the DuckDB
-    oracle unrolls the same propagation as MATERIALIZED CTEs."""
+    SortAggregate partial/final around the argmax exchange. The loop
+    is session.checkpoint_loop over the label frame; each round's one
+    action is a count, and round 0's count (|V|) gates the per-round
+    broadcast. The community sizes return lazily over the last
+    round's labels. Rounds are FIXED, so the DuckDB oracle unrolls the
+    same propagation as MATERIALIZED CTEs."""
     # lazy checkpoint: the count below materializes it in one job.
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    edge_ids = checkpointed_rdd_ids(edges)
     # Materializes the checkpoint; sizes the per-round label-vote
     # shuffle with the edge frame (SCALING.md finding 1).
     m = edges.count()
     und = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
+
+    def bcast(n_nodes: int | None) -> bool:
+        # above the cap the rounds keep the shuffle-join plan; a
+        # 100 TB |V| outgrows any broadcast
+        return n_nodes is not None and n_nodes <= LOOP_BROADCAST_MAX_NODES
+
+    def step(labels: DataFrame, n_nodes: int) -> DataFrame:
+        # mode(lbl, deterministic=true) = the most frequent neighbor
+        # label, ties to the SMALLEST — exactly the max(struct(c,
+        # -lbl)) argmax over per-(node, lbl) counts, fused into one
+        # aggregation (one Exchange where two were; no SortAggregate
+        # struct sorts).
+        lbl_side = labels.withColumnsRenamed({"node": "dst"})
+        if bcast(n_nodes):
+            lbl_side = F.broadcast(lbl_side)
+        return (
+            und.join(lbl_side, "dst")
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.mode(F.col("lbl"), True).alias("lbl"))
+        )
+
     with scoped_conf(
         spark,
         {"spark.sql.shuffle.partitions": sized_shuffle_partitions(m, GRAPH_EDGE_ROWS_PER_TASK)},
     ):
-        labels = (
-            und.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("lbl"))
-            .localCheckpoint(eager=True)
+        # Fixed-shape rounds: every join is explicitly broadcast-hinted
+        # and every aggregation's input is the same checkpointed edge
+        # frame, so AQE has nothing to re-optimize — but it DOES split
+        # each round into extra broadcast-materialization jobs and
+        # re-planning passes, which dominate a sub-second round (r14,
+        # guide §1.2/§2.6). Static planning keeps each round one
+        # 2-stage job.
+        labels, _ = checkpoint_loop(
+            spark,
+            und.select(F.col("src").alias("node")).distinct().select(
+                "node", F.col("node").alias("lbl")
+            ),
+            step,
+            lambda labels: labels.count(),
+            rounds=LPA_ROUNDS,
+            confs=lambda n_nodes: (
+                {"spark.sql.adaptive.enabled": "false"} if bcast(n_nodes) else {}
+            ),
         )
-        label_ids = checkpointed_rdd_ids(labels)
-        # |V|: cheap count of the materialized label leaf — gates the
-        # per-round broadcast hint (above the cap the rounds keep the
-        # shuffle-join plan; a 100 TB |V| outgrows any broadcast).
-        n_nodes = labels.count()
-        bcast = n_nodes <= LOOP_BROADCAST_MAX_NODES
-        # Fixed-shape rounds: every join below is explicitly
-        # broadcast-hinted and every aggregation's input is the same
-        # cached edge frame, so AQE has nothing to re-optimize — but
-        # it DOES split each round into extra broadcast-materialization
-        # jobs and re-planning passes, which dominate a sub-second
-        # round (r14, guide §1.2/§2.6). Static planning keeps each
-        # round one 2-stage job. Restored on exit for the final agg.
-        loop_confs = (
-            {"spark.sql.adaptive.enabled": "false"} if bcast else {}
-        )
-        with scoped_conf(spark, loop_confs):
-            for _ in range(LPA_ROUNDS):
-                # mode(lbl, deterministic=true) = the most frequent
-                # neighbor label, ties to the SMALLEST — exactly the
-                # max(struct(c, -lbl)) argmax over per-(node, lbl)
-                # counts, fused into one aggregation (one Exchange
-                # where two were; no SortAggregate struct sorts).
-                lbl_side = labels.withColumnsRenamed({"node": "dst"})
-                if bcast:
-                    lbl_side = F.broadcast(lbl_side)
-                nxt = (
-                    und.join(lbl_side, "dst")
-                    .groupBy(F.col("src").alias("node"))
-                    .agg(F.mode(F.col("lbl"), True).alias("lbl"))
-                    .localCheckpoint(eager=True)
-                )
-                nxt_ids = checkpointed_rdd_ids(nxt)
-                unpersist_rdd_ids(spark, label_ids)
-                labels, label_ids = nxt, nxt_ids
-        out = (
-            labels.groupBy(F.col("lbl").alias("community"))
-            .agg(F.count("*").cast("bigint").alias("n_nodes"))
-            .localCheckpoint(eager=True)
-        )
-    unpersist_rdd_ids(spark, label_ids | edge_ids)
-    return out.orderBy("community")
+    release_checkpoints(spark, edges)
+    return (
+        labels.groupBy(F.col("lbl").alias("community"))
+        .agg(F.count("*").cast("bigint").alias("n_nodes"))
+        .orderBy("community")
+    )

@@ -2527,7 +2527,8 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n") * F.col(f"ss_{a}") - F.col(f"s_{a}") * F.col(f"s_{a}"))
             * (F.col("n") * F.col(f"ss_{b}") - F.col(f"s_{b}") * F.col(f"s_{b}"))
         )
-        return num / den
+        # try_divide: a constant column (one row) gives NULL, as in DuckDB
+        return F.try_divide(num, den)
 
     rows = F.array(
         *[

@@ -765,9 +765,8 @@ def _pca_fit(spark: SparkSession, sf_dir: str):
     from distributed_mapreduce_server_spark.functions import fround_scalar
 
     cov_rows = _cov_enriched(spark, sf_dir).collect()
-    dim = max(r["j"] for r in cov_rows)
-    C = np.zeros((dim, dim))
-    means = np.zeros(dim)
+    C = np.zeros((EMB_DIM, EMB_DIM))
+    means = np.zeros(EMB_DIM)
     trace = 0.0
     for r in cov_rows:
         C[r["i"] - 1, r["j"] - 1] = r["cov"]
@@ -777,7 +776,8 @@ def _pca_fit(spark: SparkSession, sf_dir: str):
             trace += r["cov"]
     vals, vecs = np.linalg.eigh(C)  # ascending
     top = vecs[:, ::-1][:, :PCA_K]  # top-K components, leading first
-    return top, means, vals[::-1][:PCA_K], fround_scalar(trace, 4)
+    # no rows: a NULL trace, as DuckDB's SUM over no rows
+    return top, means, vals[::-1][:PCA_K], fround_scalar(trace, 4) if cov_rows else None
 
 
 def _pca_project_df(spark: SparkSession, sf_dir: str, comp, means) -> DataFrame:
@@ -855,7 +855,9 @@ def emb_pca_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.avg(f"pc{k}").alias(f"mean{k}"),
             F.var_pop(f"pc{k}").alias(f"var{k}"),
         ]
-    stats = proj.agg(*aggs).collect()[0]
+    # no rows: the NULL moments read as 0.0, the zero covariance's
+    # eigenvalues, so every check holds vacuously (DuckDB pins TRUE)
+    stats = {k: v or 0.0 for k, v in proj.agg(*aggs).collect()[0].asDict().items()}
     gram = comp.T @ comp
     rows = []
     for k in range(1, PCA_K + 1):
@@ -872,7 +874,7 @@ def emb_pca_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(abs(stats[f"var{k}"] - float(vals[k - 1])) <= 1e-3),
                 bool(ortho),
                 bool(ordered),
-                float(trace),
+                trace,
             )
         )
     return spark.createDataFrame(
@@ -1211,7 +1213,9 @@ def sim_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_ret = got.count()
         n_hit = got.join(exact, ["query_id", "neighbor_id"], "left_semi").count()
         got.unpersist()
-        rows.append((name, n_ret, n_hit, fround_scalar(n_hit / n_exact, 4)))
+        # no exact neighbors (no queries): recall is NULL, as in DuckDB
+        recall = fround_scalar(n_hit / n_exact, 4) if n_exact else None
+        rows.append((name, n_ret, n_hit, recall))
     exact.unpersist()
     return spark.createDataFrame(
         rows, "arm string, n_returned bigint, n_hits bigint, recall_at_k double"

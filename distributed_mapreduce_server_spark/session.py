@@ -182,42 +182,28 @@ def retire_persistent_rdds(spark: SparkSession) -> int:
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     """Snapshot the ids of every currently-persisted RDD (cache AND
-    localCheckpoint blocks). Diffing two snapshots around a
-    ``localCheckpoint(eager=True)`` isolates exactly that frame's
-    block set, so iterative operators can retire superseded rounds
-    with :func:`unpersist_rdd_ids` instead of leaking every round's
-    checkpoint for the life of the session.
+    localCheckpoint blocks). Tests diff two snapshots around an
+    operator to count the blocks it left live.
 
-    SINGLE-THREADED-SESSION ASSUMPTION (ADVICE r8): the diff captures
-    ANY RDD persisted in the window — if another query runs
-    concurrently in the same SparkSession, its cache/checkpoint
-    blocks can land in the diff and be unpersisted by the caller;
-    for a localCheckpointed frame (lineage cut) that is an
-    unrecoverable job failure, not a recompute. Prefer
-    :func:`checkpointed_rdd_ids` (per-frame, concurrency-safe) for
-    eagerly localCheckpointed frames — the snapshot diff remains for
-    frames persisted via ``persist()`` where no single backing RDD is
-    reachable from the plan."""
+    SINGLE-THREADED-SESSION ASSUMPTION (ADVICE r8): a diff captures
+    ANY RDD persisted in the window, a concurrent query's included.
+    Retirement therefore never works off a diff: operators release
+    their own frames with :func:`release_checkpoints`, which reads
+    each frame's block id off its own plan."""
     return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
 def checkpointed_rdd_ids(df) -> set[int]:
     """The persisted block id of a localCheckpointed DataFrame, read
-    off the frame's own plan — concurrency-safe retirement (VERDICT
-    r9: a snapshot diff can only assume a single-threaded session;
-    this cannot capture a neighbor's blocks). After
-    ``localCheckpoint(eager=True)`` the analyzed plan IS a
-    ``LogicalRDD`` wrapping the checkpointed internal RDD, and that
-    RDD's id is exactly the persisted block set (verified: the id
-    equals the snapshot diff around the checkpoint).
-
-    A lazy ``localCheckpoint(eager=False)`` frame (the kcore/LPA round
-    frames) has the same LogicalRDD plan, so its id is returned too —
-    but its blocks exist only once an action has materialized the
-    frame: the caller must materialize it before the id means
-    anything for retirement. Raises loudly if the plan is not a
-    LogicalRDD — callers must pass the checkpoint RESULT, not an
-    arbitrary frame."""
+    off the frame's own plan — concurrency-safe, unlike a snapshot
+    diff. The analyzed plan of a ``localCheckpoint`` result, eager or
+    lazy, IS a ``LogicalRDD`` wrapping the checkpointed internal RDD,
+    and that RDD's id is exactly the persisted block set (verified:
+    the id equals the snapshot diff around an eager checkpoint). A
+    lazy checkpoint's blocks exist only once an action has
+    materialized the frame; until then the id names no live block.
+    Raises loudly if the plan is not a LogicalRDD — callers must pass
+    the checkpoint RESULT, not an arbitrary frame."""
     plan = df._jdf.queryExecution().analyzed()
     cls = plan.getClass().getName()
     if not cls.endswith("LogicalRDD"):
@@ -228,17 +214,69 @@ def checkpointed_rdd_ids(df) -> set[int]:
     return {int(plan.rdd().id())}
 
 
-def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> int:
-    """Release the storage blocks of the given persistent RDD ids
-    (non-blocking); returns how many were still live. Safe on ids
-    already cleaned by the ContextCleaner. Same fail-loud contract as
-    :func:`retire_persistent_rdds`: a localCheckpointed frame whose
-    blocks are released cannot be acted on again (lineage is cut) —
-    only retire frames genuinely superseded."""
+def release_checkpoints(spark: SparkSession, *frames) -> int:
+    """Release the storage blocks of the given localCheckpointed
+    frames (non-blocking); returns how many were still live. Safe on
+    blocks the ContextCleaner already dropped. Same fail-loud contract
+    as :func:`retire_persistent_rdds`: a released frame's lineage is
+    cut, so a later action on it fails instead of recomputing — only
+    release frames genuinely done with."""
     m = spark.sparkContext._jsc.getPersistentRDDs()
     n = 0
-    for i in ids:
+    for i in set().union(*map(checkpointed_rdd_ids, frames)):
         if m.containsKey(i):
             m.get(i).unpersist(False)
             n += 1
     return n
+
+
+def checkpoint_loop(
+    spark: SparkSession, state, step, observe, rounds: int | None = None, until=None, confs=None
+):
+    """Drive an iterative operator one checkpointed round at a time —
+    the per-round map -> shuffle -> reduce resubmission of an
+    iterative MapReduce driver — and return ``(state, observations)``.
+
+    Round 0 is ``state``; round r >= 1 is ``step(state, obs)``, built
+    lazily over round r-1's frame and observation. Every round's frame
+    is cut to a leaf with a lazy ``localCheckpoint(eager=False)`` and
+    ``observe(frame)`` is the round's single action: it materializes
+    the checkpoint and returns what the loop reads (a count, a stats
+    row, a signature). Once it has, the superseded round's blocks are
+    released by their own rdd id, so the loop leaves exactly one block
+    live: the returned state's, which the caller owns (return a frame
+    lazy over it, or :func:`release_checkpoints` it).
+
+    The loop stops after ``rounds`` rounds or as soon as
+    ``until(prev_obs, obs)`` holds, whichever comes first.
+    ``confs(last_obs)`` (``None`` for round 0) gives SQL confs scoped
+    around a round's checkpoint and action: a lazy checkpoint plans
+    its frame when it is taken (and with AQE on runs its map stages
+    there), so both must sit inside the scope.
+
+    Why a checkpoint per round: a persisted frame keeps its logical
+    plan, and a round that reads its predecessor several times (star
+    contraction: ~6x) grows the plan geometrically, so Catalyst
+    re-analyzes every prior round on each action — a minutes-long
+    analyzer stall by round 3. A lazy checkpoint that the round's own
+    action materializes costs one job where checkpoint-then-count
+    costs two."""
+    if rounds is None and until is None:
+        raise ValueError("checkpoint_loop needs rounds or until")
+
+    def cut(frame, last):
+        with scoped_conf(spark, confs(last) if confs else {}):
+            frame = frame.localCheckpoint(eager=False)
+            return frame, observe(frame)
+
+    state, obs = cut(state, None)
+    observations = [obs]
+    while rounds is None or len(observations) <= rounds:
+        prev = obs
+        nxt, obs = cut(step(state, prev), prev)
+        release_checkpoints(spark, state)
+        state = nxt
+        observations.append(obs)
+        if until is not None and until(prev, obs):
+            break
+    return state, observations

@@ -49,6 +49,17 @@ CODEBOOK_KEYS = [  # 1-D numpy codebooks and matrices (AxisError)
     "sim_mmr_rerank",
     "sim_pq_adc_ann",
 ]
+# The iterative operators on session.checkpoint_loop (they passed
+# before it): an empty or one-edge graph ends the loop in round 0 or 1.
+LOOP_KEYS = [
+    "dedup_clusters",
+    "dedup_clusters_bigstar",
+    "dedup_semantic_clusters",
+    "q_graph_bfs_levels",
+    "q_graph_community_lpa",
+    "q_graph_kcore_peel",
+]
+
 DEGENERATE_INPUT_KEYS = {
     "sf_empty": [
         "q_gini_revenue",  # DIVIDE_BY_ZERO
@@ -56,7 +67,10 @@ DEGENERATE_INPUT_KEYS = {
         "stream_upsert_foreachbatch",  # state dir never written
         "text_corpus_report",  # DIVIDE_BY_ZERO
         "emb_kmeans",  # guards the one Lloyd trainer (it passed before)
+        "emb_pca_invariants",  # max() over no covariance rows
+        "sim_ann_eval",  # recall over no exact neighbors
         *CODEBOOK_KEYS,
+        *LOOP_KEYS,
     ],
     "sf_one": [
         # no IVF candidate or PQ seed row: an empty codebook
@@ -72,7 +86,13 @@ DEGENERATE_INPUT_KEYS = {
         # no candidate pairs: DIVIDE_BY_ZERO
         "dedup_routed_eval",
         "dedup_routed_nested_eval",
+        # one row: no variance or an empty variant, DIVIDE_BY_ZERO
+        "q_corr_matrix",
+        "q_events_ab_test",
+        "q_events_trend_fit",
         "emb_kmeans",
+        "sim_ann_eval",  # recall over no exact neighbors
+        *LOOP_KEYS,
     ],
 }
 
@@ -94,6 +114,11 @@ def test_query_matches_oracle_on_empty_tables(fixture, name, spark, request):
     finally:
         con.close()
     assert not problems, f"{name} on {fixture}: " + "; ".join(problems)
+
+
+def test_pca_project_on_empty_tables_returns_no_rows(spark, sf_empty):
+    # rows-only (no oracle): DuckDB would project no embedding either
+    assert QUERIES["emb_pca_project"](spark, sf_empty).count() == 0
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

@@ -34,10 +34,6 @@ ALLOWED_UNREGISTERED = {
     # DuckDB-side oracle HELPERS (return SQL, not DataFrames)
     "pysource_oracle",
     "pysource_stream_oracle",
-    # intentional exclusion: convergence-variant of q_pagerank whose
-    # round count is data-dependent (no stable oracle); kept as the
-    # documented iterate-until-tolerance reference implementation
-    "q_pagerank_converged",
     # harness helper for the streaming ingest tests, not a query
     "stream_ingest_readback",
 }

@@ -442,36 +442,3 @@ def test_token_entropy_empty_doc_parity(spark, tmp_path):
         assert str(rows[0]) == "0.0"  # not -0.0
     finally:
         refresh_tables()
-
-
-def test_pagerank_converged_fixed_point(spark, sf_smoke):
-    """q_pagerank_converged must terminate within budget, report its
-    round count, and actually sit at a fixed point: one EXTRA round
-    applied to the result moves no rank by more than the tolerance
-    band (delta contracts x0.85/round, so the post-termination
-    residual stays under tol). The plan must be checkpoint-rooted —
-    a variable-round loop that kept lineage would re-execute
-    geometrically."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_server_spark.operators import graph
-
-    res = graph.q_pagerank_converged(spark, sf_smoke)
-    rows = res.collect()
-    n_rounds = rows[0]["n_rounds"]
-    assert 1 < n_rounds < graph.PR_MAX_ITERATIONS
-    edeg = graph._edges_with_outdeg(spark, sf_smoke)
-    pr = res.select(F.col("node_id").alias("node"), "pr")
-    extra = graph._pr_round(edeg, pr)
-    resid = (
-        extra.alias("n")
-        .join(pr.alias("o"), "node")
-        .agg(F.max(F.abs(F.col("n.pr") - F.col("o.pr"))).alias("d"))
-        .collect()[0]["d"]
-    )
-    edeg.unpersist()
-    assert resid < graph.PR_TOL, resid
-    # bounded lineage: the returned plan reads the final checkpoint,
-    # not a 100+-round join chain
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 4, plan.count("Exchange")

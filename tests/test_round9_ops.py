@@ -10,16 +10,13 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_server_spark.catalog import load_tables
 from distributed_mapreduce_server_spark.operators.dedup import (
     COSINE_DEDUP_T,
     SWEEP_THRESHOLDS,
-    dedup_clusters,
     dedup_embedding_cosine,
-    dedup_semantic_clusters,
     dedup_threshold_sweep,
 )
 from distributed_mapreduce_server_spark.operators.events import (
@@ -27,13 +24,6 @@ from distributed_mapreduce_server_spark.operators.events import (
     BOT_MIN_GAPS,
     q_events_bot_flags,
     q_events_user_entropy,
-)
-from distributed_mapreduce_server_spark.operators.graph import (
-    KCORE_K,
-    KCORE_ROUNDS,
-    q_graph_bfs_levels,
-    q_graph_kcore_peel,
-    q_pagerank_converged,
 )
 from distributed_mapreduce_server_spark.operators.relational import (
     CORR_COLS,
@@ -149,41 +139,6 @@ def test_bot_flags_respect_gates(spark, sf_dir):
     # a minority, not the population
     ev = load_tables(spark, sf_dir, register_views=False)["events"]
     assert len(rows) < ev.select("user_id").distinct().count() / 2
-
-
-def test_kcore_peel_monotone(spark, sf_smoke):
-    rows = q_graph_kcore_peel(spark, sf_smoke).collect()
-    assert [r["round"] for r in rows] == list(range(1, KCORE_ROUNDS + 1))
-    assert all(r["k"] == KCORE_K for r in rows)
-    nodes = [r["n_nodes"] for r in rows]
-    edges = [r["n_edges"] for r in rows]
-    assert nodes == sorted(nodes, reverse=True)
-    assert edges == sorted(edges, reverse=True)
-    for r in rows:
-        assert r["n_edges"] <= r["n_nodes"] * (r["n_nodes"] - 1) // 2
-    # the peel actually peels at least once
-    assert nodes[0] > nodes[-1] or edges[0] > edges[-1]
-
-
-@pytest.mark.parametrize(
-    "op, max_live",
-    [
-        pytest.param(q_graph_kcore_peel, 0, id="q_graph_kcore_peel"),
-        # the ops below return a frame lazy over their last round's
-        # checkpoint: that one block may stay live
-        pytest.param(q_graph_bfs_levels, 1, id="q_graph_bfs_levels"),
-        pytest.param(q_pagerank_converged, 1, id="q_pagerank_converged"),
-        pytest.param(dedup_clusters, 1, id="dedup_clusters"),
-        pytest.param(dedup_semantic_clusters, 1, id="dedup_semantic_clusters"),
-    ],
-)
-def test_kcore_peel_releases_its_checkpoints(spark, sf_smoke, op, max_live):
-    from distributed_mapreduce_server_spark.session import persistent_rdd_ids
-
-    before = persistent_rdd_ids(spark)
-    op(spark, sf_smoke).collect()
-    leaked = persistent_rdd_ids(spark) - before
-    assert len(leaked) <= max_live, f"{op.__name__} leaked checkpoint blocks: {leaked}"
 
 
 def test_threshold_sweep_monotone_and_agrees_with_cosine_dedup(spark, sf_smoke):
