@@ -49,6 +49,8 @@ from __future__ import annotations
 
 import functools
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -62,7 +64,11 @@ from distributed_mapreduce_server_spark.functions import (
     perm_constants,
     tokens,
 )
-from distributed_mapreduce_server_spark.session import checkpoint_loop
+from distributed_mapreduce_server_spark.session import (
+    checkpoint_loop,
+    fetch_if_small,
+    release_checkpoints,
+)
 
 _result_caches: list[DataFrame] = []
 
@@ -717,10 +723,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist or count. There is no member roster either: star
     contraction keeps every node of a component of two or more in
     some edge at every round, so the final stars label exactly the
-    documents of the near-dup graph. A one-round run is 3 eager
-    actions: the shingle persist, the loop's initial signature and
-    one signature per round; the labels return lazily over the last
-    round's checkpoint.
+    documents of the near-dup graph. The eager actions are the
+    shingle persist and the probe of the pairs' checkpoint; a
+    near-dup graph of at most session.DRIVER_GRAPH_MAX_EDGES pairs is
+    then labeled on the driver, a larger one adds one signature per
+    star round and its labels return lazily over the last round's
+    checkpoint.
     """
     pairs, e = _ngram_pairs(spark, sf_dir)
     canon = pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
@@ -756,11 +764,15 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
     instead of two exceptAll jobs. At the fixed point every edge is
     (node, component-min), so labels read directly off the stars.
 
-    The loop is session.checkpoint_loop: each round's edge set is
-    checkpointed and its signature is the round's one action; the
-    loop stops when the signature is unchanged. The large-star edge
-    set is read twice inside a round (the small-star mins and the
-    rewiring join) without a persist: the two reads share one
+    Round 0's checkpoint of ``canon`` is probed with
+    session.fetch_if_small: a graph of at most DRIVER_GRAPH_MAX_EDGES
+    edges is labeled on the driver by :func:`_min_labels_on_driver`
+    (the same rows as array ops, no Spark round). A larger one enters
+    session.checkpoint_loop already materialized: each round's edge
+    set is checkpointed and its signature is the round's one action;
+    the loop stops when the signature is unchanged. The large-star
+    edge set is read twice inside a round (the small-star mins and
+    the rewiring join) without a persist: the two reads share one
     exchange (``ReusedExchange`` in the final plan). The returned
     labels are lazy over the last round's checkpoint.
     """
@@ -801,9 +813,17 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
         )
         return small.distinct()
 
+    # round 0's checkpoint is the probe: a small graph is labeled on
+    # the driver, a larger one enters the loop already materialized
+    round0 = canon.localCheckpoint(eager=False)
+    small = fetch_if_small(round0)
+    if small is not None:
+        release_checkpoints(spark, round0)
+        return _min_labels_on_driver(spark, small)
     canon, _ = checkpoint_loop(
-        spark, canon, _star_round, _signature, until=lambda prev, sig: sig == prev
+        spark, round0, _star_round, _signature, until=lambda prev, sig: sig == prev
     )
+    release_checkpoints(spark, round0)
     # fixed point: every edge is (node, component-min). Leaves label
     # via their edge; centers label as themselves.
     return (
@@ -812,6 +832,32 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
             canon.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))
         )
         .distinct()
+    )
+
+
+def _min_labels_on_driver(spark: SparkSession, edges: pa.Table) -> DataFrame:
+    """_star_contraction_cc's (doc_id, cluster_id) rows for a fetched
+    (u, v) edge table, as array ops: every root hooks to the smallest
+    root across its edges (``np.minimum.at``), then pointer jumping
+    (``lab = lab[lab]``) flattens each tree to its root, until every
+    edge joins one root. Labels are indices into the sorted node ids
+    and only ever decrease, so each root is its component's minimum
+    node. The rows go back as an Arrow table (no Python workers)."""
+    u, v = edges["u"].to_numpy(), edges["v"].to_numpy()
+    nodes, ends = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = ends[: len(u)], ends[len(u) :]
+    lab = np.arange(len(nodes))
+    while True:
+        la, lb = lab[a], lab[b]
+        apart = la != lb
+        if not apart.any():
+            break
+        np.minimum.at(lab, np.maximum(la, lb)[apart], np.minimum(la, lb)[apart])
+        while not np.array_equal(lab, jumped := lab[lab]):
+            lab = jumped
+    ids = edges.schema.field("u").type
+    return spark.createDataFrame(
+        pa.table({"doc_id": pa.array(nodes, ids), "cluster_id": pa.array(nodes[lab], ids)})
     )
 
 
@@ -1880,8 +1926,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the exact blocked pair-matmul — both halves are the
     components already proven at scale. The cosine pairs are already
     distinct with vec_a < vec_b, so they feed the loop as
-    (u, v) = (vec_b, vec_a) with no symmetric edge frame; the loop's
-    first checkpoint runs the pair grid once."""
+    (u, v) = (vec_b, vec_a) with no symmetric edge frame; the probe
+    of the loop's first checkpoint runs the pair grid once, and a
+    small pair set is labeled on the driver."""
     pairs = _embedding_cosine_pairs(spark, sf_dir)
     canon = pairs.select(F.col("vec_b").alias("u"), F.col("vec_a").alias("v"))
     labels = _star_contraction_cc(spark, canon)

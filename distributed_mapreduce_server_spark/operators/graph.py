@@ -6,11 +6,16 @@ natural graph hiding in the star schema. dedup.py already runs
 connected components (large-star/small-star contraction); this module
 adds the importance/shape queries a user would run next:
 
-- q_pagerank: damped PageRank, fixed ITERATIONS rounds. The classic
-  join-agg loop: contribution = pr/out_deg flows along each edge,
-  one shuffle join (edges ⋈ ranks on src) + one keyed aggregation
-  per round. Edges are persisted once (pre-partitioned on the join
-  key) and reused every round; the linear-lineage loop runs as one
+- q_pagerank: damped PageRank, fixed PR_ITERATIONS rounds:
+  contribution = pr/out_deg flows along each edge. The persisted
+  edge frame is probed once (session.fetch_if_small): a graph of at
+  most DRIVER_GRAPH_MAX_EDGES edges comes back as one Arrow table
+  and iterates on the driver in numpy — a few thousand edges do not
+  pay for a Spark job per round (McSherry et al., "Scalability! But
+  at what COST?", HotOS 2015). A larger one runs the classic
+  join-agg loop: one shuffle join (edges ⋈ ranks on src) + one
+  keyed aggregation per round, edges pre-partitioned on the join
+  key and reused every round; the linear-lineage loop runs as one
   job and only the final node-sized result is checkpointed (see the
   in-function notes for the measured variants). At 1000 executors
   this is the standard Pregel-equivalent formulation: both sides
@@ -31,14 +36,17 @@ Node encoding: customers at c_custkey·2, suppliers at l_suppkey·2+1
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_server_spark.catalog import load_tables
-from distributed_mapreduce_server_spark.functions import fround
+from distributed_mapreduce_server_spark.functions import fround, fround_np
 from distributed_mapreduce_server_spark.session import (
     GRAPH_EDGE_ROWS_PER_TASK,
     checkpoint_loop,
+    fetch_if_small,
     release_checkpoints,
     scoped_conf,
     sized_shuffle_partitions,
@@ -80,20 +88,22 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The symmetric edge set means every node has in-edges, so the
     aggregation re-covers all nodes each round (no dangling-mass
-    term needed)."""
-    # build the raw edge set ONCE: deg and the deg-annotated join
-    # both read it, and without this persist the edeg materialization
-    # would run the lineitem⋈orders+distinct build twice.
-    # edges annotated with the source's out-degree: built once,
-    # persisted PRE-PARTITIONED ON src. The persisted frame's hash
+    term needed). A graph of at most session.DRIVER_GRAPH_MAX_EDGES
+    edges is fetched once and iterated on the driver
+    (:func:`_pagerank_on_driver`); a larger one runs the distributed
+    round loop below over the same persisted edge frame."""
+    edges, edeg = _edges_with_outdeg(spark, sf_dir)
+    if edges is not None:
+        return _labeled(_pagerank_on_driver(spark, edges)).orderBy("node_id")
+    # Distributed rounds over the persisted, src-partitioned,
+    # out-degree-annotated edges: the persisted frame's hash
     # partitioning satisfies the per-round join's distribution
     # requirement, so only the (node-sized) rank frame shuffles each
-    # round — without this, the (much larger) edge frame re-shuffles
+    # round — without it, the (much larger) edge frame re-shuffles
     # every iteration. This is the bucketed-join trick applied to an
     # iterative loop.
-    edeg = _edges_with_outdeg(spark, sf_dir)
-
-    # Unlike dedup_clusters_bigstar (geometric lineage -> needs
+    #
+    # Unlike star contraction (geometric lineage -> needs
     # localCheckpoint cuts), this chain is LINEAR in the round count:
     # round i references only round i-1 plus the persisted edge frame,
     # so for a fixed small iteration budget the whole loop executes as
@@ -117,26 +127,71 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan inspection showed 61 Exchanges and 20 file scans).
     pr = pr.localCheckpoint(eager=True)
     edeg.unpersist()
+    return _labeled(pr).orderBy("node_id")
+
+
+def _labeled(pr: DataFrame) -> DataFrame:
+    """(node_id, node_type, pr) rows of a (node, pr) rank frame."""
     return pr.select(
         F.col("node").alias("node_id"),
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
         .otherwise(F.lit("supplier"))
         .alias("node_type"),
         "pr",
-    ).orderBy("node_id")
+    )
 
 
-def _edges_with_outdeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted, src-partitioned, out-degree-annotated edge frame
-    both PageRank variants loop over (see q_pagerank's notes on why
-    the pre-partitioned persist makes each round shuffle only the
-    node-sized rank frame). Caller unpersists."""
+def _edges_with_outdeg(
+    spark: SparkSession, sf_dir: str
+) -> tuple[pa.Table | None, DataFrame | None]:
+    """The purchase graph for both PageRank variants, as exactly one
+    of ``(edges, edeg)``. The symmetric edge frame is persisted and
+    probed with session.fetch_if_small: a small graph comes back as
+    its ``(src, dst)`` Arrow table. Otherwise the persisted frame
+    (already materialized by the probe, so the degree count and the
+    join below do not rebuild lineitem ⋈ orders) feeds the persisted,
+    src-partitioned, out-degree-annotated edge frame the distributed
+    rounds loop over (see q_pagerank's notes on why the
+    pre-partitioned persist makes each round shuffle only the
+    node-sized rank frame); the caller unpersists it."""
     edges = _bipartite_edges(spark, sf_dir).persist()
+    small = fetch_if_small(edges)
+    if small is not None:
+        edges.unpersist()
+        return small, None
     deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     edeg = edges.join(deg, "src").repartition(F.col("src")).persist()
     edeg.count()
     edges.unpersist()
-    return edeg
+    return None, edeg
+
+
+def _pagerank_on_driver(
+    spark: SparkSession, edges: pa.Table, personalized: bool = False
+) -> DataFrame:
+    """The (node, pr) frame of PR_ITERATIONS damped rounds over a
+    fetched ``(src, dst)`` edge table, in numpy: out-degrees by
+    ``bincount``, each round ``bincount(dst, pr[src] / deg[src])`` on
+    the same fround(·, 10) grid as :func:`_pr_round`, so the rows
+    match the distributed loop's. ``personalized`` teleports to the
+    minimum customer node and starts all rank there, as
+    q_personalized_pagerank does. The ranks go back as an Arrow table
+    (no Python workers)."""
+    nodes, s = np.unique(edges["src"].to_numpy(), return_inverse=True)
+    d = np.searchsorted(nodes, edges["dst"].to_numpy())
+    deg = np.bincount(s, minlength=len(nodes))
+    if personalized:
+        # the seed: the minimum customer node (none on an empty graph)
+        at_seed = np.isin(nodes, nodes[nodes % 2 == 0][:1])
+        pr, base = at_seed.astype(float), np.where(at_seed, PR_BASE, 0.0)
+    else:
+        pr, base = np.ones(len(nodes)), PR_BASE
+    for _ in range(PR_ITERATIONS):
+        flow = np.bincount(d, weights=pr[s] / deg[s], minlength=len(nodes))
+        pr = fround_np(base + PR_DAMPING * flow, 10)
+    return spark.createDataFrame(
+        pa.table({"node": pa.array(nodes, edges.schema.field("src").type), "pr": pr})
+    )
 
 
 def _pr_round(edeg: DataFrame, pr: DataFrame, base: Column | None = None) -> DataFrame:
@@ -603,14 +658,18 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than global PageRank backs most production
     who-to-recommend systems.
 
-    Same loop as q_pagerank (the shared _pr_round over the persisted
-    src-partitioned edge frame, linear lineage, per-round fround(10)
-    pinning both engines to one grid); the only changes are the
+    Same rounds as q_pagerank (per-round fround(10) pinning both
+    engines to one grid): a small graph iterates on the driver
+    (:func:`_pagerank_on_driver`), a larger one runs the shared
+    _pr_round over the persisted src-partitioned edge frame, where
+    the seed id is a 1-row bounded collect. The only changes are the
     seed-concentrated base term and pr₀ = 1 at the seed, 0
-    elsewhere. The seed id is a 1-row bounded collect. Output is the top-PPR_TOP_K nodes by
-    (rounded) rank — rank mass outside the seed's neighborhood decays
-    geometrically, so the top-K is the useful recommendation slate."""
-    edeg = _edges_with_outdeg(spark, sf_dir)
+    elsewhere. Output is the top-PPR_TOP_K nodes by (rounded) rank —
+    rank mass outside the seed's neighborhood decays geometrically,
+    so the top-K is the useful recommendation slate."""
+    edges, edeg = _edges_with_outdeg(spark, sf_dir)
+    if edges is not None:
+        return _ppr_top(_pagerank_on_driver(spark, edges, personalized=True))
     seed = edeg.agg(
         F.min(F.when(F.col("src") % 2 == 0, F.col("src"))).alias("s")
     ).collect()[0]["s"]
@@ -622,20 +681,13 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = F.when(F.col("dst") == seed, F.lit(PR_BASE)).otherwise(F.lit(0.0))
     for _ in range(PR_ITERATIONS):
         pr = _pr_round(edeg, pr, base)
-    out = (
-        pr.select(
-            F.col("node").alias("node_id"),
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            "pr",
-        )
-        .orderBy(F.desc("pr"), "node_id")
-        .limit(PPR_TOP_K)
-        .localCheckpoint(eager=True)
-    )
+    out = _ppr_top(pr).localCheckpoint(eager=True)
     edeg.unpersist()
     return out
+
+
+def _ppr_top(pr: DataFrame) -> DataFrame:
+    return _labeled(pr).orderBy(F.desc("pr"), "node_id").limit(PPR_TOP_K)
 
 
 def q_graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:

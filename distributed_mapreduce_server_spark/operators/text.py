@@ -1693,6 +1693,13 @@ def _lr_train(
             md5_u60(F.col("doc_id").cast("string")) % 100 >= SPLIT_PCT_VAL
         )
     n = feat.count()
+
+    def mean(total):
+        # SUM over no rows is NULL, as in the oracle: with no training
+        # rows the loss and gradients are NULL and so is every weight
+        # after round 0
+        return None if total is None else fround_scalar(total / n, 6)
+
     w = [0.0] * 5
     hist = []
     for r in range(LR_TRAIN_ROUNDS + 1):
@@ -1728,11 +1735,11 @@ def _lr_train(
                 -(F.col("y") * F.log(sc) + (1 - F.col("y")) * F.log(1 - sc))
             ).alias("l"),
         ).collect()[0]
-        hist.append((r, fround_scalar(row["l"] / n, 6), *w))
+        hist.append((r, mean(row["l"]), *w))
         if r == LR_TRAIN_ROUNDS:
             break
-        g = [fround_scalar(row[f"g{j}"] / n, 6) for j in range(5)]
-        w = [fround_scalar(w[j] - LR_RATE * g[j], 6) for j in range(5)]
+        g = [mean(row[f"g{j}"]) for j in range(5)]
+        w = [None if gj is None else fround_scalar(wj - LR_RATE * gj, 6) for wj, gj in zip(w, g)]
     if return_feat:
         return hist, w, feat_full
     feat_full.unpersist()

@@ -1271,10 +1271,15 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_neardup_index,
     )
 
-    index_dir = ensure_neardup_index(spark, sf_dir)
     docs = load_tables(spark, sf_dir, register_views=False)["documents"]
-    num, den = INCR_INDEX_FRACTION
+    # batch=N is a partition column after the idempotent-sink change;
+    # the operator's contract (and oracle) is (doc_id, status) only.
+    status_schema = StructType([docs.schema["doc_id"], StructField("status", StringType())])
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
+    if max_id is None:  # no documents: nothing to stage or stream
+        return spark.createDataFrame([], status_schema)
+    index_dir = ensure_neardup_index(spark, sf_dir)
+    num, den = INCR_INDEX_FRACTION
     cutoff = ((max_id + 1) * num) // den
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
@@ -1320,9 +1325,6 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    # batch=N is a partition column after the idempotent-sink change;
-    # the operator's contract (and oracle) is (doc_id, status) only.
-    status_schema = StructType([docs.schema["doc_id"], StructField("status", StringType())])
     out = _read_written(spark, status_schema, f"{state_dir}/status").select("doc_id", "status")
     result = spark.createDataFrame(out.collect(), out.schema)
     return result.orderBy("doc_id")

@@ -54,3 +54,20 @@ def sf_empty(tmp_path_factory):
 def sf_one(tmp_path_factory):
     """Every table of the smoke set cut to its first row."""
     return _sliced_smoke_set(tmp_path_factory.mktemp("sf_one"), 1)
+
+
+@pytest.fixture(scope="session")
+def sf_one_edge(tmp_path_factory):
+    """``sf_one`` with its lineitem row swapped for a line of its one
+    order, so the purchase graph has exactly one customer-supplier
+    edge (``sf_one``'s lineitem row joins no order)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("sf_one_edge")
+    _sliced_smoke_set(out, 1)
+    key = pq.read_table(str(out / "orders.parquet"))["o_orderkey"][0]
+    li = pq.read_table(f"{SF_SMOKE}/lineitem.parquet")
+    li = li.filter(pc.equal(li["l_orderkey"], key)).slice(0, 1)
+    pq.write_table(li, str(out / "lineitem.parquet"))
+    return str(out)

@@ -11,6 +11,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_server_spark import session
 from distributed_mapreduce_server_spark.operators.dedup import (
     dedup_clusters,
     dedup_semantic_clusters,
@@ -133,7 +134,10 @@ def test_kcore_peel_monotone(spark, sf_smoke):
         pytest.param(dedup_semantic_clusters, 1, id="dedup_semantic_clusters"),
     ],
 )
-def test_loop_releases_its_checkpoints(spark, sf_smoke, op, max_live):
+def test_loop_releases_its_checkpoints(spark, sf_smoke, monkeypatch, op, max_live):
+    # the connected-components keys would label a graph this small on
+    # the driver: force their star loop
+    monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
     before = persistent_rdd_ids(spark)
     op(spark, sf_smoke).collect()
     leaked = persistent_rdd_ids(spark) - before

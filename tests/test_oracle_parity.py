@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from distributed_mapreduce_server_spark import registry
+from distributed_mapreduce_server_spark import registry, session
 from tests.oracle_utils import compare, duckdb_conn
 
 ORACLES = registry.all_oracles()
@@ -49,8 +49,9 @@ CODEBOOK_KEYS = [  # 1-D numpy codebooks and matrices (AxisError)
     "sim_mmr_rerank",
     "sim_pq_adc_ann",
 ]
-# The iterative operators on session.checkpoint_loop (they passed
-# before it): an empty or one-edge graph ends the loop in round 0 or 1.
+# The iterative operators (they passed before session.checkpoint_loop):
+# an empty or one-edge graph ends the loop in round 0 or 1, or labels
+# on the driver.
 LOOP_KEYS = [
     "dedup_clusters",
     "dedup_clusters_bigstar",
@@ -59,6 +60,12 @@ LOOP_KEYS = [
     "q_graph_community_lpa",
     "q_graph_kcore_peel",
 ]
+
+# Graph kernels that iterate on the driver below
+# session.DRIVER_GRAPH_MAX_EDGES (``sf_one``'s purchase graph has no
+# edge either: its one line item joins no order).
+PAGERANK_KEYS = ["q_pagerank", "q_personalized_pagerank"]
+DRIVER_GRAPH_KEYS = [*PAGERANK_KEYS, "dedup_clusters", "dedup_clusters_bigstar", "dedup_semantic_clusters"]
 
 DEGENERATE_INPUT_KEYS = {
     "sf_empty": [
@@ -69,8 +76,14 @@ DEGENERATE_INPUT_KEYS = {
         "emb_kmeans",  # guards the one Lloyd trainer (it passed before)
         "emb_pca_invariants",  # max() over no covariance rows
         "sim_ann_eval",  # recall over no exact neighbors
+        "stream_neardup_ingest",  # max(doc_id) is NULL: no batch to stage
+        # SUM over no training rows is NULL: so are the loss and weights
+        "text_quality_eval",
+        "text_quality_train",
+        "text_quality_trained_filter",
         *CODEBOOK_KEYS,
         *LOOP_KEYS,
+        *PAGERANK_KEYS,
     ],
     "sf_one": [
         # no IVF candidate or PQ seed row: an empty codebook
@@ -93,6 +106,7 @@ DEGENERATE_INPUT_KEYS = {
         "emb_kmeans",
         "sim_ann_eval",  # recall over no exact neighbors
         *LOOP_KEYS,
+        *PAGERANK_KEYS,
     ],
 }
 
@@ -107,13 +121,32 @@ DEGENERATE_INPUT_KEYS = {
     ],
 )
 def test_query_matches_oracle_on_empty_tables(fixture, name, spark, request):
-    sf = request.getfixturevalue(fixture)
+    _matches_oracle(spark, request.getfixturevalue(fixture), name)
+
+
+def _matches_oracle(spark, sf, name):
     con = duckdb_conn(sf)
     try:
         problems = compare(QUERIES[name](spark, sf), con, ORACLES[name])
     finally:
         con.close()
-    assert not problems, f"{name} on {fixture}: " + "; ".join(problems)
+    assert not problems, f"{name} on {sf}: " + "; ".join(problems)
+
+
+@pytest.mark.parametrize("name", DRIVER_GRAPH_KEYS)
+def test_graph_keys_match_oracle_distributed(name, spark, sf_smoke, monkeypatch):
+    """The distributed loops behind the driver-path graph keys: with
+    the driver cap at 0 every graph runs its Spark rounds."""
+    monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
+    _matches_oracle(spark, sf_smoke, name)
+
+
+@pytest.mark.parametrize("distributed", [False, True], ids=["driver", "distributed"])
+@pytest.mark.parametrize("name", PAGERANK_KEYS)
+def test_pagerank_matches_oracle_on_one_edge(name, distributed, spark, sf_one_edge, monkeypatch):
+    if distributed:
+        monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
+    _matches_oracle(spark, sf_one_edge, name)
 
 
 def test_pca_project_on_empty_tables_returns_no_rows(spark, sf_empty):

@@ -523,14 +523,18 @@ def test_hybrid_search_arms_are_topk_bounded(spark, queries):
     assert plan.count("TakeOrderedAndProject") >= 2
 
 
-def test_pagerank_result_is_materialized_before_cache_release(spark, queries):
-    """q_pagerank materializes its node-sized result through the edge
-    cache (eager localCheckpoint) BEFORE unpersisting — the returned
-    frame must be a checkpoint scan plus the output sort, never a
-    re-derivation of the iterative loop (the first bench run measured
-    exactly that bug: 61 Exchanges, 20 file scans, every round
-    rebuilding the edge frame after unpersist)."""
+def test_pagerank_result_is_materialized_before_cache_release(spark, queries, monkeypatch):
+    """q_pagerank's distributed rounds materialize the node-sized
+    result through the edge cache (eager localCheckpoint) BEFORE
+    unpersisting — the returned frame must be a checkpoint scan plus
+    the output sort, never a re-derivation of the iterative loop (the
+    first bench run measured exactly that bug: 61 Exchanges, 20 file
+    scans, every round rebuilding the edge frame after unpersist).
+    The driver cap at 0 forces those rounds on this small graph."""
+    from distributed_mapreduce_server_spark import session
     from distributed_mapreduce_server_spark.plans import physical_plan
+
+    monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
 
     df = queries["q_pagerank"](spark, SF)
     plan = physical_plan(df)

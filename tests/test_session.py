@@ -13,11 +13,13 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Runs the two iterative query_mix keys twice in ONE fresh session and
 # prints the number of classes codegen compiled in each run. A fresh
 # process makes the first run cold whatever the test session has
-# already compiled.
+# already compiled. The driver cap at 0 keeps both keys on their Spark
+# rounds: on the driver they would compile too little to test.
 _TWO_RUNS = """
 import json, sys
 sys.path.insert(0, sys.argv[1])
-from distributed_mapreduce_server_spark import get_spark, registry
+from distributed_mapreduce_server_spark import get_spark, registry, session
+session.DRIVER_GRAPH_MAX_EDGES = 0
 spark = get_spark("dmrs-codegen-cache-test")
 spark.sparkContext.setLogLevel("ERROR")
 compiled = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()

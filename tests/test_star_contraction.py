@@ -1,7 +1,9 @@
-"""Large-star / small-star connected components on synthetic graphs
-the near-dup corpus never produces: long paths, hubs, disjoint
-components and inputs that are already stars. Each is checked against
-a plain-Python union-find."""
+"""Connected components on synthetic graphs the near-dup corpus never
+produces: long paths, hubs, disjoint components and inputs that are
+already stars. Each is checked against a plain-Python union-find, on
+both paths of _star_contraction_cc: the driver's array labelling
+(every graph here is small) and the large-star / small-star loop
+(``session.DRIVER_GRAPH_MAX_EDGES`` set to 0)."""
 
 from __future__ import annotations
 
@@ -9,6 +11,7 @@ import random
 
 import pytest
 
+from distributed_mapreduce_server_spark import session
 from distributed_mapreduce_server_spark.operators.dedup import _star_contraction_cc
 
 
@@ -38,8 +41,16 @@ def _path(n: int) -> list[tuple[int, int]]:
     return list(zip(ids, ids[1:]))
 
 
+def _sparse_random(n: int, m: int) -> list[tuple[int, int]]:
+    # below the giant-component threshold: many components of mixed
+    # shapes, so the driver's hooking runs several rounds
+    rng = random.Random(11)
+    return [(a, b) for a, b in ((rng.randrange(n), rng.randrange(n)) for _ in range(m)) if a != b]
+
+
 GRAPHS = {
     "path50": _path(50),
+    "random300": _sparse_random(300, 140),
     # the hub sits mid-range: half its leaves are smaller, half larger
     "hub30": [(15, leaf) for leaf in range(31) if leaf != 15],
     # interleaved ids: evens form one chain, odds another
@@ -50,8 +61,18 @@ GRAPHS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_star_contraction_matches_union_find(spark, name):
+@pytest.mark.parametrize(
+    "name, distributed",
+    [
+        # the driver-path cases keep their bare graph name as the id
+        pytest.param(name, distributed, id=f"{name}-distributed" if distributed else name)
+        for distributed in (False, True)
+        for name in sorted(GRAPHS)
+    ],
+)
+def test_star_contraction_matches_union_find(spark, monkeypatch, name, distributed):
+    if distributed:
+        monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
     edges = GRAPHS[name]
     canon = spark.createDataFrame(
         sorted({(max(a, b), min(a, b)) for a, b in edges}), "u long, v long"
