@@ -21,8 +21,8 @@ Python worker:
 1. map: ``spark.read.text`` feeds a mapper ``TRANSFORM``, persisted
    ``MEMORY_AND_DISK`` so the mapper runs once for both consumers;
 2. rank: the distinct keys (``substring_index(line, '\\t', 1)``) get
-   ``rid = rank % R`` — ranked on the driver and broadcast-joined, or
-   for key sets over BROADCAST_KEY_LIMIT ranked distributed;
+   ``rid = rank % R`` — ranked on the driver (session.fetch_if_small)
+   and broadcast-joined, or past BROADCAST_KEY_LIMIT ranked distributed;
 3. shuffle: ``repartitionById(R, rid)`` puts reducer *i* in partition
    *i* exactly (no hash collisions; AQE leaves it alone) and
    ``sortWithinPartitions("line")`` orders each reducer's stdin;
@@ -60,7 +60,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_server_spark.session import scoped_conf
+from distributed_mapreduce_server_spark.session import fetch_if_small, scoped_conf
 
 # reducer-id assignment strategy switch: key sets up to this size are
 # ranked on the driver and broadcast (vocabulary-sized); larger ones
@@ -128,18 +128,19 @@ def _rank_table(
 ) -> DataFrame:
     """``(key, rid)`` with ``rid`` = the key's rank in sorted order mod R.
     Small key sets are ranked on the driver (the reference manager's
-    move) and broadcast; fetching ``BROADCAST_KEY_LIMIT + 1`` keys is both
-    the size check and the data. Larger ones: range-sort the keys
+    move) and broadcast; session.fetch_if_small is both the size check
+    and the data. Larger ones: range-sort the keys
     (persisted and appended to ``cached``, so both jobs see one
     partitioning), count each partition once for its offset, and
     rank = offset + position inside the partition."""
-    head = [r.key for r in keys.limit(BROADCAST_KEY_LIMIT + 1).collect()]
-    if len(head) <= BROADCAST_KEY_LIMIT:
+    small = fetch_if_small(keys, BROADCAST_KEY_LIMIT)
+    if small is not None:
         # Arrow batches go to the JVM as they are; a list of rows would
         # be unpickled by Python workers
+        head = sorted(small["key"].to_pylist())
         rids = [i % num_reducers for i in range(len(head))]
         table = pa.table(
-            {"key": pa.array(sorted(head), pa.string()), "rid": pa.array(rids, pa.int32())}
+            {"key": pa.array(head, pa.string()), "rid": pa.array(rids, pa.int32())}
         )
         return F.broadcast(spark.createDataFrame(table))
     pid = F.spark_partition_id()

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from distributed_mapreduce_server_spark import session
 from distributed_mapreduce_server_spark.catalog import load_tables
 from distributed_mapreduce_server_spark.functions import (
     MINHASH_P32,
@@ -66,7 +67,6 @@ from distributed_mapreduce_server_spark.functions import (
 )
 from distributed_mapreduce_server_spark.session import (
     checkpoint_loop,
-    fetch_if_small,
     release_checkpoints,
 )
 
@@ -816,7 +816,7 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
     # round 0's checkpoint is the probe: a small graph is labeled on
     # the driver, a larger one enters the loop already materialized
     round0 = canon.localCheckpoint(eager=False)
-    small = fetch_if_small(round0)
+    small = session.fetch_if_small(round0, session.DRIVER_GRAPH_MAX_EDGES)
     if small is not None:
         release_checkpoints(spark, round0)
         return _min_labels_on_driver(spark, small)
@@ -2207,9 +2207,7 @@ ROUTE_ITERS = 2
 ROUTE_PROBES = 6
 
 
-def _route_codebook(
-    spark: SparkSession, sf_dir: str, force_distributed: bool = False
-):
+def _route_codebook(spark: SparkSession, sf_dir: str):
     """Train the fixed-K routing codebook: ROUTE_ITERS rounds of
     cosine Lloyd over the embeddings, returning the bounded
     (ids, matrix) numpy pair `_centroid_assign` broadcasts. Init =
@@ -2222,8 +2220,8 @@ def _route_codebook(
     contract). Memoized per (session, sf_dir) via the shared codebook
     memo (similarity._codebook_memo) — the whole routed family (flat
     + nested + the eval/sweep trust keys) shares ONE training per
-    session; force_distributed bypasses the memo (those calls exist
-    to really train the distributed path)."""
+    session. The key carries CODEBOOK_TRAIN_LIMIT, so a training
+    forced onto the Spark rounds (the cap at 0) is its own entry."""
     from distributed_mapreduce_server_spark.operators.similarity import (
         CODEBOOK_TRAIN_LIMIT,
         _codebook_memo,
@@ -2234,12 +2232,8 @@ def _route_codebook(
         emb = load_tables(spark, sf_dir, register_views=False)[
             "embeddings"
         ].select("vec_id", "embedding")
-        return _train_codebook(
-            emb, range(ROUTE_K), ROUTE_ITERS, "cosine", force_distributed
-        )
+        return _train_codebook(emb, range(ROUTE_K), ROUTE_ITERS, "cosine")
 
-    if force_distributed:
-        return build()
     # Every tuning constant rides in the key (ADVICE r12 extended the
     # r12 K convention to iters/limit): a caller that retunes any of
     # them must never see the previous tuning's book.
@@ -2693,8 +2687,8 @@ def _fine_codebook(spark: SparkSession, sf_dir: str, coarse):
     Memoized per (session, sf_dir, coarse fingerprint): internal
     callers pass the memoized coarse book for the same sf_dir, but
     the memo key folds a CRC of the coarse (ids, matrix) in anyway
-    (ADVICE r12) — a caller handing a force_distributed-trained or
-    sweep-retuned coarse book can never silently receive a fine book
+    (ADVICE r12) — a caller handing any other coarse book (a
+    sweep-retuned one) can never silently receive a fine book
     trained against a different coarse. The home centroid is the
     trainer's own cosine assignment (similarity._nearest)."""
     import numpy as np

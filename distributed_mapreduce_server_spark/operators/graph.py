@@ -41,12 +41,12 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_server_spark import session
 from distributed_mapreduce_server_spark.catalog import load_tables
 from distributed_mapreduce_server_spark.functions import fround, fround_np
 from distributed_mapreduce_server_spark.session import (
     GRAPH_EDGE_ROWS_PER_TASK,
     checkpoint_loop,
-    fetch_if_small,
     release_checkpoints,
     scoped_conf,
     sized_shuffle_partitions,
@@ -155,7 +155,7 @@ def _edges_with_outdeg(
     pre-partitioned persist makes each round shuffle only the
     node-sized rank frame); the caller unpersists it."""
     edges = _bipartite_edges(spark, sf_dir).persist()
-    small = fetch_if_small(edges)
+    small = session.fetch_if_small(edges, session.DRIVER_GRAPH_MAX_EDGES)
     if small is not None:
         edges.unpersist()
         return small, None

@@ -31,6 +31,19 @@ def _r2(c):
     return fround(c, 2)
 
 
+def _with_grand_total(grouped: DataFrame, **empty) -> DataFrame:
+    """``grouped`` (a ROLLUP, CUBE or GROUPING SETS aggregation with a
+    ``()`` set) plus the grand-total row SQL gives an empty input and
+    Spark does not: one global aggregate (always a row) packs the rows,
+    explode_outer turns none into a NULL row, ``empty`` fills its
+    columns. The input is read once; the extra shuffle is result-sized."""
+    rows = grouped.agg(F.collect_list(F.struct(*grouped.columns)).alias("r"))
+    rows = rows.select(F.explode_outer("r").alias("r")).select("r.*")
+    return rows.select(
+        *(F.coalesce(c, F.lit(empty[c])).alias(c) if c in empty else c for c in rows.columns)
+    )
+
+
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: scan-heavy filter + wide group-agg (flagship).
 
@@ -302,11 +315,12 @@ def q_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
     )
-    return (
-        cust.rollup("r_name", "n_name")
-        .agg(F.count("*").alias("customer_count"), _r2(F.sum("c_acctbal")).alias("total_balance"))
-        .orderBy("r_name", "n_name")
-    )
+    return _with_grand_total(
+        cust.rollup("r_name", "n_name").agg(
+            F.count("*").alias("customer_count"), _r2(F.sum("c_acctbal")).alias("total_balance")
+        ),
+        customer_count=0,
+    ).orderBy("r_name", "n_name")
 
 
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -634,11 +648,12 @@ def q_region_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
     )
-    return (
-        cust.cube("r_name", "c_mktsegment")
-        .agg(F.count("*").alias("n_customers"), _r2(F.avg("c_acctbal")).alias("avg_balance"))
-        .orderBy("r_name", "c_mktsegment")
-    )
+    return _with_grand_total(
+        cust.cube("r_name", "c_mktsegment").agg(
+            F.count("*").alias("n_customers"), _r2(F.avg("c_acctbal")).alias("avg_balance")
+        ),
+        n_customers=0,
+    ).orderBy("r_name", "c_mktsegment")
 
 
 def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1379,19 +1394,19 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
         .join(broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
     )
-    return (
+    return _with_grand_total(
         joined.groupingSets(
             [["n_name", "o_orderpriority"], ["n_name"], ["o_orderpriority"], []],
             "n_name",
             "o_orderpriority",
-        )
-        .agg(
+        ).agg(
             F.grouping_id().cast("integer").alias("gid"),
             F.count("*").alias("n_orders"),
             fround(F.sum("o_totalprice"), 2).alias("total_revenue"),
-        )
-        .orderBy("gid", "n_name", "o_orderpriority")
-    )
+        ),
+        gid=3,  # the () set: both columns rolled up
+        n_orders=0,
+    ).orderBy("gid", "n_name", "o_orderpriority")
 
 
 def q_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,6 +32,7 @@ from distributed_mapreduce_server_spark.catalog import (
     register_refresh_hook,
 )
 from distributed_mapreduce_server_spark.functions import cosine_sim, fround, fround_np
+from distributed_mapreduce_server_spark.session import fetch_if_small
 
 # Trained-codebook memo (VERDICT r11 task 3): Lloyd training is
 # deterministic per (corpus, recipe), so within one session every
@@ -54,9 +55,7 @@ CODEBOOK_TRAIN_COUNTS: dict[str, int] = {}
 
 def _codebook_memo(spark: SparkSession, sf_dir: str, kind: str, builder):
     """Return the memoized trained codebook for (session, sf_dir,
-    kind), invoking ``builder`` exactly once per key. force_distributed
-    callers must BYPASS this memo (they exist to pin the two training
-    paths result-identical and must really train)."""
+    kind), invoking ``builder`` exactly once per key."""
     key = (spark.sparkContext.applicationId, str(sf_dir), kind)
     hit = _CODEBOOK_CACHE.get(key)
     if hit is not None and hit[0] is spark:
@@ -84,23 +83,25 @@ N_TABLES = 4
 EMB_DIM = 64
 
 
-def _matrix(rows):
-    """(ids, matrix) of (vec_id, embedding) rows sorted by vec_id. The
-    matrix is (n, EMB_DIM) for every n, 0 included, so an empty corpus
-    or codebook flows through the numpy kernels as zero rows."""
+def _matrix(table):
+    """(ids, matrix) of a (vec_id, embedding) Arrow table sorted by
+    vec_id: the flattened embedding lists reshaped to (n, EMB_DIM).
+    The matrix has that shape for every n, 0 included, so an empty
+    corpus or codebook flows through the numpy kernels as zero rows."""
     import numpy as np
 
-    rows = sorted(rows, key=lambda r: r["vec_id"])
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    return ids, mat.reshape(len(rows), EMB_DIM)
+    table = table.sort_by("vec_id")
+    ids = table["vec_id"].to_numpy().astype(np.int64)
+    flat = table["embedding"].combine_chunks().flatten()
+    mat = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    return ids, mat.reshape(table.num_rows, EMB_DIM)
 
 
 def _collect_matrix(df):
     """Bounded driver fetch of (ids, matrix) sorted by id - for
     codebooks and query sets ONLY (fixed size at any corpus scale;
     never call on a corpus-sized frame)."""
-    return _matrix(df.select("vec_id", "embedding").collect())
+    return _matrix(df.select("vec_id", "embedding").toArrow())
 
 
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,11 +283,12 @@ def _centroid_assign(
     return emb.select("vec_id", "embedding").mapInPandas(blocks, schema)
 
 
-# Driver fast path bound for codebook training (the BPE-trainer
-# take(limit+1) pattern): 65536 x 64-dim doubles = 32 MiB. Below it
+# Driver fast path bound for codebook training, probed with
+# session.fetch_if_small: 65536 x 64-dim doubles = 32 MiB. Below it
 # every round runs the block kernel once over the whole corpus on the
 # driver; above it each round runs the same kernel per Arrow batch in
-# mapInPandas — result-identical on the 1e-4/1e-6 grids.
+# mapInPandas — result-identical on the 1e-4/1e-6 grids. Tests set it
+# to 0 to force the second path.
 CODEBOOK_TRAIN_LIMIT = 65536
 
 
@@ -409,7 +411,6 @@ def _train_codebook(
     init: range,
     iters: int,
     metric: str,
-    force_distributed: bool = False,
 ):
     """The one Lloyd trainer: ``iters`` rounds over the (vec_id,
     embedding) frame ``emb`` from the codebook of its rows whose
@@ -428,13 +429,12 @@ def _train_codebook(
     stitched (PQ_K, EMB_DIM) codebook keeps its shape.
 
     Corpora of at most CODEBOOK_TRAIN_LIMIT vectors train on the
-    driver (take(limit+1) is the size check AND the data); larger ones
-    run each round as one corpus scan plus a K·d-row collect
-    (_distributed_partials). ``force_distributed`` takes the second
-    path at any size — the path-equality tests' reference."""
-    head = None if force_distributed else emb.take(CODEBOOK_TRAIN_LIMIT + 1)
-    if head is not None and len(head) <= CODEBOOK_TRAIN_LIMIT:
-        corpus_ids, corpus = _matrix(head)
+    driver (session.fetch_if_small is the size check AND the data);
+    larger ones run each round as one corpus scan plus a K·d-row
+    collect (_distributed_partials)."""
+    table = fetch_if_small(emb, CODEBOOK_TRAIN_LIMIT)
+    if table is not None:
+        corpus_ids, corpus = _matrix(table)
         seed = (corpus_ids >= init.start) & (corpus_ids < init.stop)
         ids, mat = corpus_ids[seed], corpus[seed]
 
@@ -923,9 +923,7 @@ PQ_SUB_DIM = EMB_DIM // PQ_M
 PQ_TRAIN_ITERS = 2
 
 
-def _pq_codebook(
-    emb: DataFrame, force_distributed: bool = False, sf_dir: str | None = None
-):
+def _pq_codebook(emb: DataFrame, sf_dir: str | None = None):
     """The TRAINED per-subspace PQ codebook (round 10 — previously the
     fixed vec_id 5..20 stand-in): PQ_TRAIN_ITERS rounds of L2 Lloyd
     per subspace over the FULL corpus (the encoder encodes every
@@ -940,8 +938,7 @@ def _pq_codebook(
     on empty) -> the oracles unroll the rounds as CTEs
     (similarity_oracles._pq_codebook_ctes). Callers that derive
     ``emb`` straight from load_tables pass ``sf_dir`` so the training
-    memoizes per (session, sf_dir); force_distributed (the
-    path-equality tests) always retrains.
+    memoizes per (session, sf_dir).
     """
     def build():
         return _train_codebook(
@@ -949,10 +946,9 @@ def _pq_codebook(
             range(N_QUERIES, N_QUERIES + PQ_K),
             PQ_TRAIN_ITERS,
             "pq",
-            force_distributed=force_distributed,
         )
 
-    if sf_dir is None or force_distributed:
+    if sf_dir is None:
         return build()
     # i/lim ride in the key like K does (ADVICE r12): a sweep that
     # retunes the training constants must never see a stale book.
@@ -1436,11 +1432,10 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(MMR_CANDIDATES)
     )
-    rows = cand.collect()  # bounded: MMR_CANDIDATES rows
-    rows.sort(key=lambda r: r["vec_id"])
-    ids = [r["vec_id"] for r in rows]
-    rel = {r["vec_id"]: r["rel"] for r in rows}
-    _, mat = _matrix(rows)
+    table = cand.toArrow()  # bounded: MMR_CANDIDATES rows
+    ids = sorted(table["vec_id"].to_pylist())
+    rel = dict(zip(table["vec_id"].to_pylist(), table["rel"].to_pylist()))
+    _, mat = _matrix(table)
     norms = np.linalg.norm(mat, axis=1)
     sim = fround_np((mat @ mat.T) / np.outer(norms, norms), 4)
 

@@ -12,6 +12,11 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce_server_spark.catalog import load_tables
 from distributed_mapreduce_server_spark.functions import fround, tokens
+from distributed_mapreduce_server_spark.session import (
+    checkpoint_loop,
+    fetch_if_small,
+    release_checkpoints,
+)
 
 # Per-language marker words for the n-gram/stopword language-ID
 # heuristic. On real corpora these would be the top function words per
@@ -1110,7 +1115,8 @@ def text_tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TRAIN_MERGES = 10
 # word-frequency tables up to this size train on the driver (every
 # production BPE trainer is in-process over exactly this table);
-# larger vocabularies use the distributed merge loop below.
+# larger vocabularies use the distributed merge loop below. Probed
+# with session.fetch_if_small; tests set it to 0 to force the loop.
 BPE_DRIVER_VOCAB_LIMIT = 1_000_000
 
 
@@ -1153,16 +1159,15 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic; text_tokenize_to_ids consumes the resulting vocab.
 
     Scale shape: the corpus is touched ONCE (the word-frequency
-    aggregation); every merge round then operates on the VOCAB-sized
-    symbol table — per round, one pair-count aggregation (explode over
-    per-word symbol arrays, weighted by word frequency), one 1-ROW
-    argmax fetch to the driver (the chosen merge — bounded), and a
-    column-expression rewrite of the symbol arrays (greedy
-    left-to-right, the standard BPE application order). Rounds are
-    driver-coordinated like emb_kmeans; per-round persist keeps
-    lineage flat. Array lambdas here run interpreted, which is fine
-    BECAUSE the frame is vocabulary-sized — the corpus-sized path
-    (word counting) stays codegen.
+    aggregation); every merge round works on the VOCAB-sized symbol
+    table. A table of at most BPE_DRIVER_VOCAB_LIMIT words
+    (session.fetch_if_small is the size check and the data) trains on
+    the driver like every production BPE trainer (measured 4.5 s ->
+    <1 s at sf0.1). A larger one runs on session.checkpoint_loop: a
+    round rewrites the symbol arrays with the last merge, and its one
+    action is the pair-count aggregation with its 1-ROW argmax fetch.
+    Array lambdas run interpreted, which is fine BECAUSE the frame is
+    vocabulary-sized; the corpus-sized word count stays codegen.
 
     Deterministic (ties break on pair string); full DuckDB oracle
     since round 8 — text_oracles._bpe_train_sql unrolls the
@@ -1171,16 +1176,6 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pin round-1 parity with text_bpe_pair_counts,
     symbol-mass conservation per round, and merge-table
     well-formedness.
-
-    Bounded-vocab fast path (round 8, the exec-job
-    BROADCAST_KEY_LIMIT precedent): after the one corpus-sized
-    aggregation, the word-frequency table IS the training input —
-    when it fits comfortably on the driver (take(limit+1) is both the
-    size check and the data), the merge rounds run in-process like
-    every production BPE trainer, identical tie-breaks, ~10 Spark
-    jobs' scheduling overhead saved (measured 4.5 s -> <1 s at
-    sf0.1). Vocabularies past the limit keep the distributed loop —
-    the path that scales is the one that ships either way.
     """
     docs = load_tables(spark, sf_dir, register_views=False)["documents"]
     vocab_counts = (
@@ -1188,18 +1183,10 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
     )
-    head = vocab_counts.take(BPE_DRIVER_VOCAB_LIMIT + 1)
-    if len(head) <= BPE_DRIVER_VOCAB_LIMIT:
-        merges = _bpe_train_local([(r["tok"], r["n"]) for r in head])
-        return spark.createDataFrame(
-            merges,
-            "merge_rank int, left string, right string, merged string, "
-            "weighted_count long",
-        ).orderBy("merge_rank")
-    vocab = vocab_counts.withColumn("syms", F.split("tok", "")).persist()
-    vocab.count()
-    merges = []
-    for rank in range(1, BPE_TRAIN_MERGES + 1):
+
+    def top_pair(vocab: DataFrame):
+        # (left, right, weighted count) of the most frequent adjacent pair
+        # (ties break on the pair string); None if no word has two symbols
         pairs = (
             vocab.filter(F.size("syms") >= 2)
             .select(
@@ -1214,15 +1201,15 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.sum("n").alias("cnt"))
         )
-        top = pairs.orderBy(
-            F.desc("cnt"), F.concat_ws(" ", "a", "b")
-        ).limit(1).collect()
-        if not top:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], top[0]["cnt"]
-        merges.append((rank, a, b, a + b, int(cnt)))
-        # greedy left-to-right merge application over the (tiny) vocab
-        merged = vocab.withColumn(
+        top = pairs.orderBy(F.desc("cnt"), F.concat_ws(" ", "a", "b")).limit(1).collect()
+        return tuple(top[0]) if top else None
+
+    def merge(vocab: DataFrame, top) -> DataFrame:
+        # greedy left-to-right application of the last round's merge
+        if top is None:
+            return vocab
+        a, b, _ = top
+        return vocab.withColumn(
             "syms",
             F.aggregate(
                 "syms",
@@ -1231,17 +1218,21 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.size(acc) > 0)
                     & (F.element_at(acc, -1) == F.lit(a))
                     & (x == F.lit(b)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1),
-                        F.array(F.lit(a + b)),
-                    ),
+                    F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))),
                 ).otherwise(F.concat(acc, F.array(x))),
             ),
-        ).persist()
-        merged.count()
-        vocab.unpersist()
-        vocab = merged
-    vocab.unpersist()
+        )
+
+    table = fetch_if_small(vocab_counts, BPE_DRIVER_VOCAB_LIMIT)
+    if table is not None:
+        merges = _bpe_train_local(list(zip(table["tok"].to_pylist(), table["n"].to_pylist())))
+    else:
+        vocab = vocab_counts.withColumn("syms", F.split("tok", ""))
+        last, tops = checkpoint_loop(
+            spark, vocab, merge, top_pair, rounds=BPE_TRAIN_MERGES - 1, until=lambda _, t: t is None
+        )
+        release_checkpoints(spark, last)
+        merges = [(r, a, b, a + b, int(n)) for r, (a, b, n) in enumerate(filter(None, tops), 1)]
     return spark.createDataFrame(
         merges, "merge_rank int, left string, right string, merged string, weighted_count long"
     ).orderBy("merge_rank")
@@ -2246,10 +2237,10 @@ def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 UNI_PIECE_MAX_LEN = 4
 UNI_SEED_VOCAB = 48
 UNI_EM_ROUNDS = 3
-# word-frequency tables up to this size train on the driver (the
-# text_bpe_train take(limit+1) pattern); larger vocabularies run the
-# distributed per-round Viterbi kernel below — result-identical,
-# pinned by a forced-fallback test.
+# word-frequency tables up to this size train on the driver (probed
+# with session.fetch_if_small, like text_bpe_train's); larger
+# vocabularies run the distributed per-round Viterbi kernel below —
+# result-identical, pinned by a test that sets this cap to 0.
 UNI_DRIVER_VOCAB_LIMIT = 1_000_000
 # text_unigram_tokenize broadcasts its (distinct word -> piece ids)
 # map only under this many distinct words: the map is Heaps-law-sized
@@ -2363,7 +2354,7 @@ def _unigram_word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unigram_fit(spark: SparkSession, sf_dir: str, force_distributed: bool = False):
+def _unigram_fit(spark: SparkSession, sf_dir: str):
     """(pieces, pid, seed_counts, final_counts, final_costs) — driver
     fast path when the word-frequency table is bounded, else the
     distributed per-round loop: the corpus is touched ONCE (the
@@ -2374,10 +2365,9 @@ def _unigram_fit(spark: SparkSession, sf_dir: str, force_distributed: bool = Fal
     bounded driver collect for the M-step. Nothing corpus-sized after
     the first aggregation."""
     vocab_counts = _unigram_word_freqs(spark, sf_dir)
-    if not force_distributed:
-        head = vocab_counts.take(UNI_DRIVER_VOCAB_LIMIT + 1)
-        if len(head) <= UNI_DRIVER_VOCAB_LIMIT:
-            return _unigram_train_local([(r["tok"], r["n"]) for r in head])
+    table = fetch_if_small(vocab_counts, UNI_DRIVER_VOCAB_LIMIT)
+    if table is not None:
+        return _unigram_train_local(list(zip(table["tok"].to_pylist(), table["n"].to_pylist())))
 
     import pandas as pd
 

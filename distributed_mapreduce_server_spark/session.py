@@ -243,15 +243,15 @@ def release_checkpoints(spark: SparkSession, *frames) -> int:
 DRIVER_GRAPH_MAX_EDGES = 1 << 22
 
 
-def fetch_if_small(frame):
+def fetch_if_small(frame, max_rows: int):
     """``frame``'s rows as one Arrow table if it has at most
-    DRIVER_GRAPH_MAX_EDGES of them, else None. One action is both the
-    size check and the fetch (``limit(cap + 1).toArrow()``), so probe a
-    frame the caller's distributed path reads next (a persisted or
-    checkpointed one): a failed probe then leaves it materialized
-    instead of building it twice."""
-    table = frame.limit(DRIVER_GRAPH_MAX_EDGES + 1).toArrow()
-    return table if table.num_rows <= DRIVER_GRAPH_MAX_EDGES else None
+    ``max_rows`` of them, else None: the one probe of every
+    driver-or-Spark switch, each with its named cap. One action is both
+    the size check and the fetch (``limit(max_rows + 1).toArrow()``), so
+    probe a frame the caller's distributed path reads next (a persisted
+    or checkpointed one): a failed probe then leaves it materialized."""
+    table = frame.limit(max_rows + 1).toArrow()
+    return table if table.num_rows <= max_rows else None
 
 
 def checkpoint_loop(

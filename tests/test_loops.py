@@ -1,6 +1,6 @@
 """session.checkpoint_loop, the one driver of the iterative operators
-(BFS, k-core, label propagation and the star-contraction connected
-components): its job and block accounting on a tiny frame, its
+(BFS, k-core, label propagation, the star-contraction connected
+components and the BPE merge rounds): its job and block accounting on a tiny frame, its
 ``until`` mode, and the block release of every operator built on it.
 """
 
@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_server_spark import session
+from distributed_mapreduce_server_spark.operators import text
 from distributed_mapreduce_server_spark.operators.dedup import (
     dedup_clusters,
     dedup_semantic_clusters,
@@ -126,6 +127,7 @@ def test_kcore_peel_monotone(spark, sf_smoke):
     "op, max_live",
     [
         pytest.param(q_graph_kcore_peel, 0, id="q_graph_kcore_peel"),
+        pytest.param(text.text_bpe_train, 0, id="text_bpe_train"),
         # the ops below return a frame lazy over their last round's
         # checkpoint: that one block may stay live
         pytest.param(q_graph_bfs_levels, 1, id="q_graph_bfs_levels"),
@@ -136,8 +138,10 @@ def test_kcore_peel_monotone(spark, sf_smoke):
 )
 def test_loop_releases_its_checkpoints(spark, sf_smoke, monkeypatch, op, max_live):
     # the connected-components keys would label a graph this small on
-    # the driver: force their star loop
+    # the driver, and BPE would train a vocabulary this small there:
+    # force their Spark loops
     monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
+    monkeypatch.setattr(text, "BPE_DRIVER_VOCAB_LIMIT", 0)
     before = persistent_rdd_ids(spark)
     op(spark, sf_smoke).collect()
     leaked = persistent_rdd_ids(spark) - before

@@ -84,6 +84,42 @@ def test_lint_catches_a_synthetic_orphan(tmp_path):
     assert "q_synthetic_orphan" not in set(registry.all_queries())
 
 
+def _probe_offenders(root: pathlib.Path = PKG) -> list[str]:
+    """``file:line`` of every ``.take(`` under operators/ and mapreduce/
+    and of every ``force_distributed`` anywhere under ``root``."""
+    hits = []
+    for f in sorted(root.rglob("*.py")):
+        in_ops = f.relative_to(root).parts[0] in ("operators", "mapreduce")
+        for i, line in enumerate(f.read_text().splitlines(), 1):
+            if "force_distributed" in line or (in_ops and ".take(" in line):
+                hits.append(f"{f.relative_to(root.parent)}:{i}")
+    return hits
+
+
+def test_no_hand_written_driver_probe():
+    """Every bounded driver fetch goes through session.fetch_if_small
+    with its path's named cap, and tests force a Spark path by setting
+    that cap to 0: a ``.take(`` size probe in an operator or a
+    ``force_distributed`` parameter grows the per-module copies back."""
+    offenders = _probe_offenders()
+    assert not offenders, (
+        "use session.fetch_if_small (and a cap of 0 in tests): " f"{offenders}"
+    )
+
+
+def test_lint_catches_a_synthetic_probe(tmp_path):
+    scratch = tmp_path / "pkg"
+    (scratch / "operators").mkdir(parents=True)
+    (scratch / "operators" / "planted.py").write_text("head = frame.take(11)\n")
+    (scratch / "planted.py").write_text("def f(force_distributed=False):\n    pass\n")
+    # outside operators/ and mapreduce/, take() is not a probe
+    (scratch / "session.py").write_text("head = frame.take(11)\n")
+    assert _probe_offenders(root=scratch) == [
+        "pkg/operators/planted.py:1",
+        "pkg/planted.py:1",
+    ]
+
+
 def test_survey_section2_covers_every_registry_key():
     """SURVEY.md §2 is the judge's line-by-line coverage checklist —
     every registered key must appear there as a backticked token (the

@@ -65,23 +65,26 @@ def test_codebook_memo_trains_once_per_session(
     assert ivf1 is ivf2 and pq1 is pq2
 
 
-def test_codebook_memo_force_distributed_bypasses(
-    spark, sf_smoke, fresh_codebook_caches
+def test_codebook_memo_cap0_route_is_its_own_entry(
+    spark, sf_smoke, fresh_codebook_caches, monkeypatch
 ):
-    """force_distributed calls exist to really train the distributed
-    path — they must neither read nor write the memo (nor bump the
-    counter that tracks memoized builds)."""
+    """A route training forced onto the Spark rounds (the cap at 0)
+    memoizes under its own ``lim=0`` key: it really trains, never
+    returns the driver-trained book, and lands on the same codebook."""
     kind = "dedup_route["
-    memoized = dedup._route_codebook(spark, sf_smoke)
+    driver = dedup._route_codebook(spark, sf_smoke)
     n = _count(kind)
-    forced = dedup._route_codebook(spark, sf_smoke, force_distributed=True)
-    assert _count(kind) == n
-    assert forced is not memoized
-    # ... while remaining result-identical (the r9 path-equality pin).
-    np.testing.assert_array_equal(forced[0], memoized[0])
-    np.testing.assert_allclose(forced[1], memoized[1])
-    # And the memo itself is undisturbed.
-    assert dedup._route_codebook(spark, sf_smoke) is memoized
+    monkeypatch.setattr(similarity, "CODEBOOK_TRAIN_LIMIT", 0)
+    forced = dedup._route_codebook(spark, sf_smoke)
+    assert _count(kind) == n + 1
+    lim0 = f"{kind}K={dedup.ROUTE_K},i={dedup.ROUTE_ITERS},lim=0]"
+    assert lim0 in {k[2] for k in similarity._CODEBOOK_CACHE}
+    assert forced is not driver
+    np.testing.assert_array_equal(forced[0], driver[0])
+    np.testing.assert_array_equal(forced[1], driver[1])
+    assert dedup._route_codebook(spark, sf_smoke) is forced
+    monkeypatch.undo()
+    assert dedup._route_codebook(spark, sf_smoke) is driver
 
 
 def test_refresh_tables_clears_codebook_memo(

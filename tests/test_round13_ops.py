@@ -120,7 +120,7 @@ class TestFineCodebookCoarseFingerprint:
     def test_fine_memo_keyed_by_coarse_fingerprint(self, spark):
         """ADVICE r12: _fine_codebook used to memoize per (session,
         sf_dir) only — a caller passing a non-memoized coarse book
-        (force_distributed-trained, sweep-retuned) silently received
+        (a sweep-retuned one, say) silently received
         a fine book trained against a DIFFERENT coarse. The memo key
         now folds a CRC of the coarse (ids, matrix): a perturbed
         coarse must trigger a fresh training, and the original coarse

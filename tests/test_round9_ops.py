@@ -358,14 +358,16 @@ def test_unigram_tokenize_wordmap_broadcast_is_bounded(spark, sf_smoke, monkeypa
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_unigram_driver_and_distributed_paths_identical(spark, sf_smoke):
+def test_unigram_driver_and_distributed_paths_identical(spark, sf_smoke, monkeypatch):
     """text_bpe_train's forced-fallback discipline for the unigram
     trainer: the driver numpy/dict loop and the distributed Arrow-
-    Viterbi rounds must produce the identical fit."""
-    from distributed_mapreduce_server_spark.operators.text import _unigram_fit
+    Viterbi rounds (forced by the cap at 0) must produce the
+    identical fit."""
+    from distributed_mapreduce_server_spark.operators import text as text_mod
 
-    a = _unigram_fit(spark, sf_smoke)
-    b = _unigram_fit(spark, sf_smoke, force_distributed=True)
+    a = text_mod._unigram_fit(spark, sf_smoke)
+    monkeypatch.setattr(text_mod, "UNI_DRIVER_VOCAB_LIMIT", 0)
+    b = text_mod._unigram_fit(spark, sf_smoke)
     assert a[0] == b[0]  # pieces
     assert a[2] == b[2]  # seed counts
     assert a[3] == b[3]  # EM counts

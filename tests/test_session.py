@@ -1,5 +1,5 @@
-"""Session-level behaviour that only shows across queries: a long-lived
-session must keep warm queries compiled."""
+"""Session-level behaviour: a long-lived session must keep warm queries
+compiled, and the one bounded driver fetch must cut at its cap."""
 
 from __future__ import annotations
 
@@ -7,6 +7,11 @@ import json
 import os
 import subprocess
 import sys
+
+import pyarrow as pa
+import pytest
+
+from distributed_mapreduce_server_spark import session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -51,3 +56,18 @@ def test_warm_rerun_compiles_almost_nothing(sf_smoke):
     cold, warm = json.loads(proc.stdout.strip().splitlines()[-1])
     assert cold > 50, (cold, warm)
     assert warm <= 0.1 * cold, (cold, warm)
+
+
+@pytest.mark.parametrize("n_rows", [0, 3, 4], ids=["empty", "at_cap", "over_cap"])
+def test_fetch_if_small_cuts_at_its_cap(spark, n_rows):
+    """With a cap of 3: no rows is an empty table that keeps the
+    frame's schema, exactly 3 rows come back whole, a fourth row
+    gives None."""
+    frame = spark.range(n_rows).selectExpr("id", "CAST(id AS STRING) AS s")
+    table = session.fetch_if_small(frame, 3)
+    if n_rows > 3:
+        assert table is None
+        return
+    assert table.schema.names == ["id", "s"]
+    assert table.schema.types == [pa.int64(), pa.string()]
+    assert sorted(table["id"].to_pylist()) == list(range(n_rows))

@@ -84,16 +84,17 @@ def test_quantize_reconstruction_bound(spark, sf_dir):
     ],
 )
 def test_codebook_driver_and_distributed_paths_identical(
-    spark, sf_smoke, metric, first_id, init, iters
+    spark, sf_smoke, metric, first_id, init, iters, monkeypatch
 ):
     """The shared Lloyd trainer's two paths — the driver step over the
     whole corpus as one block vs the per-Arrow-batch partial sums
-    summed by a Spark shuffle — must land on the identical codebook
-    for every metric: distances and means sit on grids far above
-    sum-order noise, so no fixed point can move."""
+    summed by a Spark shuffle (forced by the cap at 0) — must land on
+    the identical codebook for every metric: distances and means sit
+    on grids far above sum-order noise, so no fixed point can move."""
     from pyspark.sql import functions as F
 
     from distributed_mapreduce_server_spark.catalog import load_tables
+    from distributed_mapreduce_server_spark.operators import similarity
     from distributed_mapreduce_server_spark.operators.similarity import (
         _train_codebook,
     )
@@ -104,7 +105,8 @@ def test_codebook_driver_and_distributed_paths_identical(
         .filter(F.col("vec_id") >= first_id)
     )
     ids_d, mat_d = _train_codebook(emb, init, iters, metric)
-    ids_x, mat_x = _train_codebook(emb, init, iters, metric, force_distributed=True)
+    monkeypatch.setattr(similarity, "CODEBOOK_TRAIN_LIMIT", 0)
+    ids_x, mat_x = _train_codebook(emb, init, iters, metric)
     assert len(ids_d) > 0
     assert np.array_equal(ids_d, ids_x)
     assert np.array_equal(mat_d, mat_x)
