@@ -2267,8 +2267,8 @@ def dedup_semantic_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the codebook is a FIXED-K trained object (ROUTE_K
     rows of 64 floats — bounded at any corpus size, see
-    _route_codebook); assignment is one Arrow
-    mapInPandas matmul per batch (no crossJoin); the bucket grouping
+    _route_codebook); assignment is one numpy
+    matmul per Arrow batch (no crossJoin); the bucket grouping
     is ONE keyed shuffle partitioned by centroid_id (the inverted
     file); per-task work is one bucket's C(size, 2) cosine matmul on
     full vectors (exact verify — routing only limits WHICH pairs are
@@ -2339,8 +2339,9 @@ def _routed_pairs_from(
     Theoretical at 64-dim/unit-scale inputs (parity holds at both
     SFs and the 10x rehearsal); a corpus engineered with
     boundary-adjacent cosines would surface it."""
-    import numpy as np
     import pandas as pd
+
+    from distributed_mapreduce_server_spark.operators.similarity import _arrow_map
 
     if strategy in ("pairdist", "pairdist_rank1"):
         if strategy == "pairdist_rank1":
@@ -2373,32 +2374,23 @@ def _routed_pairs_from(
             F.col("vec_id").alias("vec_b"), F.col("embedding").alias("e_b")
         )
 
-        def verify(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ma = np.stack(pdf["e_a"].to_numpy()).astype(np.float64)
-                mb = np.stack(pdf["e_b"].to_numpy()).astype(np.float64)
-                cos = fround_np(
-                    np.einsum("ij,ij->i", ma, mb)
-                    / (
-                        np.sqrt((ma * ma).sum(axis=1))
-                        * np.sqrt((mb * mb).sum(axis=1))
-                    )
-                )
-                keep = cos >= threshold
-                yield pd.DataFrame(
-                    {
-                        "vec_a": pdf["vec_a"].to_numpy()[keep],
-                        "vec_b": pdf["vec_b"].to_numpy()[keep],
-                        "cos_sim": cos[keep],
-                    }
-                )
+        def verify(_, cols):
+            ma, mb = cols["e_a"], cols["e_b"]
+            cos = fround_np(
+                np.einsum("ij,ij->i", ma, mb)
+                / (np.sqrt((ma * ma).sum(axis=1)) * np.sqrt((mb * mb).sum(axis=1)))
+            )
+            keep = cos >= threshold
+            return {
+                "vec_a": cols["vec_a"][keep],
+                "vec_b": cols["vec_b"][keep],
+                "cos_sim": cos[keep],
+            }
 
-        return (
-            cand.join(ea, "vec_a")
-            .join(eb, "vec_b")
-            .mapInPandas(verify, "vec_a long, vec_b long, cos_sim double")
+        return _arrow_map(
+            cand.join(ea, "vec_a").join(eb, "vec_b"),
+            verify,
+            "vec_a long, vec_b long, cos_sim double",
         )
 
     bucketed = assign.select("vec_id", *keys).join(
@@ -2691,34 +2683,28 @@ def _fine_codebook(spark: SparkSession, sf_dir: str, coarse):
     sweep-retuned one) can never silently receive a fine book
     trained against a different coarse. The home centroid is the
     trainer's own cosine assignment (similarity._nearest)."""
-    import numpy as np
-    import pandas as pd
-
     from distributed_mapreduce_server_spark.operators.similarity import (
         CODEBOOK_TRAIN_LIMIT,
+        _arrow_map,
         _codebook_memo,
         _nearest,
         _train_codebook,
     )
 
+    def residuals(codebook, cols):
+        ids_b, mat_b = codebook
+        if not len(ids_b):
+            return None
+        home, _ = _nearest(cols["embedding"], mat_b, "cosine")
+        return {"vec_id": cols["vec_id"], "embedding": cols["embedding"] - mat_b[home]}
+
     def build():
         emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
-        bc = spark.sparkContext.broadcast(coarse)
-
-        def residuals(batches):
-            ids_b, mat_b = bc.value
-            for pdf in batches:
-                if pdf.empty or not len(ids_b):
-                    continue
-                a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                a_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                home, _ = _nearest(a_mat, mat_b, "cosine")
-                yield pd.DataFrame(
-                    {"vec_id": a_ids, "embedding": list(a_mat - mat_b[home])}
-                )
-
-        resid = emb.select("vec_id", "embedding").mapInPandas(
-            residuals, "vec_id long, embedding array<double>"
+        resid = _arrow_map(
+            emb.select("vec_id", "embedding"),
+            residuals,
+            "vec_id long, embedding array<double>",
+            coarse,
         )
         return _train_codebook(resid, range(NESTED_K2), ROUTE_ITERS, "cosine")
 
@@ -2749,76 +2735,43 @@ def _nested_assign(
     adds the 1-based coarse/fine probe ranks so
     dedup_nested_probe_sweep folds every (p1, p2) width from one
     pass."""
-    import numpy as np
-    import pandas as pd
-
-    c_ids, c_mat = coarse
-    f_ids, f_mat = fine
-    c_norms = np.sqrt((c_mat * c_mat).sum(axis=1))
-    f_norms = np.sqrt((f_mat * f_mat).sum(axis=1))
-    bc = emb.sparkSession.sparkContext.broadcast(
-        (c_ids, c_mat, c_norms, f_ids, f_mat, f_norms)
+    from distributed_mapreduce_server_spark.operators.similarity import (
+        _arrow_map,
+        _cosines,
+        _topk_desc,
     )
 
-    def _topk_desc(cos, k):
-        """Indices of the k largest per row, ordered desc with
-        ties broken to the SMALLEST index (== smallest cid: the
-        codebook ids are sorted ascending) — lexsort((ids, -cos))
-        semantics at O(K + k log k) per row instead of the full
-        O(K log K) argsort. Tie handling: cos sits on the fround 1e-4
-        grid, so subtracting index·1e-9 (max K·1e-9 ≈ 1.3e-6 ≪ grid
-        step) makes every key distinct and strictly index-ordered
-        within a tie without ever crossing grid levels."""
-        import numpy as np
-
-        key = cos - np.arange(cos.shape[1], dtype=np.float64) * 1e-9
-        if k >= cos.shape[1]:
-            return np.argsort(-key, axis=1)
-        part = np.argpartition(-key, k - 1, axis=1)[:, :k]
-        order = np.argsort(-np.take_along_axis(key, part, axis=1), axis=1)
-        return np.take_along_axis(part, order, axis=1)
-
-    def blocks(batches):
-        ci, cm, cn, fi, fm, fn = bc.value
-        # p may exceed the codebook size in sweeps.
-        p1e = min(p1, len(ci))
-        p2e = min(p2, len(fi))
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            a_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-            b, d = a_mat.shape
-            cos1 = fround_np((a_mat @ cm.T) / np.outer(a_norms, cn))
-            top1 = _topk_desc(cos1, p1e)  # (b, p1e)
-            res = a_mat[:, None, :] - cm[top1]  # (b, p1e, d)
-            rn = np.sqrt((res * res).sum(axis=2)).reshape(-1)  # (b·p1e,)
-            rn[rn == 0] = 1e-12  # degenerate x == centroid guard
-            # ONE stacked (b·p1e, d) @ (d, K2) matmul scores every
-            # probed cell's residual against the fine book at once.
-            cos2 = fround_np(
-                (res.reshape(-1, d) @ fm.T) / (rn[:, None] * fn[None, :])
-            )
-            top2 = _topk_desc(cos2, p2e)
-            out = {
-                "vec_id": np.repeat(a_ids, p1e * p2e),
-                "centroid_id": np.repeat(ci[top1].reshape(-1), p2e),
-                "fine_id": fi[top2].reshape(-1),
-            }
-            if with_rank:
-                out["crank"] = np.tile(
-                    np.repeat(np.arange(1, p1e + 1, dtype=np.int64), p2e), b
-                )
-                out["frank"] = np.tile(
-                    np.arange(1, p2e + 1, dtype=np.int64), b * p1e
-                )
-            yield pd.DataFrame(out)
+    def blocks(books, cols):
+        (ci, cm), (fi, fm) = books
+        a_ids, a_mat = cols["vec_id"], cols["embedding"]
+        b, d = a_mat.shape
+        # p may exceed the codebook size in sweeps: _topk_desc then
+        # ranks every cell.
+        top1 = _topk_desc(_cosines(a_mat, cm), p1)  # (b, p1e)
+        p1e = top1.shape[1]
+        res = a_mat[:, None, :] - cm[top1]  # (b, p1e, d)
+        rn = np.sqrt((res * res).sum(axis=2)).reshape(-1)  # (b·p1e,)
+        rn[rn == 0] = 1e-12  # degenerate x == centroid guard
+        fn = np.sqrt((fm * fm).sum(axis=1))
+        # ONE stacked (b·p1e, d) @ (d, K2) matmul scores every
+        # probed cell's residual against the fine book at once.
+        cos2 = fround_np((res.reshape(-1, d) @ fm.T) / (rn[:, None] * fn[None, :]))
+        top2 = _topk_desc(cos2, p2)
+        p2e = top2.shape[1]
+        out = {
+            "vec_id": np.repeat(a_ids, p1e * p2e),
+            "centroid_id": np.repeat(ci[top1].reshape(-1), p2e),
+            "fine_id": fi[top2].reshape(-1),
+        }
+        if with_rank:
+            out["crank"] = np.tile(np.repeat(np.arange(1, p1e + 1), p2e), b)
+            out["frank"] = np.tile(np.arange(1, p2e + 1), b * p1e)
+        return out
 
     schema = "vec_id long, centroid_id long, fine_id long" + (
         ", crank long, frank long" if with_rank else ""
     )
-    return emb.select("vec_id", "embedding").mapInPandas(blocks, schema)
+    return _arrow_map(emb.select("vec_id", "embedding"), blocks, schema, (coarse, fine))
 
 
 def _nested_assignments(

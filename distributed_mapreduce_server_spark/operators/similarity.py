@@ -14,8 +14,13 @@
 - sim_knn_join: all-pairs top-k join on the shared blocked cogroup
   grid (blocked.py) — local top-k per cell bounds the shuffle.
 - emb_* analytics: centroids, dim stats, covariance, PCA, k-means,
-  int8 quantization, backfill coverage and the mapInPandas
-  batch-inference backfill stage (emb_encode_backfill).
+  int8 quantization, backfill coverage and the batch-inference
+  backfill stage (emb_encode_backfill).
+
+Every per-batch numpy kernel runs through one block runner,
+_arrow_map: a partition-local function from one Arrow batch's columns
+to its output columns, the reference's line-streaming mapper with
+vectors for lines.
 """
 
 from __future__ import annotations
@@ -83,18 +88,73 @@ N_TABLES = 4
 EMB_DIM = 64
 
 
+def _numpy_columns(data) -> dict:
+    """Every column of an Arrow table or record batch as numpy: a list
+    column (``embedding``, ``e_a``/``e_b``, ``codes``) as its (rows,
+    width) matrix by flatten-and-reshape, floats as float64, and any
+    other column as a 1-D array."""
+    import numpy as np
+    import pyarrow as pa
+
+    cols = {}
+    for name, col in zip(data.column_names, data.columns):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        if not pa.types.is_list(col.type):
+            cols[name] = col.to_numpy(zero_copy_only=False)
+            continue
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        if flat.dtype.kind == "f":
+            flat = flat.astype(np.float64)
+        cols[name] = flat.reshape(len(col), len(flat) // max(len(col), 1))
+    return cols
+
+
+def _arrow_map(frame: DataFrame, kernel, schema: str, shared=None) -> DataFrame:
+    """``frame`` mapped one Arrow batch at a time through the numpy
+    ``kernel``: ``kernel(shared, cols)`` receives the broadcast value
+    of ``shared`` and the batch's columns (_numpy_columns) and returns
+    the columns of the DDL ``schema`` as numpy arrays (2-D for an
+    array column), or None for no rows. Empty batches never reach the
+    kernel, and a NaN is written as NULL, as mapInPandas wrote it."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out_schema = to_arrow_schema(StructType.fromDDL(schema))
+    # broadcast lifetime = the returned plan's; ContextCleaner reclaims it.
+    bc = frame.sparkSession.sparkContext.broadcast(shared)
+
+    def column(values, typ):
+        if not pa.types.is_list(typ):
+            return pa.array(values, type=typ, from_pandas=True)
+        n, width = values.shape
+        offsets = pa.array(np.arange(n + 1, dtype=np.int32) * width)
+        flat = pa.array(values.reshape(-1), type=typ.value_type, from_pandas=True)
+        return pa.ListArray.from_arrays(offsets, flat, type=typ)
+
+    def run(batches):
+        value = bc.value
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            out = kernel(value, _numpy_columns(batch))
+            if out is not None:
+                yield pa.RecordBatch.from_arrays(
+                    [column(out[f.name], f.type) for f in out_schema], schema=out_schema
+                )
+
+    return frame.mapInArrow(run, schema)
+
+
 def _matrix(table):
     """(ids, matrix) of a (vec_id, embedding) Arrow table sorted by
     vec_id: the flattened embedding lists reshaped to (n, EMB_DIM).
     The matrix has that shape for every n, 0 included, so an empty
     corpus or codebook flows through the numpy kernels as zero rows."""
-    import numpy as np
-
-    table = table.sort_by("vec_id")
-    ids = table["vec_id"].to_numpy().astype(np.int64)
-    flat = table["embedding"].combine_chunks().flatten()
-    mat = flat.to_numpy(zero_copy_only=False).astype(np.float64)
-    return ids, mat.reshape(table.num_rows, EMB_DIM)
+    cols = _numpy_columns(table.sort_by("vec_id").select(["vec_id", "embedding"]))
+    return cols["vec_id"], cols["embedding"].reshape(table.num_rows, EMB_DIM)
 
 
 def _collect_matrix(df):
@@ -229,6 +289,25 @@ def _cosines(x, mat):
     return fround_np((x @ mat.T) / np.outer(x_norms, norms))
 
 
+def _topk_desc(cos, k):
+    """Column indices of the k largest per row of ``cos``, ordered
+    desc with ties broken to the SMALLEST index (== smallest cid: the
+    codebook ids are sorted ascending) — lexsort((ids, -cos))
+    semantics at O(K + k log k) per row instead of the full O(K log K)
+    argsort. Tie handling: cos sits on the fround 1e-4 grid, so
+    subtracting index·1e-9 (max K·1e-9 ≈ 1.3e-6 ≪ grid step) makes
+    every key distinct and strictly index-ordered within a tie without
+    ever crossing grid levels."""
+    import numpy as np
+
+    key = cos - np.arange(cos.shape[1], dtype=np.float64) * 1e-9
+    if k >= cos.shape[1]:
+        return np.argsort(-key, axis=1)
+    part = np.argpartition(-key, k - 1, axis=1)[:, :k]
+    order = np.argsort(-np.take_along_axis(key, part, axis=1), axis=1)
+    return np.take_along_axis(part, order, axis=1)
+
+
 def _centroid_assign(
     emb: DataFrame, centroids, n_best: int, with_rank: bool = False
 ) -> DataFrame:
@@ -245,49 +324,38 @@ def _centroid_assign(
     Vectorized like dedup's pair kernel: the (tiny) codebook matrix is
     broadcast, each Arrow batch of vectors scores all centroids in one
     numpy matmul (a per-pair array-lambda crossJoin runs interpreted at
-    ~35 us/pair — the assignment alone was >1 s at sf0.1). Matmul
-    reassociation stays ~1e-15 from the oracle's sequential fold, far
-    below the 1e-4 rounding grid."""
+    ~35 us/pair — the assignment alone was >1 s at sf0.1) and ranks
+    them with _topk_desc (row_number() over (cos desc, centroid_id
+    asc)). Matmul reassociation stays ~1e-15 from the oracle's
+    sequential fold, far below the 1e-4 rounding grid."""
     import numpy as np
-    import pandas as pd
 
     if not isinstance(centroids, tuple):
         centroids = _collect_matrix(centroids)
-    # broadcast lifetime = the returned plan's; ContextCleaner reclaims it.
-    bc = emb.sparkSession.sparkContext.broadcast(centroids)
 
-    def blocks(batches):
-        ids_b, mat_b = bc.value
-        for pdf in batches:
-            # no centroids: no vector has a nearest one, so no rows
-            if pdf.empty or not len(ids_b):
-                continue
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            a_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            cos = _cosines(a_mat, mat_b)
-            out_vec, out_cen, out_rank = [], [], []
-            for i in range(len(a_ids)):
-                # row_number() over (cos desc, centroid_id asc)
-                top = np.lexsort((ids_b, -cos[i]))[:n_best]
-                out_vec.extend([a_ids[i]] * len(top))
-                out_cen.extend(ids_b[top])
-                out_rank.extend(range(1, len(top) + 1))
-            out = {"vec_id": out_vec, "centroid_id": out_cen}
-            if with_rank:
-                out["crank"] = out_rank
-            yield pd.DataFrame(out)
+    def assign(codebook, cols):
+        ids_b, mat_b = codebook
+        # no centroids: no vector has a nearest one, so no rows
+        if not len(ids_b):
+            return None
+        top = _topk_desc(_cosines(cols["embedding"], mat_b), n_best)
+        n, k = top.shape
+        out = {"vec_id": np.repeat(cols["vec_id"], k), "centroid_id": ids_b[top].reshape(-1)}
+        if with_rank:
+            out["crank"] = np.tile(np.arange(1, k + 1), n)
+        return out
 
     schema = "vec_id long, centroid_id long" + (
         ", crank long" if with_rank else ""
     )
-    return emb.select("vec_id", "embedding").mapInPandas(blocks, schema)
+    return _arrow_map(emb.select("vec_id", "embedding"), assign, schema, centroids)
 
 
 # Driver fast path bound for codebook training, probed with
 # session.fetch_if_small: 65536 x 64-dim doubles = 32 MiB. Below it
 # every round runs the block kernel once over the whole corpus on the
-# driver; above it each round runs the same kernel per Arrow batch in
-# mapInPandas — result-identical on the 1e-4/1e-6 grids. Tests set it
+# driver; above it each round runs the same kernel per Arrow batch
+# (_arrow_map) — result-identical on the 1e-4/1e-6 grids. Tests set it
 # to 0 to force the second path.
 CODEBOOK_TRAIN_LIMIT = 65536
 
@@ -311,6 +379,26 @@ def _pq_dists(x, mat, m: int):
     kernel the PQ trainer, encoder and ADC tables share."""
     sub = slice(m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM)
     return _sq_dists(x[:, sub], mat[:, sub], 4)
+
+
+def _pq_encode(x, mat):
+    """``(codes, err)`` of the rows of ``x`` under the stitched PQ
+    codebook ``mat``: codes[i, m] is the row of the first min of
+    _pq_dists in subspace m (the lowest cid on ties — distances are
+    rounded BEFORE the argmin, so selection never depends on sub-1e-4
+    float noise) and err[i] sums the chosen rounded distances over the
+    subspaces in order. The one encoder of the trainer, the quantizer
+    and every ADC scan."""
+    import numpy as np
+
+    codes = np.empty((len(x), PQ_M), dtype=np.int64)
+    err = np.zeros(len(x))
+    rows = np.arange(len(x))
+    for m in range(PQ_M):
+        d = _pq_dists(x, mat, m)
+        codes[:, m] = d.argmin(axis=1)
+        err += d[rows, codes[:, m]]
+    return codes, err
 
 
 def _pq_lut(q, mat):
@@ -347,7 +435,7 @@ def _lloyd_partials(x, mat, metric: str):
     of the block of vectors ``x`` under the codebook ``mat``, both
     shaped like ``mat``. Counts are per element, so a PQ sub-cluster
     counts only the vectors whose subspace it won (``pq``: per-subspace
-    first argmin of _pq_dists). Serves unchanged as the driver step
+    _pq_encode). Serves unchanged as the driver step
     (the whole corpus as one block) and as the per-batch map kernel."""
     import numpy as np
 
@@ -356,11 +444,11 @@ def _lloyd_partials(x, mat, metric: str):
     if not (len(x) and len(mat)):
         return sums, counts
     if metric == "pq":
+        codes, _ = _pq_encode(x, mat)
         for m in range(PQ_M):
             sub = slice(m * PQ_SUB_DIM, (m + 1) * PQ_SUB_DIM)
-            best = _pq_dists(x, mat, m).argmin(axis=1)
-            np.add.at(sums[:, sub], best, x[:, sub])
-            np.add.at(counts[:, sub], best, 1)
+            np.add.at(sums[:, sub], codes[:, m], x[:, sub])
+            np.add.at(counts[:, sub], codes[:, m], 1)
     else:
         best, _ = _nearest(x, mat, metric)
         np.add.at(sums, best, x)
@@ -376,27 +464,17 @@ def _distributed_partials(emb: DataFrame, mat, metric: str):
     arrays shaped like ``mat``."""
     import numpy as np
 
-    bc = emb.sparkSession.sparkContext.broadcast(mat)
-
-    def block_partials(batches):
-        import pandas as pd
-
-        mat_b = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            sums, counts = _lloyd_partials(x, mat_b, metric)
-            row, pos = np.nonzero(counts)
-            yield pd.DataFrame(
-                {"row": row, "pos": pos, "s": sums[row, pos], "c": counts[row, pos]}
-            )
+    def block_partials(mat_b, cols):
+        sums, counts = _lloyd_partials(cols["embedding"], mat_b, metric)
+        row, pos = np.nonzero(counts)
+        return {"row": row, "pos": pos, "s": sums[row, pos], "c": counts[row, pos]}
 
     sums = np.zeros(mat.shape)
     counts = np.zeros(mat.shape, dtype=np.int64)
     for r in (
-        emb.select("embedding")
-        .mapInPandas(block_partials, "row long, pos long, s double, c long")
+        _arrow_map(
+            emb.select("embedding"), block_partials, "row long, pos long, s double, c long", mat
+        )
         .groupBy("row", "pos")
         .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
         .collect()
@@ -654,27 +732,20 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the K x dim codebook is broadcast and each Arrow
     batch scores it in numpy — one corpus scan into a K-row
     aggregation, no crossJoin and no per-vector window."""
-    import numpy as np
-    import pandas as pd
-
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"].select(
         "vec_id", "embedding"
     )
-    bc = spark.sparkContext.broadcast(
-        _train_codebook(emb, range(KMEANS_K), KMEANS_ITERS, "l2")
-    )
 
-    def assign(batches):
-        ids_b, mat_b = bc.value
-        for pdf in batches:
-            if pdf.empty or not len(ids_b):
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            best, dist_sq = _nearest(x, mat_b, "l2")
-            yield pd.DataFrame({"cid": ids_b[best].astype(np.int32), "dist_sq": dist_sq})
+    def assign(codebook, cols):
+        ids_b, mat_b = codebook
+        if not len(ids_b):
+            return None
+        best, dist_sq = _nearest(cols["embedding"], mat_b, "l2")
+        return {"cid": ids_b[best], "dist_sq": dist_sq}
 
+    codebook = _train_codebook(emb, range(KMEANS_K), KMEANS_ITERS, "l2")
     return (
-        emb.mapInPandas(assign, "cid int, dist_sq double")
+        _arrow_map(emb, assign, "cid int, dist_sq double", codebook)
         .groupBy("cid")
         .agg(
             F.count("*").alias("n_vectors"),
@@ -703,6 +774,9 @@ def _cov_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
 
+    # gram folds EVERY batch of its partition into one partial Gram
+    # matrix before it emits, so it is no per-batch _arrow_map kernel:
+    # it keeps its own generator.
     def gram(batches):
         acc = None
         for pdf in batches:
@@ -785,27 +859,17 @@ def _pca_project_df(spark: SparkSession, sf_dir: str, comp, means) -> DataFrame:
     (comp, means) pair broadcasts and each Arrow batch projects with
     one numpy matmul."""
     import numpy as np
-    import pandas as pd
 
-    bc = spark.sparkContext.broadcast((comp, means))
-
-    def project(batches):
-        cmp_, mu = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64) - mu
-            p = m @ cmp_
-            out = {"vec_id": pdf["vec_id"].to_numpy(dtype=np.int64)}
-            for k in range(cmp_.shape[1]):
-                out[f"pc{k + 1}"] = np.round(p[:, k], 6)
-            yield pd.DataFrame(out)
+    def project(fit, cols):
+        cmp_, mu = fit
+        p = np.round((cols["embedding"] - mu) @ cmp_, 6)
+        return {"vec_id": cols["vec_id"], **{f"pc{k + 1}": p[:, k] for k in range(p.shape[1])}}
 
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
     schema = "vec_id long, " + ", ".join(
         f"pc{k + 1} double" for k in range(comp.shape[1])
     )
-    return emb.select("vec_id", "embedding").mapInPandas(project, schema)
+    return _arrow_map(emb.select("vec_id", "embedding"), project, schema, (comp, means))
 
 
 def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -981,44 +1045,26 @@ def emb_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized on the driver. Distances are rounded to the 1e-4 grid
     BEFORE the argmin (ties break to the lower centroid id) so the
     selection is stable across engines — the _centroid_assign
-    pattern."""
-    import numpy as np
-    import pandas as pd
-
+    pattern (_pq_encode)."""
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
-    cen_ids, cen_mat = _pq_codebook(emb, sf_dir=sf_dir)
-    bc = spark.sparkContext.broadcast((cen_ids, cen_mat))
 
-    def blocks(batches):
-        ids_c, cen = bc.value
-        for pdf in batches:
-            # an empty codebook encodes nothing (no nearest centroid)
-            if pdf.empty or not len(ids_c):
-                continue
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            out = {"vec_id": vids}
-            err = np.zeros(len(vids))
-            for m in range(PQ_M):
-                # rounded before the argmin: selection must not depend
-                # on sub-1e-4 float noise
-                d = _pq_dists(x, cen, m)
-                best = np.argmin(d, axis=1)  # first min = lowest cid
-                out[f"code{m}"] = ids_c[best].astype(np.int32)
-                err += d[np.arange(len(vids)), best]
-            out["recon_err"] = fround_np(err)
-            yield pd.DataFrame(out)
+    def encode(codebook, cols):
+        ids_c, cen = codebook
+        # an empty codebook encodes nothing (no nearest centroid)
+        if not len(ids_c):
+            return None
+        codes, err = _pq_encode(cols["embedding"], cen)
+        out = {"vec_id": cols["vec_id"], "recon_err": fround_np(err)}
+        return out | {f"code{m}": ids_c[codes[:, m]] for m in range(PQ_M)}
 
     schema = (
         "vec_id long, "
         + ", ".join(f"code{m} int" for m in range(PQ_M))
         + ", recon_err double"
     )
-    return (
-        emb.select("vec_id", "embedding")
-        .mapInPandas(blocks, schema)
-        .orderBy("vec_id")
-    )
+    return _arrow_map(
+        emb.select("vec_id", "embedding"), encode, schema, _pq_codebook(emb, sf_dir=sf_dir)
+    ).orderBy("vec_id")
 
 
 def sim_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1046,7 +1092,6 @@ def sim_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sim_ivfpq_ann); the operator here verifies the ADC machinery
     itself, exactly."""
     import numpy as np
-    import pandas as pd
 
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
     _, cen_mat = _pq_codebook(emb, sf_dir=sf_dir)
@@ -1055,32 +1100,27 @@ def sim_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LUT[q, m, j] = rounded squared distance from query q's subspace
     # m to sub-centroid j — fixed size (|Q| x 8 x 16) at any corpus
     lut = _pq_lut(q_mat, cen_mat)
-    bc = spark.sparkContext.broadcast((cen_mat, q_ids, lut))
 
-    def blocks(batches):
-        cen, qids, tab = bc.value
-        for pdf in batches:
-            if pdf.empty or not len(cen):
-                continue
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            # encode (same kernel as emb_pq_quantize), then ADC-score
-            # all queries against the batch via LUT gathers
-            adc = np.zeros((len(qids), len(vids)))
-            for m in range(PQ_M):
-                codes = np.argmin(_pq_dists(x, cen, m), axis=1)
-                adc += tab[:, m, :][:, codes]
-            adc = fround_np(adc)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, len(vids)),
-                    "neighbor_id": np.tile(vids, len(qids)),
-                    "adc_dist": adc.reshape(-1),
-                }
-            )
+    def score(shared, cols):
+        cen, qids, tab = shared
+        if not len(cen):
+            return None
+        # encode (emb_pq_quantize's encoder), then ADC-score all
+        # queries against the batch via LUT gathers
+        codes, _ = _pq_encode(cols["embedding"], cen)
+        adc = np.zeros((len(qids), len(codes)))
+        for m in range(PQ_M):
+            adc += tab[:, m, :][:, codes[:, m]]
+        return {
+            "query_id": np.repeat(qids, len(codes)),
+            "neighbor_id": np.tile(cols["vec_id"], len(qids)),
+            "adc_dist": fround_np(adc).reshape(-1),
+        }
 
     cand = emb.filter(F.col("vec_id") >= N_QUERIES).select("vec_id", "embedding")
-    scored = cand.mapInPandas(blocks, "query_id long, neighbor_id long, adc_dist double")
+    scored = _arrow_map(
+        cand, score, "query_id long, neighbor_id long, adc_dist double", (cen_mat, q_ids, lut)
+    )
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1112,7 +1152,6 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the machinery — routing, probing, encode, ADC — is verified
     exactly."""
     import numpy as np
-    import pandas as pd
 
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
     centroids = _ivf_codebook(spark, sf_dir)
@@ -1131,8 +1170,6 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, cen_mat = _pq_codebook(emb, sf_dir=sf_dir)
     q_ids, q_mat = _collect_matrix(q)
     lut = _pq_lut(q_mat, cen_mat)
-    qpos = {int(v): i for i, v in enumerate(q_ids)}
-    bc = spark.sparkContext.broadcast((cen_mat, qpos, lut))
 
     # candidates restricted to probed lists BEFORE any scoring — the
     # IVF pruning is the point; each candidate sits in exactly one
@@ -1145,28 +1182,24 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ce, "neighbor_id")
     )
 
-    def blocks(batches):
-        cen, qix, tab = bc.value
-        for pdf in batches:
-            if pdf.empty or not len(cen):
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            qi = np.array([qix[int(v)] for v in pdf["query_id"]], dtype=np.int64)
-            adc = np.zeros(len(pdf))
-            for m in range(PQ_M):
-                # first min = lowest cid
-                codes = np.argmin(_pq_dists(x, cen, m), axis=1)
-                adc += tab[qi, m, codes]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "adc_dist": fround_np(adc),
-                }
-            )
+    def score(shared, cols):
+        cen, qids, tab = shared
+        if not len(cen):
+            return None
+        codes, _ = _pq_encode(cols["embedding"], cen)
+        # LUT row of each pair's query: the query ids are sorted
+        qi = np.searchsorted(qids, cols["query_id"])
+        adc = np.zeros(len(qi))
+        for m in range(PQ_M):
+            adc += tab[qi, m, codes[:, m]]
+        return {
+            "query_id": cols["query_id"],
+            "neighbor_id": cols["neighbor_id"],
+            "adc_dist": fround_np(adc),
+        }
 
-    scored = pairs.mapInPandas(
-        blocks, "query_id long, neighbor_id long, adc_dist double"
+    scored = _arrow_map(
+        pairs, score, "query_id long, neighbor_id long, adc_dist double", (cen_mat, q_ids, lut)
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (
@@ -1315,10 +1348,11 @@ def emb_encode_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the backfill set comes from one ids-only
     key-partitioned left join (flag null = missing) + a 1-row
-    broadcast max-id cutoff; encoding runs in mapInPandas — Arrow
-    batches stream through the Python worker with NO shuffle, memory
-    bounded by spark.sql.execution.arrow.maxRecordsPerBatch, perfectly
-    parallel across input splits. That is exactly the production
+    broadcast max-id cutoff; encoding runs per Arrow batch
+    (_arrow_map) — batches stream through the Python worker with NO
+    shuffle, memory bounded by
+    spark.sql.execution.arrow.maxRecordsPerBatch, perfectly parallel
+    across input splits. That is exactly the production
     batch-inference shape; swapping the hash kernel below for a real
     model forward pass (ONNX/torch session per worker, reused across
     batches) changes nothing about the plan. The deterministic
@@ -1327,7 +1361,7 @@ def emb_encode_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces md5 bit-for-bit), like the multimodal decode fake
     (multimodal.py).
     """
-    import pandas as pd
+    import numpy as np
 
     tables = load_tables(spark, sf_dir, register_views=False)
     docs = tables["documents"].select("doc_id", "text")
@@ -1342,22 +1376,21 @@ def emb_encode_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
 
-    def encode(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, dims, vals = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                for d in range(1, ENC_DIM + 1):
-                    h = int(hashlib.md5(f"{text}|{d}".encode()).hexdigest()[:15], 16)
-                    ids.append(did)
-                    dims.append(d)
-                    vals.append((h % 2001 - 1000) / 1000.0)
-            yield pd.DataFrame({"doc_id": ids, "dim": dims, "val": vals})
+    def encode(_, cols):
+        dims = range(1, ENC_DIM + 1)
+        hashes = [
+            int(hashlib.md5(f"{text}|{d}".encode()).hexdigest()[:15], 16)
+            for text in cols["text"]
+            for d in dims
+        ]
+        return {
+            "doc_id": np.repeat(cols["doc_id"], ENC_DIM),
+            "dim": np.tile(dims, len(cols["doc_id"])),
+            "val": (np.array(hashes, dtype=np.int64) % 2001 - 1000) / 1000.0,
+        }
 
-    return (
-        backfill.mapInPandas(encode, "doc_id long, dim int, val double")
-        .orderBy("doc_id", "dim")
+    return _arrow_map(backfill, encode, "doc_id long, dim int, val double").orderBy(
+        "doc_id", "dim"
     )
 
 
@@ -1871,7 +1904,6 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances before every argmin, lowest-cid ties) -> FULL
     value-parity oracle like both parents."""
     import numpy as np
-    import pandas as pd
 
     emb = load_tables(spark, sf_dir, register_views=False)["embeddings"]
     centroids = _ivf_codebook(spark, sf_dir)
@@ -1887,65 +1919,54 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, cb_mat = _pq_codebook(emb, sf_dir=sf_dir)
     g_ids, g_mat = centroids
-    gpos = {int(v): i for i, v in enumerate(g_ids)}
     q_ids, q_mat = _collect_matrix(q)
-    qpos = {int(v): i for i, v in enumerate(q_ids)}
     # LUT[qi, gi, m, cid] = round(|| (q - g)_m - cb_cid_m ||^2, 4)
     lut = np.zeros((len(q_ids), len(g_ids), PQ_M, len(cb_mat)))
     for gi in range(len(g_ids)):
         lut[:, gi] = _pq_lut(q_mat - g_mat[gi][None, :], cb_mat)
-    bc = spark.sparkContext.broadcast((cb_mat, g_mat, gpos, qpos, lut))
 
     enc_in = cand_buckets.join(
         cand.select(F.col("vec_id").alias("neighbor_id"), "embedding"), "neighbor_id"
     )
 
-    def encode(batches):
-        cb, g, gix, _, _ = bc.value
-        for pdf in batches:
-            if pdf.empty or not len(cb):
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            gi = np.array([gix[int(v)] for v in pdf["centroid_id"]], dtype=np.int64)
-            r = x - g[gi]
-            codes = np.zeros((len(pdf), PQ_M), dtype=np.int32)
-            for m in range(PQ_M):
-                # first min = lowest cid
-                codes[:, m] = np.argmin(_pq_dists(r, cb, m), axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "centroid_id": pdf["centroid_id"].to_numpy(dtype=np.int64),
-                    "codes": list(codes),
-                }
-            )
+    # codebook rows and query ids are sorted, so searchsorted is each
+    # id's row
+    def encode(shared, cols):
+        cb, gids, g = shared
+        if not len(cb):
+            return None
+        residual = cols["embedding"] - g[np.searchsorted(gids, cols["centroid_id"])]
+        codes, _ = _pq_encode(residual, cb)
+        return {
+            "neighbor_id": cols["neighbor_id"],
+            "centroid_id": cols["centroid_id"],
+            "codes": codes,
+        }
 
-    inverted_file = enc_in.mapInPandas(
-        encode, "neighbor_id long, centroid_id long, codes array<int>"
+    inverted_file = _arrow_map(
+        enc_in,
+        encode,
+        "neighbor_id long, centroid_id long, codes array<int>",
+        (cb_mat, g_ids, g_mat),
     )
     pairs = broadcast(q_probes).join(inverted_file, "centroid_id")
 
-    def adc_blocks(batches):
-        _, _, gix, qix, tab = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qi = np.array([qix[int(v)] for v in pdf["query_id"]], dtype=np.int64)
-            gi = np.array([gix[int(v)] for v in pdf["centroid_id"]], dtype=np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            adc = np.zeros(len(pdf))
-            for m in range(PQ_M):
-                adc += tab[qi, gi, m, codes[:, m]]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "adc_dist": fround_np(adc),
-                }
-            )
+    def score(shared, cols):
+        qids, gids, tab = shared
+        qi = np.searchsorted(qids, cols["query_id"])
+        gi = np.searchsorted(gids, cols["centroid_id"])
+        codes = cols["codes"]
+        adc = np.zeros(len(qi))
+        for m in range(PQ_M):
+            adc += tab[qi, gi, m, codes[:, m]]
+        return {
+            "query_id": cols["query_id"],
+            "neighbor_id": cols["neighbor_id"],
+            "adc_dist": fround_np(adc),
+        }
 
-    scored = pairs.mapInPandas(
-        adc_blocks, "query_id long, neighbor_id long, adc_dist double"
+    scored = _arrow_map(
+        pairs, score, "query_id long, neighbor_id long, adc_dist double", (q_ids, g_ids, lut)
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (

@@ -120,6 +120,82 @@ def test_lint_catches_a_synthetic_probe(tmp_path):
     ]
 
 
+_PANDAS_KERNEL_RE = re.compile(r"mapInPandas\((\w*)|np\.stack\(pdf\[")
+_DEF_NAME_RE = re.compile(r"^\s*def (\w+)")
+
+# Hand-written pandas generators that stay beside similarity._arrow_map
+# (the one Arrow block runner), keyed (file, site): a mapInPandas call
+# is named by its generator, an ``np.stack(pdf[`` decode by the def it
+# sits in. Every entry carries its reason.
+ALLOWED_PANDAS_KERNELS = {
+    # folds every batch of a partition into one partial Gram matrix
+    # before it emits: no per-batch kernel
+    ("operators/similarity.py", "gram"),
+    # one grouped applyInPandas call per bucket, not an Arrow batch
+    ("operators/dedup.py", "bucket_pairs"),
+}
+
+
+def _pandas_kernel_sites(root: pathlib.Path = PKG) -> dict[str, tuple[str, str]]:
+    """``file:line`` -> (file, site) of every ``mapInPandas(`` and
+    ``np.stack(pdf[`` in operators/similarity.py and operators/dedup.py."""
+    sites = {}
+    for rel in ("operators/similarity.py", "operators/dedup.py"):
+        f = root / rel
+        if not f.exists():
+            continue
+        site = None
+        for i, line in enumerate(f.read_text().splitlines(), 1):
+            d = _DEF_NAME_RE.match(line)
+            if d:
+                site = d.group(1)
+            m = _PANDAS_KERNEL_RE.search(line)
+            if m:
+                sites[f"{root.name}/{rel}:{i}"] = (rel, m.group(1) or site)
+    return sites
+
+
+def _pandas_kernel_offenders(root: pathlib.Path = PKG) -> list[str]:
+    return [
+        loc
+        for loc, site in _pandas_kernel_sites(root).items()
+        if site not in ALLOWED_PANDAS_KERNELS
+    ]
+
+
+def test_embedding_kernels_run_through_the_arrow_runner():
+    """Every per-batch embedding kernel in similarity.py and dedup.py
+    runs through similarity._arrow_map: a new mapInPandas generator or
+    pandas decode there grows the hand-written copies back. The
+    allowlist must not go stale either."""
+    offenders = _pandas_kernel_offenders()
+    assert not offenders, f"use similarity._arrow_map: {offenders}"
+    gone = ALLOWED_PANDAS_KERNELS - set(_pandas_kernel_sites().values())
+    assert not gone, f"allowlisted pandas kernels no longer present: {sorted(gone)}"
+
+
+def test_lint_catches_a_synthetic_pandas_kernel(tmp_path):
+    scratch = tmp_path / "pkg"
+    (scratch / "operators").mkdir(parents=True)
+    (scratch / "operators" / "similarity.py").write_text(
+        "def assign(batches):\n"
+        "    for pdf in batches:\n"
+        "        x = np.stack(pdf[\"embedding\"].to_numpy())\n"
+        "out = frame.mapInPandas(assign, \"vec_id long\")\n"
+        "def gram(batches):\n"
+        "    m = np.stack(pdf[\"embedding\"].to_numpy())\n"
+        "pair_sums = frame.mapInPandas(gram, \"i int\")\n"
+    )
+    (scratch / "operators" / "dedup.py").write_text("out = frame.mapInPandas(verify, s)\n")
+    # outside similarity.py and dedup.py, mapInPandas is not linted
+    (scratch / "operators" / "text.py").write_text("out = frame.mapInPandas(encode, s)\n")
+    assert _pandas_kernel_offenders(root=scratch) == [
+        "pkg/operators/similarity.py:3",
+        "pkg/operators/similarity.py:4",
+        "pkg/operators/dedup.py:1",
+    ]
+
+
 def test_survey_section2_covers_every_registry_key():
     """SURVEY.md §2 is the judge's line-by-line coverage checklist —
     every registered key must appear there as a backticked token (the

@@ -270,3 +270,58 @@ def test_ivfpq_prunes_to_probed_lists(spark):
         load_tables(spark, sf, register_views=False)["embeddings"].count() - 5
     )
     assert len({p[1] for p in ivfpq}) < n_cand
+
+
+# Keys whose per-batch numpy kernels run through similarity._arrow_map.
+ARROW_KERNEL_KEYS = [
+    "dedup_semantic_routed",
+    "dedup_semantic_routed_nested",
+    "emb_encode_backfill",
+    "emb_kmeans",
+    "emb_pca_project",
+    "emb_pq_quantize",
+    "sim_ivf_ann",
+    "sim_ivfpq_ann",
+    "sim_ivfpq_residual",
+    "sim_pq_adc_ann",
+]
+
+
+@pytest.mark.parametrize("name", ARROW_KERNEL_KEYS)
+def test_arrow_kernels_ignore_batch_boundaries(name, spark, sf_smoke):
+    """Cutting every kernel's input into 7-row Arrow batches (many per
+    task) must not move one row against the default single batch per
+    task. The codebook memo is dropped before each run, so the kernels
+    that feed training (the fine book's residuals) run at both sizes."""
+    from distributed_mapreduce_server_spark import registry
+    from distributed_mapreduce_server_spark.operators.similarity import (
+        release_codebook_caches,
+    )
+    from distributed_mapreduce_server_spark.session import scoped_conf
+
+    fn = registry.all_queries()[name]
+    release_codebook_caches()
+    default = fn(spark, sf_smoke).collect()
+    release_codebook_caches()
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": 7}):
+        small = fn(spark, sf_smoke).collect()
+    release_codebook_caches()
+    assert small == default
+
+
+def test_topk_desc_matches_the_lexsort_ranking():
+    """_topk_desc is row_number() over (cos desc, id asc) for sorted
+    codebook ids: equal to the per-row lexsort it replaced, on 1e-4-grid
+    cosines with many ties, for k below, at and above the codebook
+    size."""
+    from distributed_mapreduce_server_spark.functions import fround_np
+    from distributed_mapreduce_server_spark.operators.similarity import _topk_desc
+
+    rng = np.random.default_rng(7)
+    for _ in range(50):
+        n, n_cells = rng.integers(1, 30), rng.integers(1, 80)
+        cos = fround_np(rng.integers(-3, 4, size=(n, n_cells)) / 7.0)
+        ids = np.arange(n_cells) * 3 + 1
+        for k in (1, 4, 14, n_cells, 200):
+            want = np.stack([np.lexsort((ids, -row))[:k] for row in cos])
+            assert np.array_equal(_topk_desc(cos, k), want)
