@@ -2755,7 +2755,9 @@ def _nested_assign(
         fn = np.sqrt((fm * fm).sum(axis=1))
         # ONE stacked (b·p1e, d) @ (d, K2) matmul scores every
         # probed cell's residual against the fine book at once.
-        cos2 = fround_np((res.reshape(-1, d) @ fm.T) / (rn[:, None] * fn[None, :]))
+        # a zero-norm fine centroid scores NaN: _topk_desc ranks it last
+        with np.errstate(invalid="ignore"):
+            cos2 = fround_np((res.reshape(-1, d) @ fm.T) / (rn[:, None] * fn[None, :]))
         top2 = _topk_desc(cos2, p2)
         p2e = top2.shape[1]
         out = {

@@ -17,7 +17,6 @@ real production shape either way.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -26,20 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_server_spark.catalog import load_tables
-from distributed_mapreduce_server_spark.functions import fround
+from distributed_mapreduce_server_spark.functions import fround, fround_scalar
 
 MEDIA_TYPES = ("image", "audio", "video")
-
-
-def _round_sql(v: float, nd: int) -> float:
-    """DuckDB ROUND semantics: round the SCALED double half away from
-    zero (std::round(v * 10^nd) / 10^nd). Neither Python's round()
-    (banker's on the binary value) nor repr-based HALF_UP matches it
-    when v * 10^nd lands exactly on a representable .5 tie — see
-    functions.fround, the Spark-side twin of this helper."""
-    scale = 10.0**nd
-    a = abs(v) * scale
-    return math.copysign(math.floor(a + 0.5) / scale, v)
 
 DECODE_SCHEMA = (
     "doc_id long, media_type string, n_bytes int, "
@@ -159,14 +147,14 @@ def _audio_features_real(payload: bytes) -> dict:
     rms = float(((flat - mean) ** 2).mean() ** 0.5) if n else 0.0
     zc = int((((flat[1:] - mean) * (flat[:-1] - mean)) < 0).sum()) if n > 1 else 0
     mfcc = [
-        _round_sql(float(flat[j::N_MFCC].mean() - mean), 4) if flat[j::N_MFCC].size else 0.0
+        fround_scalar(float(flat[j::N_MFCC].mean() - mean), 4) if flat[j::N_MFCC].size else 0.0
         for j in range(N_MFCC)
     ]
     return {
         "sample_rate": int(rate),
         "n_samples": n,
-        "duration_s": _round_sql(n / rate, 6),
-        "rms": _round_sql(rms, 4),
+        "duration_s": fround_scalar(n / rate, 6),
+        "rms": fround_scalar(rms, 4),
         "zero_crossings": zc,
         "mfcc": mfcc,
     }
@@ -276,7 +264,7 @@ def resize_media(df: DataFrame, target_w: int = 224, target_h: int = 224) -> Dat
                         "height": rec["height"],
                         "target_w": target_w,
                         "target_h": target_h,
-                        "scale": _round_sql(scale, 6),
+                        "scale": fround_scalar(scale, 6),
                     }
                 )
             yield pd.DataFrame(out)
@@ -308,7 +296,7 @@ def sample_frames(df: DataFrame) -> DataFrame:
                         {
                             "doc_id": doc_id,
                             "frame_idx": i,
-                            "frame_ts": _round_sql(dur * i / N_FRAMES, 3),
+                            "frame_ts": fround_scalar(dur * i / N_FRAMES, 3),
                             "frame_checksum": f"{sum(b[lo:hi]) & 0xFFFFFFFF:08x}",
                         }
                     )
@@ -365,14 +353,14 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
             1 for i in range(1, n) if (b[i] - mean) * (b[i - 1] - mean) < 0
         )
         mfcc = [
-            _round_sql(sum(b[j::N_MFCC]) / max(len(b[j::N_MFCC]), 1) - mean, 4)
+            fround_scalar(sum(b[j::N_MFCC]) / max(len(b[j::N_MFCC]), 1) - mean, 4)
             for j in range(N_MFCC)
         ]
         return {
             "sample_rate": sr,
             "n_samples": n,
-            "duration_s": _round_sql(n / sr, 6),
-            "rms": _round_sql(rms, 4),
+            "duration_s": fround_scalar(n / sr, 6),
+            "rms": fround_scalar(rms, 4),
             "zero_crossings": zc,
             "mfcc": mfcc,
         }
@@ -730,9 +718,9 @@ def mm_scene_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                     lo = (len(b) * i) // N_FRAMES
                     hi = (len(b) * (i + 1)) // N_FRAMES
                     seg = b[lo:hi]
-                    means.append(_round_sql(sum(seg) / max(len(seg), 1), 4))
+                    means.append(fround_scalar(sum(seg) / max(len(seg), 1), 4))
                 jumps = [
-                    _round_sql(abs(means[i] - means[i - 1]), 4)
+                    fround_scalar(abs(means[i] - means[i - 1]), 4)
                     for i in range(1, N_FRAMES)
                 ]
                 cuts = [i for i in range(1, N_FRAMES) if jumps[i - 1] > SCENE_JUMP_T]

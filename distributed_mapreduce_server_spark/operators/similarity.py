@@ -281,12 +281,14 @@ def _cosines(x, mat):
     """(n, k) cosines between the rows of ``x`` and of ``mat``,
     dot-then-divide like the oracles' dot / (|x| |c|), on the 1e-4 grid
     (fround_np: DuckDB ROUND semantics, scaled half-away-from-zero;
-    np.round is banker's at scaled .5 ties)."""
+    np.round is banker's at scaled .5 ties). A zero norm gives NaN,
+    where DuckDB's 0 / 0 gives NULL; _topk_desc ranks both last."""
     import numpy as np
 
     x_norms = np.sqrt((x * x).sum(axis=1))
     norms = np.sqrt((mat * mat).sum(axis=1))
-    return fround_np((x @ mat.T) / np.outer(x_norms, norms))
+    with np.errstate(invalid="ignore"):
+        return fround_np((x @ mat.T) / np.outer(x_norms, norms))
 
 
 def _topk_desc(cos, k):
@@ -297,10 +299,12 @@ def _topk_desc(cos, k):
     argsort. Tie handling: cos sits on the fround 1e-4 grid, so
     subtracting index·1e-9 (max K·1e-9 ≈ 1.3e-6 ≪ grid step) makes
     every key distinct and strictly index-ordered within a tie without
-    ever crossing grid levels."""
+    ever crossing grid levels. A NaN cosine ranks below every number,
+    as the oracles' NULL does under ORDER BY cos DESC (NULLS LAST):
+    it keys as -2, under the smallest cosine, -1."""
     import numpy as np
 
-    key = cos - np.arange(cos.shape[1], dtype=np.float64) * 1e-9
+    key = np.where(np.isnan(cos), -2.0, cos) - np.arange(cos.shape[1], dtype=np.float64) * 1e-9
     if k >= cos.shape[1]:
         return np.argsort(-key, axis=1)
     part = np.argpartition(-key, k - 1, axis=1)[:, :k]
@@ -415,15 +419,16 @@ def _pq_lut(q, mat):
 
 def _nearest(x, mat, metric: str):
     """Row index into ``mat`` of each vector's nearest centroid and
-    its rounded score. ``cosine``: first argmax of the 1e-4-rounded
-    cosines; ``l2``: first argmin of the 1e-6-rounded squared
-    distances. Codebook rows are sorted by id, so "first" is the
-    smallest-cid tie-break (ROW_NUMBER ... cid ASC in the oracles)."""
+    its rounded score. ``cosine``: the _topk_desc top-1 of the
+    1e-4-rounded cosines (NaN last); ``l2``: first argmin of the
+    1e-6-rounded squared distances. Codebook rows are sorted by id, so
+    "first" is the smallest-cid tie-break (ROW_NUMBER ... cid ASC in
+    the oracles)."""
     import numpy as np
 
     if metric == "cosine":
         scores = _cosines(x, mat)
-        best = scores.argmax(axis=1)
+        best = _topk_desc(scores, 1)[:, 0]
     else:
         scores = _sq_dists(x, mat, 6)
         best = scores.argmin(axis=1)

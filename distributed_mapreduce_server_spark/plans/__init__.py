@@ -140,19 +140,36 @@ def window_partition_specs_in(plan: str) -> list[list[str]]:
     return specs
 
 
+def _status_store(spark):
+    """The session's SQLAppStatusStore (populated with or without the
+    UI), after flushing the async listener bus: execution events are
+    delivered off-thread, so without the flush a plan recorded
+    microseconds ago could be missing, or a late one could land on
+    the wrong side of a :func:`latest_execution_id` snapshot."""
+    sc = spark.sparkContext._jsc.sc()
+    try:
+        sc.listenerBus().waitUntilEmpty()
+    except Exception:  # older signature takes a timeout in millis
+        sc.listenerBus().waitUntilEmpty(10000)
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def _newest_id(store, n: int) -> int:
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n > 0 else -1
+
+
 def latest_execution_id(spark) -> int:
     """High-water SQL execution id in the session's status store (-1
-    when none) — snapshot before running an eager operator so
+    when none) — snapshot before running an operator so
     :func:`executed_plan_descriptions` returns only ITS executions."""
-    lst = spark._jsparkSession.sharedState().statusStore().executionsList()
-    n = lst.size()
-    return lst.apply(n - 1).executionId() if n > 0 else -1
+    store = _status_store(spark)
+    return _newest_id(store, store.executionsCount())
 
 
 def executed_plan_descriptions(spark, since: int = -1) -> list[str]:
     """Physical plan descriptions of every SQL execution the session
     actually RAN with executionId > ``since``, read from the
-    SQLAppStatusStore (populated with or without the UI).
+    SQLAppStatusStore.
 
     This closes the plan-audit blind spot for EAGER operators: ops
     that execute at build time (streaming availableNow drains,
@@ -161,18 +178,17 @@ def executed_plan_descriptions(spark, since: int = -1) -> list[str]:
     they submitted left its executed plan here — including AQE's
     final (post-reoptimization) shape.
 
-    Flushes the async listener bus first: execution events are
-    delivered off-thread, so without the flush a plan recorded
-    microseconds ago could be missing."""
-    sc = spark.sparkContext._jsc.sc()
-    try:
-        sc.listenerBus().waitUntilEmpty()
-    except Exception:  # older signature takes a timeout in millis
-        sc.listenerBus().waitUntilEmpty(10000)
-    lst = spark._jsparkSession.sharedState().statusStore().executionsList()
+    Reads only the newest rows: the store lists executions by
+    ascending unique id, so at most ``newest - since`` of them are
+    newer than ``since`` (the whole retained list is ~1000 rows, each
+    a py4j round trip)."""
+    store = _status_store(spark)
+    n = store.executionsCount()
+    k = min(n, max(_newest_id(store, n) - since, 0))
+    rows = store.executionsList(n - k, k)
     out = []
-    for i in range(lst.size()):
-        e = lst.apply(i)
+    for i in range(k):
+        e = rows.apply(i)
         if e.executionId() > since:
             out.append(e.physicalPlanDescription())
     return out

@@ -1,5 +1,6 @@
 """Primary gate: every registered query matches its DuckDB oracle at
-sf0.01 — the same comparison the driver runs (SURVEY.md §5)."""
+sf0.01 — the same comparison the driver runs (SURVEY.md §5). The same
+run audits every plan each key executed (tests/plan_audit.py)."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import pytest
 
 from distributed_mapreduce_server_spark import registry, session
 from tests.oracle_utils import compare, duckdb_conn
+from tests.plan_audit import BOUNDED_FRAME_WINDOWS, NESTED_LOOP, audit, executed_plans
 
 ORACLES = registry.all_oracles()
 QUERIES = registry.all_queries()
@@ -21,9 +23,12 @@ def con(sf_dir):
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(name, spark, sf_dir, con):
-    df = QUERIES[name](spark, sf_dir)
-    problems = compare(df, con, ORACLES[name])
+    # the bracket opens before the build: eager keys run jobs there
+    with executed_plans(spark) as plans:
+        problems = compare(QUERIES[name](spark, sf_dir), con, ORACLES[name])
     assert not problems, f"{name}: " + "; ".join(problems)
+    problems = audit(name, plans)
+    assert not problems, f"{name} plan audit: " + "; ".join(problems)
 
 
 # Keys that crashed on degenerate tables and now return what DuckDB
@@ -162,9 +167,22 @@ def test_pca_project_on_empty_tables_returns_no_rows(spark, sf_empty):
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0
+    # collect(), not count(): count() prunes unused Window nodes, which
+    # the plan audit would then never see
+    with executed_plans(spark) as plans:
+        df = QUERIES[name](spark, sf_dir)
+        df.collect()
     assert len(df.columns) > 0
+    problems = audit(name, plans)
+    assert not problems, f"{name} plan audit: " + "; ".join(problems)
+
+
+def test_plan_audit_allowlists_name_registry_keys():
+    """Every plan-audit allowlist entry names a registry key and gives
+    a reason (the key's own audit fails an entry whose shape is gone)."""
+    for allowlist in (NESTED_LOOP, BOUNDED_FRAME_WINDOWS):
+        assert set(allowlist) <= set(QUERIES), set(allowlist) - set(QUERIES)
+        assert all(reason.strip() for reason in allowlist.values())
 
 
 # Keys intentionally WITHOUT a SQL oracle (approximate or

@@ -325,3 +325,20 @@ def test_topk_desc_matches_the_lexsort_ranking():
         for k in (1, 4, 14, n_cells, 200):
             want = np.stack([np.lexsort((ids, -row))[:k] for row in cos])
             assert np.array_equal(_topk_desc(cos, k), want)
+
+
+def test_nan_cosines_rank_last_like_duckdb_nulls():
+    """A zero norm makes a NaN cosine where DuckDB's 0 / 0 is NULL, and
+    ROW_NUMBER() OVER (ORDER BY cos DESC, cid) puts NULLs last, lowest
+    cid first: on [NULL, 0.5, NULL, 0.2] DuckDB orders 1, 3, 0, 2."""
+    from distributed_mapreduce_server_spark.operators.similarity import _nearest, _topk_desc
+
+    cos = np.array([[np.nan, 0.5, np.nan, 0.2]])
+    for k in (1, 2, 4):
+        assert _topk_desc(cos, k).tolist() == [[1, 3, 0, 2][:k]]
+    # zero-norm codebook rows 0 and 2; a zero-norm vector has no number
+    mat = np.array([[0.0, 0.0], [1.0, 1.0], [0.0, 0.0], [1.0, -1.0]])
+    with np.errstate(all="raise"):
+        best, score = _nearest(np.array([[1.0, 0.0], [0.0, 0.0]]), mat, "cosine")
+    assert best.tolist() == [1, 0]
+    assert score[0] == 0.7071 and np.isnan(score[1])
