@@ -48,6 +48,7 @@ long-running sessions can drop them with ``release_dedup_caches()``.
 from __future__ import annotations
 
 import functools
+import math
 
 import numpy as np
 import pyarrow as pa
@@ -346,10 +347,14 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ngram_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(pairs, shingles): jaccard >= 0.8 pairs plus the persisted shingle
-    frame they read from. Caller must materialize pairs, then unpersist
-    the shingle frame.
+def _ngram_pairs(e: DataFrame) -> DataFrame:
+    """Jaccard >= 0.8 pairs (doc_a < doc_b, jaccard) over the shingle
+    frame ``e``. The pairs read ``e`` three times (self-join a/b +
+    sizes): on a Spark path persist ``e`` and materialize it with a
+    count BEFORE the pairs run — a lazy persist would race-fill the
+    cache inside one job and compute the shingle subtree up to 3x
+    (measured 2x slower). The caller materializes the pairs, then
+    unpersists ``e``.
 
     This is the FUSED full-inverted-index baseline: one self-join +
     group-count produces exact intersections directly. Hot-bucket
@@ -365,13 +370,8 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     bound, 9.5x fewer candidates, zero recall loss) — the recommended
     form at 100 TB; this operator stays the simple exact baseline the
     clustering pipeline builds on."""
-    e = _shingle_rows(spark, sf_dir, 32).persist()
-    e.count()  # materialize BEFORE the 3-way fan-out (self-join a/b +
-    # sizes); a lazy persist would race-fill the cache inside one job
-    # and compute the shingle subtree up to 3x (measured 2x slower).
     jac = _pair_jaccard(e, None)
-    pairs = jac.filter(F.col("jaccard") >= JACCARD_T).select("doc_a", "doc_b", "jaccard")
-    return pairs, e
+    return jac.filter(F.col("jaccard") >= JACCARD_T).select("doc_a", "doc_b", "jaccard")
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,8 +380,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     join as 32-bit hashes, not strings — smaller shuffle keys. Hot-
     bucket-bounded candidate generation lives in
     dedup_prefix_filter_jaccard (see _ngram_pairs' measured notes)."""
-    pairs, e = _ngram_pairs(spark, sf_dir)
-    out = _cache_result(pairs)
+    e = _shingle_rows(spark, sf_dir, 32).persist()
+    e.count()
+    out = _cache_result(_ngram_pairs(e))
     e.unpersist()
     return out.orderBy("doc_a", "doc_b")
 
@@ -719,20 +720,34 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The jaccard pairs come out of _ngram_pairs already canonical
     (doc_a < doc_b, one row per pair), so they feed the loop as
-    (u, v) = (doc_b, doc_a) with no symmetric edge frame and no extra
-    persist or count. There is no member roster either: star
-    contraction keeps every node of a component of two or more in
-    some edge at every round, so the final stars label exactly the
-    documents of the near-dup graph. The eager actions are the
-    shingle persist and the probe of the pairs' checkpoint; a
-    near-dup graph of at most session.DRIVER_GRAPH_MAX_EDGES pairs is
-    then labeled on the driver, a larger one adds one signature per
-    star round and its labels return lazily over the last round's
-    checkpoint.
+    (u, v) = (doc_b, doc_a) with no symmetric edge frame. There is no
+    member roster either: star contraction keeps every node of a
+    component of two or more in some edge at every round, so the
+    final stars label exactly the documents of the near-dup graph.
+
+    A corpus of n documents has at most C(n, 2) pairs (a footer
+    count, no job). Within session.DRIVER_GRAPH_MAX_EDGES the lazy
+    pairs are fetched in one query and labeled on the driver, with
+    no persist, count or checkpoint. Above it the eager actions are
+    the shingle persist and count and the probe of the pairs'
+    checkpoint; a near-dup graph within the cap is then labeled on
+    the driver, a larger one adds one signature per star round and
+    its labels return lazily over the last round's checkpoint.
     """
-    pairs, e = _ngram_pairs(spark, sf_dir)
+    from distributed_mapreduce_server_spark.catalog import table_row_count
+
+    e = _shingle_rows(spark, sf_dir, 32)
+    pairs = _ngram_pairs(e)
     canon = pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    labels = _star_contraction_cc(spark, canon)
+
+    def hold(canon: DataFrame) -> DataFrame:
+        # the Spark path: the shingles, then round 0 (the pairs)
+        e.persist()
+        e.count()
+        return canon.localCheckpoint(eager=False)
+
+    bound = math.comb(table_row_count(sf_dir, "documents"), 2)
+    labels = _star_contraction_cc(spark, canon, bound, hold)
     e.unpersist()
     return labels.orderBy("doc_id")
 
@@ -741,10 +756,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 dedup_clusters_bigstar = dedup_clusters
 
 
-def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
+def _star_contraction_cc(
+    spark: SparkSession, canon: DataFrame, bound: int, hold=None
+) -> DataFrame:
     """(doc_id, cluster_id) connected-component labels of the graph
-    given as a DISTINCT canonical (u, v) edge frame with u > v; the
-    cluster id is the component's minimum node.
+    given as a DISTINCT canonical (u, v) edge frame with u > v and at
+    most ``bound`` rows; the cluster id is the component's minimum
+    node.
 
     - large-star: per node u, connect every LARGER neighbor v > u to
       m(u) = min(N(u) ∪ {u}). Cuts long paths toward minima in
@@ -764,11 +782,14 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
     instead of two exceptAll jobs. At the fixed point every edge is
     (node, component-min), so labels read directly off the stars.
 
-    Round 0's checkpoint of ``canon`` is probed with
-    session.fetch_if_small: a graph of at most DRIVER_GRAPH_MAX_EDGES
-    edges is labeled on the driver by :func:`_min_labels_on_driver`
-    (the same rows as array ops, no Spark round). A larger one enters
-    session.checkpoint_loop already materialized: each round's edge
+    Where it runs is session.fetch_or_hold's call: a graph of at most
+    DRIVER_GRAPH_MAX_EDGES edges is labeled on the driver by
+    :func:`_min_labels_on_driver` (the same rows as array ops, no
+    Spark round). When ``bound`` is within the cap the lazy frame is
+    fetched in one query; above it ``hold(canon)`` (default: a lazy
+    ``localCheckpoint``, round 0) materializes it and the held frame
+    is probed. A larger graph enters session.checkpoint_loop already
+    materialized: each round's edge
     set is checkpointed and its signature is the round's one action;
     the loop stops when the signature is unchanged. The large-star
     edge set is read twice inside a round (the small-star mins and
@@ -813,12 +834,16 @@ def _star_contraction_cc(spark: SparkSession, canon: DataFrame) -> DataFrame:
         )
         return small.distinct()
 
-    # round 0's checkpoint is the probe: a small graph is labeled on
-    # the driver, a larger one enters the loop already materialized
-    round0 = canon.localCheckpoint(eager=False)
-    small = session.fetch_if_small(round0, session.DRIVER_GRAPH_MAX_EDGES)
+    # a small graph is labeled on the driver, a larger one enters the
+    # loop already materialized (round 0 is the held frame)
+    small, round0 = session.fetch_or_hold(
+        canon,
+        session.DRIVER_GRAPH_MAX_EDGES,
+        bound,
+        hold or (lambda canon: canon.localCheckpoint(eager=False)),
+        functools.partial(release_checkpoints, spark),
+    )
     if small is not None:
-        release_checkpoints(spark, round0)
         return _min_labels_on_driver(spark, small)
     canon, _ = checkpoint_loop(
         spark, round0, _star_round, _signature, until=lambda prev, sig: sig == prev
@@ -1926,12 +1951,17 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the exact blocked pair-matmul — both halves are the
     components already proven at scale. The cosine pairs are already
     distinct with vec_a < vec_b, so they feed the loop as
-    (u, v) = (vec_b, vec_a) with no symmetric edge frame; the probe
-    of the loop's first checkpoint runs the pair grid once, and a
-    small pair set is labeled on the driver."""
+    (u, v) = (vec_b, vec_a) with no symmetric edge frame. n vectors
+    have at most C(n, 2) pairs (a footer count): within
+    session.DRIVER_GRAPH_MAX_EDGES the pair grid runs once as the
+    fetch of the lazy pairs, which are labeled on the driver; above
+    it the probe of the loop's first checkpoint runs the grid once."""
+    from distributed_mapreduce_server_spark.catalog import table_row_count
+
     pairs = _embedding_cosine_pairs(spark, sf_dir)
     canon = pairs.select(F.col("vec_b").alias("u"), F.col("vec_a").alias("v"))
-    labels = _star_contraction_cc(spark, canon)
+    bound = math.comb(table_row_count(sf_dir, "embeddings"), 2)
+    labels = _star_contraction_cc(spark, canon, bound)
     return labels.withColumnsRenamed({"doc_id": "vec_id"}).orderBy("vec_id")
 
 

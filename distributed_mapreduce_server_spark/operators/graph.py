@@ -7,9 +7,10 @@ connected components (large-star/small-star contraction); this module
 adds the importance/shape queries a user would run next:
 
 - q_pagerank: damped PageRank, fixed PR_ITERATIONS rounds:
-  contribution = pr/out_deg flows along each edge. The persisted
-  edge frame is probed once (session.fetch_if_small): a graph of at
+  contribution = pr/out_deg flows along each edge. A graph of at
   most DRIVER_GRAPH_MAX_EDGES edges comes back as one Arrow table
+  (session.fetch_or_hold: fetched lazily when the lineitem footer
+  bounds it within the cap, else probed off the persisted edge frame)
   and iterates on the driver in numpy — a few thousand edges do not
   pay for a Spark job per round (McSherry et al., "Scalability! But
   at what COST?", HotOS 2015). A larger one runs the classic
@@ -42,7 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_server_spark import session
-from distributed_mapreduce_server_spark.catalog import load_tables
+from distributed_mapreduce_server_spark.catalog import load_tables, table_row_count
 from distributed_mapreduce_server_spark.functions import fround, fround_np
 from distributed_mapreduce_server_spark.session import (
     GRAPH_EDGE_ROWS_PER_TASK,
@@ -91,7 +92,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     term needed). A graph of at most session.DRIVER_GRAPH_MAX_EDGES
     edges is fetched once and iterated on the driver
     (:func:`_pagerank_on_driver`); a larger one runs the distributed
-    round loop below over the same persisted edge frame."""
+    round loop below over the persisted edge frame
+    (:func:`_edges_with_outdeg` decides which)."""
     edges, edeg = _edges_with_outdeg(spark, sf_dir)
     if edges is not None:
         return _labeled(_pagerank_on_driver(spark, edges)).orderBy("node_id")
@@ -145,19 +147,27 @@ def _edges_with_outdeg(
     spark: SparkSession, sf_dir: str
 ) -> tuple[pa.Table | None, DataFrame | None]:
     """The purchase graph for both PageRank variants, as exactly one
-    of ``(edges, edeg)``. The symmetric edge frame is persisted and
-    probed with session.fetch_if_small: a small graph comes back as
-    its ``(src, dst)`` Arrow table. Otherwise the persisted frame
-    (already materialized by the probe, so the degree count and the
-    join below do not rebuild lineitem ⋈ orders) feeds the persisted,
+    of ``(edges, edeg)``. A small graph comes back as its ``(src,
+    dst)`` Arrow table through session.fetch_or_hold: a line item
+    joins at most one order (o_orderkey is its key) and so gives at
+    most two directed edges, and when 2·|lineitem| (a footer count,
+    no job) is within DRIVER_GRAPH_MAX_EDGES the lazy edge frame is
+    fetched in one query. Otherwise the edge frame is persisted and
+    probed; past the cap the persisted frame (already materialized by
+    the probe, so the degree count and the join below do not rebuild
+    lineitem ⋈ orders) feeds the persisted,
     src-partitioned, out-degree-annotated edge frame the distributed
     rounds loop over (see q_pagerank's notes on why the
     pre-partitioned persist makes each round shuffle only the
     node-sized rank frame); the caller unpersists it."""
-    edges = _bipartite_edges(spark, sf_dir).persist()
-    small = session.fetch_if_small(edges, session.DRIVER_GRAPH_MAX_EDGES)
+    small, edges = session.fetch_or_hold(
+        _bipartite_edges(spark, sf_dir),
+        session.DRIVER_GRAPH_MAX_EDGES,
+        2 * table_row_count(sf_dir, "lineitem"),
+        DataFrame.persist,
+        DataFrame.unpersist,
+    )
     if small is not None:
-        edges.unpersist()
         return small, None
     deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     edeg = edges.join(deg, "src").repartition(F.col("src")).persist()

@@ -37,6 +37,14 @@ def get_spark(app_name: str = "dmrs-spark", shuffle_partitions: int | None = Non
       (q_pagerank 56, dedup_clusters_bigstar 76-81) through Janino and
       the JIT; with this cache a warm pass compiles 0-6. The conf is
       static (read once per JVM), hence set here.
+    - Call-site capture off (``spark.python.sql.dataFrameDebugging.enabled``):
+      PySpark wraps every Column method and ``F.col`` to record the
+      caller's Python ``file:line`` for error messages, at four py4j
+      round trips and a stack walk per call. A warm build of
+      q5_local_supplier took 357 round trips with it on and 117 off
+      (dedup_clusters_bigstar 860 and 420). Errors keep Spark's own
+      context (the SQL fragment, the plan, the JVM stack); only the
+      Python ``file:line`` of the offending Column call is lost.
     """
     # Python workers (Pandas UDF / mapInPandas) import this package by
     # name from pickled closures; they read PYTHONPATH from the
@@ -67,6 +75,7 @@ def get_spark(app_name: str = "dmrs-spark", shuffle_partitions: int | None = Non
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         # local[N, 2]: allow one task retry, like a real cluster
@@ -239,7 +248,7 @@ def release_checkpoints(spark: SparkSession, *frames) -> int:
 # driver RSS (Python + JVM) 2.1-2.2 vs 4.4-4.7 GB and 2.7-2.8 vs
 # 7.6-7.9 GB, of which the numpy kernels hold 0.28 GB (PageRank) and
 # 0.56 GB (components) of Python heap. Tests set it to 0 to force the
-# distributed path.
+# distributed path (on any input whose footer bound is above 0).
 DRIVER_GRAPH_MAX_EDGES = 1 << 22
 
 
@@ -247,11 +256,38 @@ def fetch_if_small(frame, max_rows: int):
     """``frame``'s rows as one Arrow table if it has at most
     ``max_rows`` of them, else None: the one probe of every
     driver-or-Spark switch, each with its named cap. One action is both
-    the size check and the fetch (``limit(max_rows + 1).toArrow()``), so
-    probe a frame the caller's distributed path reads next (a persisted
-    or checkpointed one): a failed probe then leaves it materialized."""
+    the size check and the fetch (``limit(max_rows + 1).toArrow()``).
+    Where no job-free bound on the frame's rows fits the cap, probe a
+    frame the caller's distributed path reads next (a persisted or
+    checkpointed one): a failed probe then leaves it materialized.
+    Where one does, :func:`fetch_or_hold` skips the probe."""
     table = frame.limit(max_rows + 1).toArrow()
     return table if table.num_rows <= max_rows else None
+
+
+def fetch_or_hold(frame, max_rows: int, bound: int, hold, release):
+    """Where a driver-or-Spark switch runs: ``(table, None)`` with
+    ``frame``'s rows as one Arrow table if it has at most ``max_rows``
+    of them, else ``(None, held)``.
+
+    ``bound`` is an upper bound on the frame's rows that costs no Spark
+    job (parquet footer row counts, catalog.table_row_count). Within
+    ``max_rows`` the lazy frame is fetched whole in one query: nothing
+    is persisted, counted or checkpointed. Otherwise ``hold(frame)``
+    materializes it for the Spark path (a persist, a checkpoint) and
+    :func:`fetch_if_small` probes the held frame: a small one comes
+    back as its table and is ``release``d, a large one is returned
+    held for the caller's Spark path, which releases it. A bound of 0
+    takes the first branch at every cap, a cap of 0 the second at
+    every positive bound."""
+    if bound <= max_rows:
+        return frame.toArrow(), None
+    held = hold(frame)
+    table = fetch_if_small(held, max_rows)
+    if table is None:
+        return None, held
+    release(held)
+    return table, None
 
 
 def checkpoint_loop(

@@ -15,9 +15,11 @@ explain() shows only the post-localCheckpoint Scan ExistingRDD, but
 the internal jobs' executed plans land here, Exchange counts included.
 
 Each timed run also reports the Spark jobs it submitted (counted from
-the status store by job group) and the classes codegen compiled during
-it (the JVM's CodegenMetrics compile counter), so per-run action cuts
-and codegen-cache thrash show in the printed line and the JSON.
+the status store by job group), the classes codegen compiled during
+it (the JVM's CodegenMetrics compile counter) and the py4j round trips
+the driver made to the JVM (``py4j``), so per-run action cuts,
+codegen-cache thrash and the driver's per-call round-trip cost show in
+the printed line and the JSON.
 
 Usage:
     python scripts/opt_measure.py [--tag before|after] [--sf DIR] name...
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import gc
 import io
 import json
 import os
@@ -53,6 +56,23 @@ def job_count(spark, group: str) -> int:
     the listener bus (job events arrive asynchronously)."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
     return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def count_round_trips(spark) -> list[int]:
+    """Count every py4j command the driver sends to the JVM from now
+    on, in the returned one-element list. Garbage-collection detaches
+    (``m\nd``) are left out: they follow Python's collector, not the
+    code, so what remains repeats exactly from run to run."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, n = client.send_command, [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            n[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    return n
 
 
 def main() -> None:
@@ -80,6 +100,7 @@ def main() -> None:
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     compile_count = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
+    round_trips = count_round_trips(spark)
     queries = registry.all_queries()
     out: dict[str, dict] = {}
     for name in args.names:
@@ -90,17 +111,20 @@ def main() -> None:
             fn(spark, warm).write.format("noop").mode("overwrite").save()
             spark.catalog.clearCache()
             retire_persistent_rdds(spark)
-        samples, jobs, compiles = [], [], []
+        samples, jobs, compiles, py4j = [], [], [], []
         for i in range(args.runs):
             spark.catalog.clearCache()
             retire_persistent_rdds(spark)
             group = f"opt:{name}:{i}"
             sc.setJobGroup(group, group)
             compiled0 = compile_count()
+            gc.collect()
+            round_trips[0] = 0
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
+            py4j.append(round_trips[0])
             compiles.append(compile_count() - compiled0)
             sc._jsc.clearJobGroup()
             jobs.append(job_count(spark, group))
@@ -141,9 +165,16 @@ def main() -> None:
                             f" build above) ===\n"
                         )
                         fh.write(p)
-        out[name] = {"median": med, "samples": samples, "jobs": jobs, "compiles": compiles}
+        out[name] = {
+            "median": med,
+            "samples": samples,
+            "jobs": jobs,
+            "compiles": compiles,
+            "py4j": py4j,
+        }
         print(
-            f"{name}: median={med}s samples={samples} jobs={jobs} compiles={compiles}",
+            f"{name}: median={med}s samples={samples} jobs={jobs} compiles={compiles}"
+            f" py4j={py4j}",
             flush=True,
         )
     print(json.dumps(out))

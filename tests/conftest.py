@@ -71,3 +71,21 @@ def sf_one_edge(tmp_path_factory):
     li = li.filter(pc.equal(li["l_orderkey"], key)).slice(0, 1)
     pq.write_table(li, str(out / "lineitem.parquet"))
     return str(out)
+
+
+@pytest.fixture
+def probes(monkeypatch):
+    """Whether each session.fetch_if_small call in the test fetched
+    (True) or found its frame over the cap (False)."""
+    from distributed_mapreduce_server_spark import session
+
+    got = []
+    probe = session.fetch_if_small
+
+    def spy(*args):
+        table = probe(*args)
+        got.append(table is not None)
+        return table
+
+    monkeypatch.setattr(session, "fetch_if_small", spy)
+    return got

@@ -4,9 +4,12 @@ run audits every plan each key executed (tests/plan_audit.py)."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from distributed_mapreduce_server_spark import registry, session
+from distributed_mapreduce_server_spark.catalog import table_row_count
 from tests.oracle_utils import compare, duckdb_conn
 from tests.plan_audit import BOUNDED_FRAME_WINDOWS, NESTED_LOOP, audit, executed_plans
 
@@ -144,20 +147,50 @@ def _matches_oracle(spark, sf, name):
     assert not problems, f"{name} on {sf}: " + "; ".join(problems)
 
 
-@pytest.mark.parametrize("name", DRIVER_GRAPH_KEYS)
-def test_graph_keys_match_oracle_distributed(name, spark, sf_smoke, monkeypatch):
-    """The distributed loops behind the driver-path graph keys: with
-    the driver cap at 0 every graph runs its Spark rounds."""
-    monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
-    _matches_oracle(spark, sf_smoke, name)
+def _edge_bound(name, sf):
+    """The footer bound each driver-graph key sizes its switch by: two
+    directed edges per line item, C(n, 2) pairs of n documents or
+    vectors."""
+    if name in PAGERANK_KEYS:
+        return 2 * table_row_count(sf, "lineitem")
+    table = "embeddings" if name == "dedup_semantic_clusters" else "documents"
+    return math.comb(table_row_count(sf, table), 2)
+
+
+@pytest.mark.parametrize(
+    "name, path",
+    [
+        # the Spark-round cases keep their bare key name as the id
+        pytest.param(name, path, id=name if path == "distributed" else f"{name}-{path}")
+        for path in ("footer", "probe", "distributed")
+        for name in DRIVER_GRAPH_KEYS
+    ],
+)
+def test_graph_keys_match_oracle_distributed(name, path, spark, sf_smoke, monkeypatch, probes):
+    """Every path of the driver-or-Spark switch behind the graph keys:
+    at the default cap the footer bound fits and the lazy edges are
+    fetched with nothing held; with the cap between the edge count and
+    the bound the held edges are probed and come back; at cap 0 every
+    graph runs its Spark rounds."""
+    bound = _edge_bound(name, sf_smoke)
+    if path != "footer":
+        monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", bound - 1 if path == "probe" else 0)
+    with executed_plans(spark) as plans:
+        _matches_oracle(spark, sf_smoke, name)
+    assert probes == {"footer": [], "probe": [True], "distributed": [False]}[path]
+    if path == "footer":
+        held = [m for m in ("InMemoryRelation", "Scan ExistingRDD") if any(m in p for p in plans)]
+        assert not held, f"{name} footer path executed {held}"
 
 
 @pytest.mark.parametrize("distributed", [False, True], ids=["driver", "distributed"])
 @pytest.mark.parametrize("name", PAGERANK_KEYS)
-def test_pagerank_matches_oracle_on_one_edge(name, distributed, spark, sf_one_edge, monkeypatch):
+def test_pagerank_matches_oracle_on_one_edge(name, distributed, spark, sf_one_edge, monkeypatch, probes):
     if distributed:
         monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
     _matches_oracle(spark, sf_one_edge, name)
+    # a bound of 2 fits the default cap; cap 0 still reaches the rounds
+    assert probes == ([False] if distributed else [])
 
 
 def test_pca_project_on_empty_tables_returns_no_rows(spark, sf_empty):

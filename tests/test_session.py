@@ -1,8 +1,10 @@
 """Session-level behaviour: a long-lived session must keep warm queries
-compiled, and the one bounded driver fetch must cut at its cap."""
+compiled, a warm build must not pay py4j round trips for call-site
+capture, and the one bounded driver fetch must cut at its cap."""
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import subprocess
@@ -11,7 +13,7 @@ import sys
 import pyarrow as pa
 import pytest
 
-from distributed_mapreduce_server_spark import session
+from distributed_mapreduce_server_spark import registry, session
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -56,6 +58,30 @@ def test_warm_rerun_compiles_almost_nothing(sf_smoke):
     cold, warm = json.loads(proc.stdout.strip().splitlines()[-1])
     assert cold > 50, (cold, warm)
     assert warm <= 0.1 * cold, (cold, warm)
+
+
+def test_warm_build_makes_few_py4j_round_trips(spark, sf_smoke, monkeypatch):
+    """One warm build of q5_local_supplier (no action) sends at most
+    160 py4j commands to the JVM. With PySpark's call-site capture on,
+    every Column call adds four (the active session, a conf read, the
+    origin's set and clear): 357 commands, against 117 with it off as
+    get_spark sets it. Garbage-collection detaches are not counted:
+    they follow Python's collector, and the rest repeats exactly."""
+    build = registry.all_queries()["q5_local_supplier"]
+    build(spark, sf_smoke)
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    gc.collect()
+    monkeypatch.setattr(client, "send_command", counting)
+    build(spark, sf_smoke)
+    monkeypatch.undo()
+    trips = sum(not c.startswith("m\nd\n") for c in sent)
+    assert trips <= 160, trips
 
 
 @pytest.mark.parametrize("n_rows", [0, 3, 4], ids=["empty", "at_cap", "over_cap"])

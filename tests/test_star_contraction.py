@@ -1,9 +1,11 @@
 """Connected components on synthetic graphs the near-dup corpus never
 produces: long paths, hubs, disjoint components and inputs that are
 already stars. Each is checked against a plain-Python union-find, on
-both paths of _star_contraction_cc: the driver's array labelling
-(every graph here is small) and the large-star / small-star loop
-(``session.DRIVER_GRAPH_MAX_EDGES`` set to 0)."""
+every path of _star_contraction_cc: the driver's array labelling
+(every graph here is small) of the lazy edges when the bound fits the
+cap and of the held, probed edges when only the edges do, and the
+large-star / small-star loop (``session.DRIVER_GRAPH_MAX_EDGES`` set
+to 0)."""
 
 from __future__ import annotations
 
@@ -62,20 +64,23 @@ GRAPHS = {
 
 
 @pytest.mark.parametrize(
-    "name, distributed",
+    "name, path",
     [
-        # the driver-path cases keep their bare graph name as the id
-        pytest.param(name, distributed, id=f"{name}-distributed" if distributed else name)
-        for distributed in (False, True)
+        # the footer-path cases keep their bare graph name as the id
+        pytest.param(name, path, id=name if path == "footer" else f"{name}-{path}")
+        for path in ("footer", "probe", "distributed")
         for name in sorted(GRAPHS)
     ],
 )
-def test_star_contraction_matches_union_find(spark, monkeypatch, name, distributed):
-    if distributed:
-        monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", 0)
+def test_star_contraction_matches_union_find(spark, monkeypatch, probes, name, path):
     edges = GRAPHS[name]
-    canon = spark.createDataFrame(
-        sorted({(max(a, b), min(a, b)) for a, b in edges}), "u long, v long"
-    )
-    got = {(r["doc_id"], r["cluster_id"]) for r in _star_contraction_cc(spark, canon).collect()}
+    rows = sorted({(max(a, b), min(a, b)) for a, b in edges})
+    canon = spark.createDataFrame(rows, "u long, v long")
+    # footer: the bound is the edge count; probe: the cap holds the
+    # edges but not the bound; distributed: cap 0
+    bound = len(rows) + (path == "probe")
+    if path != "footer":
+        monkeypatch.setattr(session, "DRIVER_GRAPH_MAX_EDGES", len(rows) if path == "probe" else 0)
+    got = {(r["doc_id"], r["cluster_id"]) for r in _star_contraction_cc(spark, canon, bound).collect()}
     assert got == _union_find_labels(edges)
+    assert probes == {"footer": [], "probe": [True], "distributed": [False]}[path]
